@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR `SPARK_GRAFT_BENCH_REPS` times (default 3) and
@@ -69,9 +70,11 @@ object Bench {
       // happens to run first (observed to distort a first query by
       // 3-6 s). Timed numbers below are steady-state at the target SF.
       if (new java.io.File(warmDir).isDirectory)
-        group.foreach { case (_, fn) =>
+        group.foreach { case (name, fn) =>
           try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] warm-up of $name failed: ${e.getMessage}")
+          }
         }
       val rs = group.map { case (name, fn) =>
         val times = (1 to reps).map { _ =>
@@ -82,7 +85,7 @@ object Bench {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).write.mode("overwrite").format("noop").save()
                 (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             // failures are machine-distinguishable (-1), not fake fast times
             -1.0
@@ -144,7 +147,7 @@ object Bench {
       try {
         val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
         try w.println(line) finally w.close()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] could not write $p: ${e.getMessage}")
       }
     }

@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1): for each named
   * query, run once as warm-up, then run timed with a stage listener and
@@ -41,12 +42,12 @@ object Profile {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach { name =>
+    def profile(name: String): Unit = {
       val fn = SparkEntry.queries(name)
       // warm-up at the smallest SF so codegen/broadcast init is off-ledger
       if (new java.io.File(warmDir).isDirectory)
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           // r20 ADVICE: a query broken at small scale should say so
           // here, not surface later as confusing timed numbers (and a
           // fatal error — OOM etc. — must not be swallowed at all)
@@ -82,7 +83,7 @@ object Profile {
         }
       }
       println(s"==== $name ====")
-      (1 to reps).foreach { r =>
+      try (1 to reps).foreach { r =>
         // listener active for rep 2 ONLY (r20 ADVICE: with reps > 2 it
         // used to aggregate stages from reps 2..N, contradicting the
         // per-stage table's "one rep" doc)
@@ -94,8 +95,7 @@ object Profile {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"  rep$r%d wall: $dt%8.3f s")
-      }
-      spark.sparkContext.removeSparkListener(listener)
+      } finally spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(200) // let stage-completed events drain
       println(
         "  stageId     ms tasks  shufRdMB  shufWrMB     inRec    wrRec  spillMB  name")
@@ -103,6 +103,14 @@ object Profile {
         println(f"  ${s.id}%7d ${s.ms}%6d ${s.tasks}%5d ${s.shufReadMB}%9.2f ${s.shufWriteMB}%9.2f ${s.inRec}%9d ${s.outRows}%8d ${s.spillMB}%8.1f  ${s.nm}")
       }
       stages.clear()
+    }
+    // One query's failure prints and the sweep moves on to the next;
+    // a fatal error (OOM etc.) still ends the run.
+    names.foreach { name =>
+      try profile(name)
+      catch { case NonFatal(e) =>
+        println(s"[profile] $name failed: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

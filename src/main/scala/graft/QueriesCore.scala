@@ -208,7 +208,7 @@ private[graft] object QueriesCore {
           col("o_orderpriority").asc_nulls_first)
     },
     "pivot_status" -> { (s, dir) =>
-      // money-scaled sums (SparkEntry.scala moneySum pattern) so the wide
+      // money-scaled sums (the Ops.scaledSum pattern) so the wide
       // cells are bit-identical across engines
       val money = (sum(round(col("o_totalprice") * 1e2, 0).cast("long"))
         .cast("long") / 1e2)

@@ -38,6 +38,30 @@ private[graft] object QueriesTemporal {
         (col("__gmax") - col("__mxu") < lit(172800L)).as("cen"))
   }
 
+  /** The events fixture's purchase and signup rows: the two sides of
+    * the temporal-join rows (`asof_join*`, `band_join`). */
+  private def purchasesAndSignups(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val e = table(s, dir, "events")
+    (e.filter(col("event_type") === "purchase"),
+      e.filter(col("event_type") === "signup"))
+  }
+
+  /** The three as-of rows, which differ only in direction and
+    * tolerance: each purchase attaches one signup's id and value. */
+  private def asOfPurchases(s: SparkSession, dir: String,
+      direction: String = "backward",
+      toleranceSeconds: Option[Long] = None): DataFrame = {
+    val (purchases, signups) = purchasesAndSignups(s, dir)
+    TemporalOps.asOfJoin(signups.select("event_id", "user_id", "ts", "value"),
+      "user_id", "ts", "ts", rightVals = Seq("event_id", "value"),
+      rightTieBreak = "event_id", direction = direction,
+      toleranceSeconds = toleranceSeconds)(
+      purchases.select("event_id", "user_id", "ts"))
+      .select("event_id", "user_id", "asof_event_id", "asof_value")
+      .orderBy("user_id", "event_id")
+  }
+
   /** The hazard_gate fixture's stored reference hazard — ONE Scala
     * value feeding both the Spark query and the DuckDB mirror's
     * interpolated literals, so the two cannot drift. Rates sit near
@@ -159,18 +183,7 @@ private[graft] object QueriesTemporal {
         k = 20, tieBreak = Seq("event_id"))(table(s, dir, "events"))
     },
     // ---- temporal joins ----------------------------------------------------
-    "asof_join" -> { (s, dir) =>
-      val e = table(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = e.filter(col("event_type") === "signup")
-        .select("event_id", "user_id", "ts", "value")
-      TemporalOps.asOfJoin(signups, "user_id", "ts", "ts",
-        rightVals = Seq("event_id", "value"), rightTieBreak = "event_id")(
-        purchases)
-        .select("event_id", "user_id", "asof_event_id", "asof_value")
-        .orderBy("user_id", "event_id")
-    },
+    "asof_join" -> { (s, dir) => asOfPurchases(s, dir) },
     "event_funnel" -> { (s, dir) =>
       // sequential conversion: view -> click -> purchase, first
       // qualifying occurrence per user, strictly-after ordering
@@ -186,30 +199,13 @@ private[graft] object QueriesTemporal {
       // nearest as-of: each purchase attaches whichever signup sits
       // closer in time (either direction), equidistant ties backward —
       // both directional passes inside ONE key shuffle
-      val e = table(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = e.filter(col("event_type") === "signup")
-        .select("event_id", "user_id", "ts", "value")
-      TemporalOps.asOfJoin(signups, "user_id", "ts", "ts",
-        rightVals = Seq("event_id", "value"), rightTieBreak = "event_id",
-        direction = "nearest")(purchases)
-        .select("event_id", "user_id", "asof_event_id", "asof_value")
-        .orderBy("user_id", "event_id")
+      asOfPurchases(s, dir, direction = "nearest")
     },
     "asof_join_fwd" -> { (s, dir) =>
       // forward as-of with tolerance: each purchase attaches the NEXT
       // signup within 24h, or NULLs when the nearest one is too far
-      val e = table(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = e.filter(col("event_type") === "signup")
-        .select("event_id", "user_id", "ts", "value")
-      TemporalOps.asOfJoin(signups, "user_id", "ts", "ts",
-        rightVals = Seq("event_id", "value"), rightTieBreak = "event_id",
-        direction = "forward", toleranceSeconds = Some(86400L))(purchases)
-        .select("event_id", "user_id", "asof_event_id", "asof_value")
-        .orderBy("user_id", "event_id")
+      asOfPurchases(s, dir, direction = "forward",
+        toleranceSeconds = Some(86400L))
     },
     "scd2_history" -> { (s, dir) =>
       // SCD2 dimension build: each user's event_type change stream
@@ -346,13 +342,10 @@ private[graft] object QueriesTemporal {
         .orderBy("user_id", "bucket_ts")
     },
     "band_join" -> { (s, dir) =>
-      val e = table(s, dir, "events")
-      val signups = e.filter(col("event_type") === "signup")
-        .select("event_id", "user_id", "ts")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      TemporalOps.bandJoin(purchases, "user_id", "ts", "ts",
-        widthSeconds = 3600)(signups)
+      val (purchases, signups) = purchasesAndSignups(s, dir)
+      TemporalOps.bandJoin(purchases.select("event_id", "user_id", "ts"),
+        "user_id", "ts", "ts", widthSeconds = 3600)(
+        signups.select("event_id", "user_id", "ts"))
         .select(col("l_event_id").as("signup_id"),
           col("r_event_id").as("purchase_id"),
           col("l_user_id").as("user_id"), col("delta_us"))

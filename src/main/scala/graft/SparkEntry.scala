@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Ops
 import graft.probes.Probes
+import scala.util.control.NonFatal
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -43,7 +44,7 @@ object SparkEntry {
     val df =
       try spark.read.parquet(s"$dir/$name.parquet")
       catch {
-        case e: Throwable
+        case NonFatal(e)
             if spark.conf.get(NanosAsLongKey, "false") != "true" &&
               String.valueOf(e.getMessage).contains("NANOS") =>
           throw new IllegalStateException(
@@ -67,12 +68,6 @@ object SparkEntry {
       case _ => df
     }
   }
-
-  /** Exact, order-insensitive sum of a fixed-point-decimal double column
-    * — see [[Ops.scaledSum]]; matches oracle pattern
-    * `CAST(SUM(CAST(round(x*1eS,0) AS BIGINT)) AS BIGINT)/1eS`. */
-  private def moneySum(c: Column, scale: Double): Column =
-    Ops.scaledSum(c, scale)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference README's flagship: source -> aggregate -> output. */
@@ -104,15 +99,17 @@ object SparkEntry {
         .orderBy("l_returnflag")
     },
     "aggregate_money" -> { (s, dir) =>
+      // exact, order-insensitive money sums; the oracle mirrors them as
+      // `CAST(SUM(CAST(round(x*1eS,0) AS BIGINT)) AS BIGINT)/1eS`
       val l = table(s, dir, "lineitem")
       l.groupBy("l_returnflag", "l_linestatus").agg(
-          moneySum(col("l_extendedprice"), 1e2).as("base_price_sum"),
-          moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1e4)
-            .as("disc_price_sum"),
-          moneySum(
+          Ops.scaledSum(col("l_extendedprice"), 1e2).as("base_price_sum"),
+          Ops.scaledSum(col("l_extendedprice") * (lit(1) - col("l_discount")),
+            1e4).as("disc_price_sum"),
+          Ops.scaledSum(
             col("l_extendedprice") * (lit(1) - col("l_discount")) *
               (lit(1) + col("l_tax")), 1e6).as("charge_sum"),
-          (moneySum(col("l_extendedprice"), 1e2) / count(lit(1)))
+          (Ops.scaledSum(col("l_extendedprice"), 1e2) / count(lit(1)))
             .as("avg_price"),
           count(lit(1)).as("record_count"))
         .orderBy("l_returnflag", "l_linestatus")

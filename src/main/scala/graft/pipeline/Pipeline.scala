@@ -1,10 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
-import graft.ext.{Dedup, TextOps}
-import graft.ops.{Ops, TemporalOps}
+import graft.ops.Ops
 import graft.probes.Probes
 
 /** Thin fluent façade over the operator catalog, for API parity with the
@@ -12,1018 +10,56 @@ import graft.probes.Probes
   * node graph executed by an engine). Here the "graph" IS the Catalyst
   * logical plan that DataFrame composition builds, so this class carries
   * zero execution logic: each call wraps the underlying `DataFrame` in a
-  * new Pipeline. `fork`/`retain` covers the reference engine's
-  * materialize-on-fan-out behavior via persist().
+  * new Pipeline. Only the reference's own verbs are named methods; every
+  * other catalog operator is already a `DataFrame => DataFrame` and joins
+  * the chain through `via` (e.g. `.via(Dedup.byFingerprint("text", "id"))`),
+  * and a column expression through `derive`. `retain` covers the reference
+  * engine's materialize-on-fan-out behavior via persist().
   */
 final case class Pipeline(df: DataFrame) {
-  private def >>(f: DataFrame => DataFrame): Pipeline = Pipeline(f(df))
+  /** Apply any catalog operator: `Pipeline(df).via(f).result` is `f(df)`. */
+  def via(f: DataFrame => DataFrame): Pipeline = Pipeline(f(df))
 
   def fieldFilter(keep: Seq[String] = Nil, drop: Seq[String] = Nil,
       rename: Map[String, String] = Map.empty): Pipeline =
-    >>(Ops.fieldFilter(keep, drop, rename))
-  def derive(name: String, expr: Column): Pipeline = >>(Ops.derive(name, expr))
+    via(Ops.fieldFilter(keep, drop, rename))
+  def derive(name: String, expr: Column): Pipeline = via(Ops.derive(name, expr))
   def filterByValue(field: String, value: Any, discard: Boolean = false): Pipeline =
-    >>(Ops.filterByValue(field, value, discard))
+    via(Ops.filterByValue(field, value, discard))
   def filterBySet(field: String, values: Seq[Any], discard: Boolean = false): Pipeline =
-    >>(Ops.filterBySet(field, values, discard))
+    via(Ops.filterBySet(field, values, discard))
   def filterByRange(field: String, low: Any, high: Any, discard: Boolean = false): Pipeline =
-    >>(Ops.filterByRange(field, low, high, discard))
-  def filterNotEmpty(field: String): Pipeline = >>(Ops.filterNotEmpty(field))
-  def filterEmpty(field: String): Pipeline = >>(Ops.filterEmpty(field))
+    via(Ops.filterByRange(field, low, high, discard))
+  def filterNotEmpty(field: String): Pipeline = via(Ops.filterNotEmpty(field))
+  def filterEmpty(field: String): Pipeline = via(Ops.filterEmpty(field))
   def joinDetails(detail: DataFrame, masterKey: String, detailKey: String,
       joinType: String = "left_outer", broadcastDetail: Boolean = true): Pipeline =
-    >>(Ops.joinDetails(detail, masterKey, detailKey, joinType, broadcastDetail))
+    via(Ops.joinDetails(detail, masterKey, detailKey, joinType, broadcastDetail))
   def aggregate(keys: Seq[String], measures: Seq[(String, String)],
       includeCount: Boolean = true): Pipeline =
-    >>(Ops.aggregate(keys, measures, includeCount))
-  def distinct(keys: Seq[String] = Nil): Pipeline = >>(Ops.distinct(keys))
-  def sort(keys: Seq[(String, Boolean)]): Pipeline = >>(Ops.sort(keys))
+    via(Ops.aggregate(keys, measures, includeCount))
+  def distinct(keys: Seq[String] = Nil): Pipeline = via(Ops.distinct(keys))
+  def sort(keys: Seq[(String, Boolean)]): Pipeline = via(Ops.sort(keys))
   def sample(n: Long, mode: String = "first", fraction: Double = 0.1): Pipeline =
-    >>(Ops.sample(n, mode, fraction = fraction))
+    via(Ops.sample(n, mode, fraction = fraction))
   def append(others: DataFrame*): Pipeline = Pipeline(Ops.append(df +: others))
   def splitDate(field: String, parts: Seq[String] = Seq("year", "month", "day")): Pipeline =
-    >>(Ops.splitDate(field, parts))
-  def stringStrip(fields: String*): Pipeline = >>(Ops.stringStrip(fields))
+    via(Ops.splitDate(field, parts))
+  def stringStrip(fields: String*): Pipeline = via(Ops.stringStrip(fields))
   def textSubstitute(field: String, subs: Seq[(String, String)]): Pipeline =
-    >>(Ops.textSubstitute(field, subs))
-  def emptyToMissing(fields: String*): Pipeline = >>(Ops.emptyToMissing(fields))
+    via(Ops.textSubstitute(field, subs))
+  def emptyToMissing(fields: String*): Pipeline = via(Ops.emptyToMissing(fields))
   def stringToDate(field: String, format: String): Pipeline =
-    >>(Ops.stringToDate(field, format))
+    via(Ops.stringToDate(field, format))
   def threshold(field: String, low: Double, high: Double): Pipeline =
-    >>(Ops.threshold(field, low, high))
-  def quotaSample(groupField: String, keyField: String, n: Int,
-      salt: String = ""): Pipeline =
-    >>(Ops.quotaSample(groupField, keyField, n, salt))
-  def sampleHashTopN(field: String, n: Int, salt: String = ""): Pipeline =
-    >>(Ops.sampleHashTopN(field, n, salt))
-  def sampleHash(field: String, fraction: Double, salt: String = ""): Pipeline =
-    >>(Ops.sampleHash(field, fraction, salt))
-  def intersect(other: DataFrame): Pipeline = >>(Ops.intersect(other))
-  def except(other: DataFrame): Pipeline = >>(Ops.except(other))
-  def aggregateRollup(keys: Seq[String], measures: Seq[(String, String)]): Pipeline =
-    >>(Ops.aggregateRollup(keys, measures))
-  def pivot(groupKeys: Seq[String], pivotField: String, values: Seq[String],
-      agg: Column, suffix: String = ""): Pipeline =
-    >>(Ops.pivot(groupKeys, pivotField, values, agg, suffix))
-  def unpivot(ids: Seq[String], values: Seq[String],
-      varName: String = "variable", valName: String = "value"): Pipeline =
-    >>(Ops.unpivot(ids, values, varName, valName))
-  def percentileAgg(keys: Seq[String], field: String, ps: Seq[Double]): Pipeline =
-    >>(Ops.percentileAgg(keys, field, ps))
-  def winsorize(keys: Seq[String], field: String, pLow: Double,
-      pHigh: Double, outField: String = "", approx: Boolean = false,
-      accuracy: Int = 10000): Pipeline =
-    >>(Ops.winsorize(keys, field, pLow, pHigh, outField, approx, accuracy))
-  def equalFreqBins(keys: Seq[String], field: String, bins: Int,
-      target: String = "", approx: Boolean = false,
-      accuracy: Int = 10000): Pipeline =
-    >>(Ops.equalFreqBins(keys, field, bins, target, approx, accuracy))
-  def minMaxNormalize(keys: Seq[String], field: String,
-      target: String = ""): Pipeline =
-    >>(Ops.minMaxNormalize(keys, field, target))
-  def zscoreNormalize(keys: Seq[String], field: String,
-      target: String = ""): Pipeline =
-    >>(Ops.zscoreNormalize(keys, field, target))
-  def modeAgg(keys: Seq[String], field: String): Pipeline =
-    >>(Ops.modeAgg(keys, field))
-  def robustZScore(keys: Seq[String], field: String,
-      target: String = "", approx: Boolean = false,
-      accuracy: Int = 10000): Pipeline =
-    >>(Ops.robustZScore(keys, field, target, approx, accuracy))
-  def weightedSample(groupField: String, keyField: String,
-      weightField: String, n: Int, salt: String = ""): Pipeline =
-    >>(Ops.weightedSample(groupField, keyField, weightField, n, salt))
-  def balanceClasses(labelField: String, keyField: String,
-      salt: String = ""): Pipeline =
-    >>(Ops.balanceClasses(labelField, keyField, salt))
-  def duplicateSpanMask(idField: String, textField: String,
-      n: Int): Pipeline =
-    >>(TextOps.duplicateSpanMask(idField, textField, n))
-  def semiJoin(right: DataFrame, keys: Seq[String]): Pipeline =
-    >>(Ops.semiJoin(right, keys))
-  def antiJoin(right: DataFrame, keys: Seq[String]): Pipeline =
-    >>(Ops.antiJoin(right, keys))
-  def ngramCounts(textField: String, n: Int,
-      minCount: Long = 1L): Pipeline =
-    >>(TextOps.ngramCounts(textField, n, minCount))
-  /** Terminal: train quantized classifier weights from labeled text
-    * (feeds `linearTextScore` directly). */
-  def trainLinearWeights(textField: String, labelField: String,
-      vocabSize: Int = 1000, scale: Double = 100.0,
-      maxN: Int = 2): (Seq[(String, Long)], Double) =
-    TextOps.trainLinearWeights(textField, labelField, vocabSize,
-      scale, maxN)(df)
-  /** Terminal: train a BPE merge table from this frame's text (feeds
-    * `bpeTokenCount`/`bpeTokenize`/`truncateTokensBpe` directly). */
-  def learnBpeMerges(textField: String, numMerges: Int,
-      maxVocabWords: Int = 100000): Seq[(String, String)] =
-    TextOps.learnBpeMerges(textField, numMerges, maxVocabWords)(df)
-  /** `this` is the BEFORE snapshot; `after` the one diffed against. */
-  def snapshotDiff(after: DataFrame, keys: Seq[String],
-      compareCols: Seq[String]): Pipeline =
-    Pipeline(Ops.snapshotDiff(keys, compareCols)(df, after))
-  def fuzzyJoin(right: DataFrame, leftId: String, leftKey: String,
-      rightId: String, rightKey: String, minJw: Double,
-      maxBucket: Int = 64): Pipeline =
-    >>(Dedup.fuzzyJoin(right, leftId, leftKey, rightId, rightKey,
-      minJw, maxBucket))
-  def referentialIntegrity(fkCols: Seq[String], dim: DataFrame,
-      pkCols: Seq[String]): Pipeline =
-    >>(Probes.referentialIntegrity(fkCols, dim, pkCols))
-  /** `this` is the BEFORE snapshot; `after` the one drift is measured
-    * toward. */
-  def categoryDrift(field: String, after: DataFrame): Pipeline =
-    Pipeline(Probes.categoryDrift(field)(df, after))
-  def corrMatrix(keys: Seq[String], fields: Seq[String]): Pipeline =
-    >>(Ops.corrMatrix(keys, fields))
-  def histogram(keys: Seq[String], field: String, lo: Double, hi: Double,
-      nBins: Int): Pipeline =
-    >>(Ops.histogram(keys, field, lo, hi, nBins))
-  def columnProfile(columns: Seq[String]): Pipeline =
-    >>(Probes.columnProfile(columns))
-  def temporalSplit(tsField: String, cutoff: String,
-      embargoSeconds: Long = 0L): Pipeline =
-    >>(graft.ops.TemporalOps.temporalSplit(tsField, cutoff, embargoSeconds))
-  def pageRank(srcField: String, dstField: String, iterations: Int = 3,
-      damping: Double = 0.85): Pipeline =
-    >>(graft.ext.GraphOps.pageRank(srcField, dstField, iterations, damping))
-  def degreeStats(srcField: String, dstField: String): Pipeline =
-    >>(graft.ext.GraphOps.degreeStats(srcField, dstField))
-  def rendezvousShard(keyField: String, shards: Seq[String],
-      salt: String = "rv", outField: String = "shard"): Pipeline =
-    >>(_.withColumn(outField,
-      Ops.rendezvousShard(col(keyField), shards, salt)))
-  def shuffleRank(keyField: String, salt: String = "epoch0"): Pipeline =
-    >>(Ops.shuffleRank(keyField, salt))
-  def pivotAgg(keys: Seq[String], pivotField: String,
-      pivotValues: Seq[String], measure: String,
-      fn: String = "sum"): Pipeline =
-    >>(Ops.pivotAgg(keys, pivotField, pivotValues, measure, fn))
-  def aggregateState(keys: Seq[String],
-      measures: Seq[(String, String)]): Pipeline =
-    >>(Ops.aggregateState(keys, measures))
-  /** `this` is the stored state; `batch` the new state to fold in. */
-  def mergeAggregateStates(batch: DataFrame, keys: Seq[String],
-      measures: Seq[(String, String)]): Pipeline =
-    Pipeline(Ops.mergeAggregateStates(keys, measures)(df, batch))
-  def finalizeAggregate(keys: Seq[String],
-      measures: Seq[(String, String)]): Pipeline =
-    >>(Ops.finalizeAggregate(keys, measures))
-  def aggregateStateHll(keys: Seq[String], fields: Seq[String],
-      lgK: Int = 12): Pipeline =
-    >>(Ops.aggregateStateHll(keys, fields, lgK))
-  /** `this` is the stored sketch state; `batch` the new state to fold in. */
-  def mergeAggregateStatesHll(batch: DataFrame, keys: Seq[String],
-      fields: Seq[String]): Pipeline =
-    Pipeline(Ops.mergeAggregateStatesHll(keys, fields)(df, batch))
-  def finalizeAggregateHll(keys: Seq[String], fields: Seq[String]): Pipeline =
-    >>(Ops.finalizeAggregateHll(keys, fields))
-  def aggregateStateTheta(keys: Seq[String], fields: Seq[String],
-      nominalEntries: Int = 4096): Pipeline =
-    >>(Ops.aggregateStateTheta(keys, fields, nominalEntries))
-  /** `this` is the stored sketch state; `batch` the new state to fold in. */
-  def mergeAggregateStatesTheta(batch: DataFrame, keys: Seq[String],
-      fields: Seq[String], nominalEntries: Int = 4096): Pipeline =
-    Pipeline(Ops.mergeAggregateStatesTheta(keys, fields, nominalEntries)(
-      df, batch))
-  def finalizeAggregateTheta(keys: Seq[String],
-      fields: Seq[String]): Pipeline =
-    >>(Ops.finalizeAggregateTheta(keys, fields))
-  def aggregateStateKll(keys: Seq[String], fields: Seq[String],
-      k: Int = 200): Pipeline =
-    >>(Ops.aggregateStateKll(keys, fields, k))
-  /** `this` is the stored sketch state; `batch` the new state to fold in. */
-  def mergeAggregateStatesKll(batch: DataFrame, keys: Seq[String],
-      fields: Seq[String], k: Int = 200): Pipeline =
-    Pipeline(Ops.mergeAggregateStatesKll(keys, fields, k)(df, batch))
-  def finalizeAggregateKll(keys: Seq[String], fields: Seq[String],
-      ranks: Seq[Double]): Pipeline =
-    >>(Ops.finalizeAggregateKll(keys, fields, ranks))
-  def aggregateStateCms(keys: Seq[String], fields: Seq[String],
-      depth: Int = 5, width: Int = 4096, seed: Int = 1): Pipeline =
-    >>(Ops.aggregateStateCms(keys, fields, depth, width, seed))
-  /** `this` is the stored sketch state; `batch` the new state to fold in. */
-  def mergeAggregateStatesCms(batch: DataFrame, keys: Seq[String],
-      fields: Seq[String],
-      depth: Int = 5, width: Int = 4096, seed: Int = 1): Pipeline =
-    Pipeline(Ops.mergeAggregateStatesCms(keys, fields, depth, width, seed)(
-      df, batch))
-  def finalizeAggregateCms(keys: Seq[String], field: String,
-      items: Seq[String]): Pipeline =
-    >>(Ops.finalizeAggregateCms(keys, field, items))
-  def saltedJoin(right: DataFrame, keys: Seq[String], buckets: Int = 16,
-      joinType: String = "inner"): Pipeline =
-    >>(Ops.saltedJoin(right, keys, buckets, joinType))
-  def asOfJoin(right: DataFrame, key: String, leftTime: String, rightTime: String,
-      rightVals: Seq[String], rightTieBreak: String,
-      direction: String = "backward",
-      toleranceSeconds: Option[Long] = None): Pipeline =
-    >>(TemporalOps.asOfJoin(right, key, leftTime, rightTime, rightVals,
-      rightTieBreak, direction = direction,
-      toleranceSeconds = toleranceSeconds))
-  def scd2History(key: String, ts: String, attrs: Seq[String],
-      tieBreak: String): Pipeline =
-    >>(TemporalOps.scd2History(key, ts, attrs, tieBreak))
-  def bandJoin(right: DataFrame, key: String, leftTime: String, rightTime: String,
-      widthSeconds: Long): Pipeline =
-    >>(TemporalOps.bandJoin(right, key, leftTime, rightTime, widthSeconds))
-  def resample(key: String, ts: String, valueField: String,
-      stepSeconds: Long, tieBreak: String): Pipeline =
-    >>(TemporalOps.resample(key, ts, valueField, stepSeconds, tieBreak))
-  /** `this` is the current snapshot; `changes` the CDC batch. */
-  def applyChanges(changes: DataFrame, key: String, ts: String,
-      tieBreak: String, opField: String): Pipeline =
-    >>(TemporalOps.applyChanges(changes, key, ts, tieBreak, opField))
-  def intervalJoin(right: DataFrame, key: String,
-      leftStart: String, leftEnd: String,
-      rightStart: String, rightEnd: String, widthSeconds: Long): Pipeline =
-    >>(TemporalOps.intervalJoin(right, key, leftStart, leftEnd,
-      rightStart, rightEnd, widthSeconds))
-  def audit(fields: String*): Pipeline = >>(Probes.audit(fields))
-  def keySkew(keys: Seq[String], topN: Int = 20): Pipeline =
-    >>(Probes.keySkew(keys, topN))
-  def dedupExact(keys: Seq[String], tieBreak: String): Pipeline =
-    >>(Dedup.exact(keys, tieBreak))
-  def dedupByFingerprint(textField: String, tieBreak: String): Pipeline =
-    >>(Dedup.byFingerprint(textField, tieBreak))
-  def fuzzyKeyPairs(idField: String, keyField: String,
-      maxBucket: Int = 64): Pipeline =
-    >>(Dedup.fuzzyKeyPairs(idField, keyField, maxBucket))
-  def jaroWinklerPairs(idField: String, keyField: String, minJw: Double,
-      maxBucket: Int = 64): Pipeline =
-    >>(Dedup.jaroWinklerPairs(idField, keyField, minJw, maxBucket))
-  def dedupIncrementalBloom(textField: String, tieBreak: String,
-      seen: DataFrame, expectedItems: Long = 1000000L,
-      fpp: Double = 0.03): Pipeline =
-    >>(Dedup.incrementalByFingerprintBloom(textField, tieBreak, seen,
-      expectedItems, fpp))
-  def dedupIncremental(textField: String, tieBreak: String,
-      seen: DataFrame): Pipeline =
-    >>(Dedup.incrementalByFingerprint(textField, tieBreak, seen))
-  def textStats(textField: String): Pipeline = >>(TextOps.textStats(textField))
-  def tfidfTopTerms(idField: String, textField: String, k: Int): Pipeline =
-    >>(TextOps.tfidfTopTerms(idField, textField, k))
-  def contaminationReportPerBenchmark(idField: String, textField: String,
-      n: Int, benchmark: DataFrame, benchTextField: String,
-      benchIdField: String): Pipeline =
-    >>(TextOps.contaminationReportPerBenchmark(idField, textField, n,
-      benchmark, benchTextField, benchIdField))
-  def contaminationReport(idField: String, textField: String, n: Int,
-      benchmark: DataFrame, benchTextField: String): Pipeline =
-    >>(TextOps.contaminationReport(idField, textField, n,
-      benchmark, benchTextField))
-  def decontaminate(idField: String, textField: String, n: Int,
-      benchmark: DataFrame, benchTextField: String): Pipeline =
-    >>(TextOps.decontaminate(idField, textField, n, benchmark, benchTextField))
-  def packSequences(tokenCountField: String, budget: Long,
-      shardField: String, orderBy: Seq[String]): Pipeline =
-    >>(TextOps.packSequences(tokenCountField, budget, shardField, orderBy))
-  def duplicateSpans(idField: String, textField: String, n: Int,
-      minDocs: Int = 2, minSpanTokens: Int = 0): Pipeline =
-    >>(TextOps.duplicateSpans(idField, textField, n, minDocs, minSpanTokens))
-  def stripDuplicateSpans(idField: String, textField: String, n: Int): Pipeline =
-    >>(TextOps.stripDuplicateSpans(idField, textField, n))
-  def stripSelfRepeats(idField: String, textField: String, n: Int): Pipeline =
-    >>(TextOps.stripSelfRepeats(idField, textField, n))
-  def stripContaminatedSpans(idField: String, textField: String, n: Int,
-      benchmark: DataFrame, benchTextField: String): Pipeline =
-    >>(TextOps.stripContaminatedSpans(idField, textField, n, benchmark,
-      benchTextField))
-  def bm25TopK(idField: String, textField: String, queryTerms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): Pipeline =
-    >>(TextOps.bm25TopK(idField, textField, queryTerms, k, k1, b))
-  def bm25ServeTopK(index: DataFrame, termDf: DataFrame, stats: DataFrame,
-      queryIdField: String, termsField: String, outId: String = "doc_id",
-      k: Int, k1: Double = 1.2, b: Double = 0.75): Pipeline =
-    >>(q => TextOps.bm25ServeTopK(index, termDf, stats, q,
-      queryIdField, termsField, outId, k, k1, b))
-  def bm25PrfTerms(index: DataFrame, termDf: DataFrame, stats: DataFrame,
-      queryIdField: String, termsField: String, fbDocs: Int = 5,
-      fbTerms: Int = 10, k1: Double = 1.2, b: Double = 0.75): Pipeline =
-    >>(q => TextOps.bm25PrfTerms(index, termDf, stats, q,
-      queryIdField, termsField, fbDocs, fbTerms, k1, b))
-  def bm25BatchTopK(idField: String, textField: String, queries: DataFrame,
-      queryIdField: String, termsField: String, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): Pipeline =
-    >>(TextOps.bm25BatchTopK(idField, textField, queries, queryIdField,
-      termsField, k, k1, b))
-  def minhashNearDuplicates(idField: String, textField: String,
-      threshold: Double, numHashes: Int = 8, bands: Int = 4,
-      shingleSize: Int = 3): Pipeline =
-    >>(Dedup.minhashNearDuplicates(idField, textField, threshold, numHashes,
-      bands, shingleSize))
-  def minhashNearDuplicatesOph(idField: String, textField: String,
-      threshold: Double, numHashes: Int = 16, bands: Int = 4,
-      shingleSize: Int = 3): Pipeline =
-    >>(Dedup.minhashNearDuplicatesOph(idField, textField, threshold,
-      numHashes, bands, shingleSize))
-  /** Two-frame entry point: `this` is the new crawl (left side), `reference`
-    * the corpus it is deduplicated against. Sides must be disjoint id
-    * spaces — see [[graft.ext.Dedup.crossCorpusNearDuplicates]]. */
-  def crossCorpusNearDuplicates(reference: DataFrame, idField: String,
-      textField: String, threshold: Double, numHashes: Int = 8,
-      bands: Int = 4, shingleSize: Int = 3, maxBucket: Int = 64): Pipeline =
-    Pipeline(Dedup.crossCorpusNearDuplicates(idField, textField, threshold,
-      numHashes, bands, shingleSize, maxBucket)(df, reference))
-  /** `this` is the new batch; `index` the persisted `(id, sig)` signature
-    * rows ([[graft.ext.Dedup.minhashIndexRows]]). */
-  def incrementalNearDup(idField: String, textField: String,
-      index: DataFrame, threshold: Double, numHashes: Int = 8,
-      bands: Int = 4, shingleSize: Int = 3, maxBucket: Int = 64): Pipeline =
-    >>(Dedup.incrementalNearDup(idField, textField, index, threshold,
-      numHashes, bands, shingleSize, maxBucket))
-  def minhashIndexRows(idField: String, textField: String,
-      numHashes: Int = 8, shingleSize: Int = 3): Pipeline =
-    >>(Dedup.minhashIndexRows(idField, textField, numHashes, shingleSize))
-  /** `this` is the new batch; `index` the persisted `(id, codes)` int8
-    * rows ([[graft.ext.Dedup.embeddingIndexRows]]). */
-  def incrementalEmbeddingDedup(idField: String, vecField: String,
-      index: DataFrame, threshold: Double, planes: Int = 6,
-      dim: Int = 64, maxBucket: Int = 64): Pipeline =
-    >>(Dedup.incrementalEmbeddingDedup(idField, vecField, index, threshold,
-      planes, dim, maxBucket))
-  def embeddingIndexRows(idField: String, vecField: String): Pipeline =
-    >>(Dedup.embeddingIndexRows(idField, vecField))
-  def semanticDedup(idField: String, vecField: String, threshold: Double,
-      planes: Int = 6, dim: Int = 64, maxBucket: Int = 64,
-      tables: Int = 1): Pipeline =
-    >>(Dedup.semanticDedup(idField, vecField, threshold, planes, dim,
-      maxBucket, tables))
-  def clusterDedupByQuality(idField: String, textField: String,
-      quality: Column, threshold: Double, numHashes: Int = 8,
-      bands: Int = 4, shingleSize: Int = 3): Pipeline =
-    >>(Dedup.clusterDedupByQuality(idField, textField, quality, threshold,
-      numHashes, bands, shingleSize))
-  def tokenBudgetMix(idField: String, textField: String, sourceField: String,
-      tokensPerSource: Long, salt: String = "mix"): Pipeline =
-    >>(TextOps.tokenBudgetMix(idField, textField, sourceField,
-      tokensPerSource, salt))
-  def tokenBudgetMixTwoPass(idField: String, textField: String,
-      sourceField: String, tokensPerSource: Long,
-      salt: String = "mix"): Pipeline =
-    >>(TextOps.tokenBudgetMixTwoPass(idField, textField, sourceField,
-      tokensPerSource, salt))
-  def sourceOverlap(sourceField: String, textField: String,
-      n: Int = 3, gramFraction: Double = 1.0): Pipeline =
-    >>(TextOps.sourceOverlap(sourceField, textField, n, gramFraction))
-  def packTexts(idField: String, textField: String, shardField: String,
-      budget: Long, sep: String = " "): Pipeline =
-    >>(TextOps.packTexts(idField, textField, shardField, budget, sep))
-  def chunkTexts(idField: String, textField: String, chunkTokens: Int,
-      stride: Int): Pipeline =
-    >>(TextOps.chunkTexts(idField, textField, chunkTokens, stride))
-  def meanPool(idField: String, vecField: String, groupField: String): Pipeline =
-    >>(graft.ext.Similarity.meanPool(idField, vecField, groupField))
-  def maxPool(vecField: String, groupField: String): Pipeline =
-    >>(graft.ext.Similarity.maxPool(vecField, groupField))
-  /** `this` is the corpus; int8-quantized brute-force top-k. */
-  def bruteForceTopKQuantized(corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.bruteForceTopKQuantized(c, corpusId,
-      corpusVec, queries, queryId, queryVec, k, excludeSelf))
-  /** `this` is the corpus; sign-sketch coarse rank + cosine rerank. */
-  def hammingTopK(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, k: Int, rerank: Int = 10,
-      dim: Int = 64, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.hammingTopK(c, corpusId, corpusVec,
-      queries, queryId, queryVec, k, rerank, dim, excludeSelf))
-  /** `this` is the corpus; multi-word (dim > 64) sketch coarse rank. */
-  def hammingTopKWide(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, k: Int, dim: Int,
-      rerank: Int = 10, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.hammingTopKWide(c, corpusId, corpusVec,
-      queries, queryId, queryVec, k, dim, rerank, excludeSelf))
-  /** `this` is the corpus; MRL prefix-dim coarse rank + full rerank. */
-  def matryoshkaTopK(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, k: Int, coarseDims: Int,
-      rerank: Int = 10, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.matryoshkaTopK(c, corpusId, corpusVec,
-      queries, queryId, queryVec, k, coarseDims, rerank, excludeSelf))
-  /** `this` is the corpus; appends the stored PQ code column. */
-  def pqEncode(vecField: String, centroids: DataFrame, centroidId: String,
-      centroidVec: String, m: Int, outField: String = "pq_codes"): Pipeline =
-    >>(graft.ext.Similarity.pqEncode(vecField, centroids, centroidId,
-      centroidVec, m, outField))
-  /** `this` is the corpus; ADC coarse rank over PQ codes + cosine rerank. */
-  def pqTopK(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, centroids: DataFrame,
-      centroidId: String, centroidVec: String, m: Int, k: Int,
-      rerank: Int = 10, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.pqTopK(c, corpusId, corpusVec, queries,
-      queryId, queryVec, centroids, centroidId, centroidVec, m, k, rerank,
-      excludeSelf))
-  /** `this` is the corpus; IVF-ADC — probe coarse cells, ADC-score only
-    * their members from stored codes, exact-cosine rerank. */
-  def ivfPqTopK(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, coarseCentroids: DataFrame,
-      nprobe: Int, pqCentroids: DataFrame, m: Int, k: Int,
-      rerank: Int = 10, excludeSelf: Boolean = true,
-      index: Option[DataFrame] = None, residual: Boolean = false): Pipeline =
-    >>(c => graft.ext.Similarity.ivfPqTopK(c, corpusId, corpusVec, queries,
-      queryId, queryVec, coarseCentroids, nprobe, pqCentroids, m, k, rerank,
-      excludeSelf, index, residual))
-  /** `this` is the corpus; the stored `(item_id, cell, codes)` IVF×PQ
-    * index rows. */
-  def ivfPqIndexRows(corpusId: String, corpusVec: String,
-      coarseCentroids: DataFrame, pqCentroids: DataFrame, m: Int,
-      residual: Boolean = false): Pipeline =
-    >>(c => graft.ext.Similarity.ivfPqIndexRows(c, corpusId, corpusVec,
-      coarseCentroids, pqCentroids, m, residual))
-  /** `this` is the reference corpus; its stored distinct gram digests
-    * ([[graft.ext.Dedup.gramIndexRows]]). */
-  def gramIndexRows(textField: String, n: Int = 8): Pipeline =
-    >>(Dedup.gramIndexRows(textField, n))
-  def gopherRules(idField: String, textField: String): Pipeline =
-    >>(TextOps.gopherRules(idField, textField))
-  def gopherRepetition(idField: String, textField: String,
-      topNs: Seq[Int] = Seq(2, 3, 4),
-      dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)): Pipeline =
-    >>(TextOps.gopherRepetition(idField, textField, topNs, dupNs))
-  def scorePercentiles(sourceField: String, scoreField: String): Pipeline =
-    >>(TextOps.scorePercentiles(sourceField, scoreField))
-  def bigramLmQuality(idField: String, textField: String,
-      lambda: Double = 0.7): Pipeline =
-    >>(TextOps.bigramLmQuality(idField, textField, lambda))
-  def ccnetBuckets(idField: String, sourceField: String,
-      textField: String, counts: DataFrame,
-      alpha: Double = 0.4): Pipeline =
-    >>(TextOps.ccnetBuckets(idField, sourceField, textField, counts,
-      alpha))
-  def trigramLmQuality(idField: String, textField: String,
-      counts: DataFrame, alpha: Double = 0.4): Pipeline =
-    >>(TextOps.trigramLmQuality(idField, textField, counts, alpha))
-  def lmCountTable(textField: String, maxN: Int = 3,
-      minCount: Long = 1L): Pipeline =
-    >>(TextOps.lmCountTable(textField, maxN, minCount))
-  def targetAffinity(idField: String, textField: String, n: Int,
-      target: DataFrame, targetTextField: String): Pipeline =
-    >>(TextOps.targetAffinity(idField, textField, n, target, targetTextField))
-  def tokenizerFertility(sourceField: String, textField: String,
-      merges: Seq[(String, String)] = TextOps.demoBpeMerges): Pipeline =
-    >>(TextOps.tokenizerFertility(sourceField, textField, merges))
-  def mixReport(sourceField: String, textField: String,
-      targets: Map[String, Double] = Map.empty): Pipeline =
-    >>(TextOps.mixReport(sourceField, textField, targets))
-  def truncateTokens(textField: String, maxTokens: Int,
-      outField: String = "text_trunc"): Pipeline =
-    >>(TextOps.truncateTokens(textField, maxTokens, outField))
-  def truncateTokensBpe(textField: String, maxTokens: Int,
-      merges: Seq[(String, String)],
-      outField: String = "text_trunc"): Pipeline =
-    >>(TextOps.truncateTokensBpe(textField, maxTokens, merges, outField))
-  def chunkTextsBpe(idField: String, textField: String, chunkTokens: Int,
-      stride: Int, merges: Seq[(String, String)]): Pipeline =
-    >>(TextOps.chunkTextsBpe(idField, textField, chunkTokens, stride, merges))
-  def noveltyScores(idField: String, textField: String, n: Int = 8): Pipeline =
-    >>(TextOps.noveltyScores(idField, textField, n))
-  def hashBernoulli(key: Column, prob: Column,
-      salt: String = "bern"): Pipeline =
-    >>(_.filter(TextOps.hashBernoulli(key, prob, salt)))
-  def downsampleToTargets(idField: String, sourceField: String,
-      textField: String, targets: Map[String, Double],
-      salt: String = "bern"): Pipeline =
-    >>(TextOps.downsampleToTargets(idField, sourceField, textField,
-      targets, salt))
-  def tokenHistogram(sourceField: String, textField: String): Pipeline =
-    >>(TextOps.tokenHistogram(sourceField, textField))
-  def heavyHitters(keyField: String, minFreq: Double): Pipeline =
-    >>(graft.ext.Frequency.heavyHitters(keyField, minFreq))
-  def heavyHitterTerms(textField: String, minFreq: Double): Pipeline =
-    >>(graft.ext.Frequency.heavyHitterTerms(textField, minFreq))
-  def heavyHitterPhrases(textField: String, n: Int,
-      minFreq: Double): Pipeline =
-    >>(graft.ext.Frequency.heavyHitterPhrases(textField, n, minFreq))
-  def heavyHittersByGroup(groupField: String, keyField: String,
-      minFreq: Double): Pipeline =
-    >>(graft.ext.Frequency.heavyHittersByGroup(groupField, keyField, minFreq))
-  /** `this` is the labeled corpus; kNN majority-vote labels for `queries`. */
-  def knnClassify(corpusId: String, corpusVec: String, labelField: String,
-      queries: DataFrame, queryId: String, queryVec: String, k: Int): Pipeline =
-    >>(c => graft.ext.Similarity.knnClassify(c, corpusId, corpusVec,
-      labelField, queries, queryId, queryVec, k))
-  def classCentroids(idField: String, vecField: String,
-      labelField: String): Pipeline =
-    >>(graft.ext.Similarity.classCentroids(idField, vecField, labelField))
-  def centroidAssign(vecField: String, centroids: DataFrame,
-      centroidId: String, centroidVec: String): Pipeline =
-    >>(graft.ext.Similarity.centroidAssign(vecField, centroids,
-      centroidId, centroidVec))
-  def verificationSuite(rowChecks: Seq[(String, Column, Double)],
-      distinctChecks: Seq[(String, Seq[String], Double)] = Nil): Pipeline =
-    >>(Probes.verificationSuite(rowChecks, distinctChecks))
-  def filterFunnel(rules: Seq[(String, Column)]): Pipeline =
-    >>(Probes.filterFunnel(rules))
-  def compressionSignal(idField: String, textField: String,
-      level: Int = 6): Pipeline =
-    >>(TextOps.compressionSignal(idField, textField, level))
-  def urlParts(idField: String, urlField: String): Pipeline =
-    >>(TextOps.urlParts(idField, urlField))
-  def linearTextScore(idField: String, textField: String,
-      weights: Seq[(String, Long)], bias: Double, threshold: Double,
-      maxN: Int = 2): Pipeline =
-    >>(TextOps.linearTextScore(idField, textField, weights, bias,
-      threshold, maxN))
-  def unigramCfQuality(idField: String, textField: String): Pipeline =
-    >>(TextOps.unigramCfQuality(idField, textField))
-  def clusterSafeSplit(idField: String, textField: String,
-      splits: Seq[(String, Double)], threshold: Double,
-      numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
-      salt: String = ""): Pipeline =
-    >>(Dedup.clusterSafeSplit(idField, textField, splits, threshold,
-      numHashes, bands, shingleSize, salt))
-  def duplicateMap(keys: Seq[String], idField: String): Pipeline =
-    >>(Dedup.duplicateMap(keys, idField))
-  def duplicateMapByFingerprint(textField: String, idField: String): Pipeline =
-    >>(Dedup.duplicateMapByFingerprint(textField, idField))
-  def mediaMetadata(idField: String, blobField: String): Pipeline =
-    >>(graft.ext.BinaryOps.mediaMetadata(idField, blobField))
-  def perceptualHashPairs(idField: String, blobField: String,
-      maxHamming: Int = 3, maxBucket: Int = 64): Pipeline =
-    >>(graft.ext.BinaryOps.perceptualHashPairs(idField, blobField,
-      maxHamming, maxBucket))
-  /** `this` is the new batch; `index` the persisted `(id, phash)` rows
-    * ([[graft.ext.BinaryOps.phashIndexRows]]). */
-  def incrementalPerceptualDedup(idField: String, blobField: String,
-      index: DataFrame, maxHamming: Int = 3, maxBucket: Int = 64): Pipeline =
-    >>(graft.ext.BinaryOps.incrementalPerceptualDedup(idField, blobField,
-      index, maxHamming, maxBucket))
-  def phashIndexRows(idField: String, blobField: String): Pipeline =
-    >>(graft.ext.BinaryOps.phashIndexRows(idField, blobField))
-  def containmentPairs(idField: String, textField: String, n: Int = 8,
-      threshold: Double = 0.5, maxDf: Int = 64,
-      gramFraction: Double = 1.0): Pipeline =
-    >>(Dedup.containmentPairs(idField, textField, n, threshold, maxDf,
-      gramFraction))
-  /** `this` is the corpus; brute-force pool + MMR greedy diversity
-    * re-rank (λ·rel − (1−λ)·maxSim). */
-  def mmrTopK(corpusId: String, corpusVec: String, queries: DataFrame,
-      queryId: String, queryVec: String, k: Int, poolSize: Int,
-      lambda: Double, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.mmrTopK(c, corpusId, corpusVec, queries,
-      queryId, queryVec, k, poolSize, lambda, excludeSelf))
-  /** `this` is a rung's (query_id, item_id, rank) output; grade it
-    * against `truth`: recall / first-hit rank / reciprocal rank. */
-  def rankingMetrics(truth: DataFrame, k: Int): Pipeline =
-    >>(r => graft.ext.Similarity.rankingMetrics(r, truth, k))
-  def htmlExtract(field: String): Pipeline =
-    >>(_.withColumn(field, TextOps.htmlExtract(col(field))))
-  def htmlLinks(field: String, outField: String = "links"): Pipeline =
-    >>(_.withColumn(outField, TextOps.htmlLinks(col(field))))
-  def temperatureMix(idField: String, sourceField: String,
-      budgetRows: Long, salt: String = "temp"): Pipeline =
-    >>(TextOps.temperatureMix(idField, sourceField, budgetRows, salt))
-  def wavStats(idField: String, blobField: String): Pipeline =
-    >>(graft.ext.BinaryOps.wavStats(idField, blobField))
-  def kAnonymize(quasi: Seq[String], k: Long,
-      generalizations: Map[String, Column] = Map.empty): Pipeline =
-    >>(Probes.kAnonymize(quasi, k, generalizations))
-  /** `this` is the BEFORE snapshot; KS drift vs `after`. */
-  def numericDrift(field: String, lo: Double, hi: Double, bins: Int,
-      after: DataFrame): Pipeline =
-    >>(b => Probes.numericDrift(field, lo, hi, bins)(b, after))
-  /** `this` is the corpus; top-k most-similar candidates under the
-    * near-dup band — contrastive hard negatives. */
-  def hardNegatives(corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String,
-      k: Int, maxSim: Double, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.hardNegatives(c, corpusId, corpusVec,
-      queries, queryId, queryVec, k, maxSim, excludeSelf))
-  /** `this` is the multi-vector corpus; ColBERT MaxSim top-k. */
-  def lateInteractionTopK(corpusId: String, corpusVecs: String,
-      queries: DataFrame, queryId: String, queryVecs: String,
-      k: Int, excludeSelf: Boolean = true): Pipeline =
-    >>(c => graft.ext.Similarity.lateInteractionTopK(c, corpusId,
-      corpusVecs, queries, queryId, queryVecs, k, excludeSelf))
-  def fwhtRotate(vecField: String, dim: Int, seed: Int = 0): Pipeline =
-    >>(_.withColumn(vecField,
-      graft.ext.Similarity.fwhtRotate(col(vecField), dim, seed)))
-  /** `this` is ranker A's (query_id, item_id, rank) frame. */
-  def rrfFuse(b: DataFrame, k0: Int = 60, topK: Int = 10): Pipeline =
-    >>(a => graft.ext.Similarity.rrfFuse(a, b, k0, topK))
-  def anchorTermCounts(htmlField: String): Pipeline =
-    >>(TextOps.anchorTermCounts(htmlField))
-  def domainQualityGate(urlField: String, pass: Column,
-      minFrac: Double, minDocs: Long = 1): Pipeline =
-    >>(TextOps.domainQualityGate(urlField, pass, minFrac, minDocs))
-  def canonicalUrl(urlField: String,
-      outField: String = "canonical_url"): Pipeline =
-    >>(_.withColumn(outField, TextOps.canonicalUrl(col(urlField))))
-  def dedupByCanonicalUrl(urlField: String, tieBreak: String): Pipeline =
-    >>(graft.ext.Dedup.byCanonicalUrl(urlField, tieBreak))
-  def lengthBucketBatches(idField: String, textField: String,
-      bucketTokens: Int, batchTokens: Long, shards: Int = 1): Pipeline =
-    >>(TextOps.lengthBucketBatches(idField, textField,
-      bucketTokens, batchTokens, shards))
-  def epochRepeatMix(idField: String, sourceField: String,
-      factors: Map[String, Double], salt: String = "epoch"): Pipeline =
-    >>(TextOps.epochRepeatMix(idField, sourceField, factors, salt))
-  def dedupLines(idField: String, textField: String,
-      minCount: Int = 2, delim: String = "\n"): Pipeline =
-    >>(TextOps.dedupLines(idField, textField, minCount, delim))
-  def applyLineFilter(idField: String, textField: String,
-      heavy: Seq[String], delim: String = "\n"): Pipeline =
-    >>(TextOps.applyLineFilter(idField, textField, heavy, delim))
-  def boilerplateLines(idField: String, groupField: String,
-      textField: String, minDocFrac: Double = 0.5, minDocs: Int = 10,
-      delim: String = "\n"): Pipeline =
-    >>(TextOps.boilerplateLines(idField, groupField, textField,
-      minDocFrac, minDocs, delim))
-  def spanCorrupt(idField: String, textField: String,
-      maskProb: Double = 0.15, spanLen: Int = 3,
-      salt: String = "t5"): Pipeline =
-    >>(TextOps.spanCorrupt(idField, textField, maskProb, spanLen, salt))
-  def fimTransform(idField: String, textField: String,
-      fimRate: Double = 0.5, salt: String = "fim"): Pipeline =
-    >>(TextOps.fimTransform(idField, textField, fimRate, salt))
-  def ul2Mix(idField: String, textField: String, rWeight: Double = 0.5,
-      sWeight: Double = 0.25, xWeight: Double = 0.25,
-      salt: String = "ul2"): Pipeline =
-    >>(TextOps.ul2Mix(idField, textField, rWeight, sWeight, xWeight, salt))
-  def annealMixSchedule(sourceField: String, phases: Int,
-      startQuarters: Int = 4, endQuarters: Int = 0): Pipeline =
-    >>(TextOps.annealMixSchedule(sourceField, phases, startQuarters,
-      endQuarters))
-  def zipEntries(blobField: String, outField: String = "entries"): Pipeline =
-    >>(_.withColumn(outField,
-      graft.ext.BinaryOps.zipEntries(col(blobField))))
-  def warcRecords(blobField: String, outField: String = "records"): Pipeline =
-    >>(_.withColumn(outField,
-      graft.ext.BinaryOps.warcRecords(col(blobField))))
-  def tarEntries(blobField: String, outField: String = "entries"): Pipeline =
-    >>(_.withColumn(outField,
-      graft.ext.BinaryOps.tarEntries(col(blobField))))
-  def lshRecallEval(idField: String, textField: String, threshold: Double,
-      configs: Seq[(Int, Int)], shingleSize: Int = 3): Pipeline =
-    >>(Dedup.lshRecallEval(idField, textField, threshold, configs,
-      shingleSize))
-  def tfidfCosinePairs(idField: String, textField: String,
-      threshold: Double, maxDf: Int = 64): Pipeline =
-    >>(TextOps.tfidfCosinePairs(idField, textField, threshold, maxDf))
-  def collocations(textField: String, minCount: Long = 5,
-      k: Int = 20): Pipeline =
-    >>(TextOps.collocations(textField, minCount, k))
-  def scrubCards(field: String): Pipeline =
-    >>(_.withColumn(field, TextOps.scrubCards(col(field))))
-  def paretoFront(xField: String, yField: String,
-      buckets: Int = 64): Pipeline =
-    >>(Ops.paretoFront(xField, yField, buckets))
-  def preferencePairs(groupField: String, idField: String,
-      scoreField: String, minMargin: Double = 0.0,
-      pairsPerGroup: Int = 1): Pipeline =
-    >>(Ops.preferencePairs(groupField, idField, scoreField,
-      minMargin, pairsPerGroup))
-  def bradleyTerry(winnerField: String, loserField: String,
-      iterations: Int = 10, exactOrder: Boolean = true): Pipeline =
-    >>(Ops.bradleyTerry(winnerField, loserField, iterations, exactOrder))
-  def semanticDecontaminate(idField: String, vecField: String,
-      eval: DataFrame, threshold: Double, planes: Int = 6, dim: Int = 64,
-      maxBucket: Int = 64, tables: Int = 1): Pipeline =
-    >>(df => graft.ext.Dedup.semanticDecontaminate(idField, vecField,
-      threshold, planes, dim, maxBucket, tables)(df, eval))
-  def assembleConversations(convField: String, orderFields: Seq[String],
-      roleField: String, contentField: String,
-      lossRole: String = "assistant"): Pipeline =
-    >>(graft.ext.Conversations.assemble(convField, orderFields, roleField,
-      contentField, lossRole))
-  def truncateConversations(convField: String, orderFields: Seq[String],
-      roleField: String, contentField: String, budget: Int,
-      systemRole: String = "system", lossRole: String = "assistant",
-      bpeish: Boolean = false): Pipeline =
-    >>(graft.ext.Conversations.truncate(convField, orderFields, roleField,
-      contentField, budget, systemRole, lossRole, bpeish))
-  def goldenRecord(clusterField: String, rules: Seq[(String, String)],
-      recencyField: Option[String] = None,
-      tieField: Option[String] = None): Pipeline =
-    >>(Ops.goldenRecord(clusterField, rules, recencyField, tieField))
-  def targetEncode(catField: String, targetField: String,
-      smoothing: Double = 10.0, scale: Double = 1e6): Pipeline =
-    >>(Ops.targetEncode(catField, targetField, smoothing, scale))
-  def targetEncodeApply(stats: DataFrame, catField: String,
-      outField: String, smoothing: Double = 10.0,
-      scale: Double = 1e6): Pipeline =
-    >>(Ops.targetEncodeApply(stats, catField, outField, smoothing, scale))
-  def featureHash(fields: Seq[String], dims: Int,
-      outField: String = "features", salt: String = "fh"): Pipeline =
-    >>(_.withColumn(outField, Ops.featureHash(fields, dims, salt)))
-  def zorderRepartition(aField: String, bField: String,
-      partitions: Int): Pipeline =
-    >>(Ops.zorderRepartition(aField, bField, partitions))
-  def quarantine(rules: Seq[(String, Column)]): Pipeline =
-    >>(graft.probes.Probes.quarantine(rules))
-  def lagFeatures(keys: Seq[String], orderFields: Seq[String],
-      valueField: String, lags: Seq[Int]): Pipeline =
-    >>(graft.ops.WindowOps.lagFeatures(keys, orderFields, valueField, lags))
-  def cusumShift(keyField: String, tsField: String, valueField: String,
-      target: Double, slack: Double, threshold: Double,
-      tieBreak: String): Pipeline =
-    >>(graft.ops.WindowOps.cusumShift(keyField, tsField, valueField, target, slack,
-      threshold, tieBreak))
-  def conformSchema(target: org.apache.spark.sql.types.StructType): Pipeline =
-    >>(Ops.conformSchema(target))
-  def paretoFrontNd(fields: Seq[String], buckets: Int = 64,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Ops.paretoFrontNd(fields, buckets, groupCols))
-  def paretoLayers(fields: Seq[String], layers: Int, buckets: Int = 64,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Ops.paretoLayers(fields, layers, buckets, groupCols))
-  def labelAgreement(labelA: Column, labelB: Column): Pipeline =
-    >>(Probes.labelAgreement(labelA, labelB))
-  def scoreCalibration(score: Column, label: Column, bins: Int = 10,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.scoreCalibration(score, label, bins, groupCols))
-  def concentration(groupCols: Seq[String], field: String): Pipeline =
-    >>(Probes.concentration(groupCols, field))
-  def gini(groupCols: Seq[String], field: String): Pipeline =
-    >>(Probes.gini(groupCols, field))
-  def imputeMedian(field: String, keys: Seq[String] = Nil,
-      outField: String = "", approx: Boolean = false,
-      accuracy: Int = 10000): Pipeline =
-    >>(Ops.imputeMedian(field, keys, outField, approx, accuracy))
-  def decayedCounts(keys: Seq[String], tsField: String,
-      now: java.sql.Timestamp, halfLifeSeconds: Long,
-      kMax: Int = 40): Pipeline =
-    >>(TemporalOps.decayedCounts(keys, tsField, now, halfLifeSeconds,
-      kMax))
-  def burstiness(keyField: String, tsField: String,
-      tieBreak: Seq[String] = Nil): Pipeline =
-    >>(graft.ops.WindowOps.burstiness(keyField, tsField, tieBreak))
-  def activityProfile(keyField: String, tsField: String): Pipeline =
-    >>(graft.ops.WindowOps.activityProfile(keyField, tsField))
-  def embeddingProfile(vecField: String,
-      scale: Long = 10000000L): Pipeline =
-    >>(graft.ext.Similarity.embeddingProfile(vecField, scale))
-  def proportionalAllocate(groupField: String, weightField: String,
-      total: Long): Pipeline =
-    >>(Ops.proportionalAllocate(groupField, weightField, total))
-  def ivfRecallEval(corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      nCentroids: Int, nprobes: Seq[Int]): Pipeline =
-    >>(c => graft.ext.Similarity.ivfRecallEval(c, corpusId, corpusVec,
-      queries, queryId, queryVec, k, nCentroids, nprobes))
-  def pcaProject(vecField: String, basis: DataFrame,
-      outField: String = "pca"): Pipeline =
-    >>(graft.ext.Similarity.pcaProject(vecField, basis, outField))
-  def confusionMatrix(labelA: Column, labelB: Column): Pipeline =
-    >>(Probes.confusionMatrix(labelA, labelB))
-  def robotsRules(hostField: String, robotsField: String): Pipeline =
-    >>(TextOps.robotsRules(hostField, robotsField))
-  def robotsFilter(idField: String, urlField: String, rules: DataFrame,
-      keepDenied: Boolean = false,
-      broadcastRules: Boolean = false): Pipeline =
-    >>(TextOps.robotsFilter(idField, urlField, rules, keepDenied,
-      broadcastRules))
-  def crawlSchedule(idField: String, urlField: String,
-      priorityField: String, perHostPerSlot: Int): Pipeline =
-    >>(TextOps.crawlSchedule(idField, urlField, priorityField,
-      perHostPerSlot))
-  def eventPaths(keyField: String, tsField: String, typeField: String,
-      steps: Int = 3, k: Int = 20, tieBreak: Seq[String] = Nil): Pipeline =
-    >>(graft.ops.WindowOps.eventPaths(keyField, tsField, typeField,
-      steps, k, tieBreak))
-  def histogram2d(xField: String, xLo: Double, xHi: Double, xBins: Int,
-      yField: String, yLo: Double, yHi: Double, yBins: Int): Pipeline =
-    >>(Ops.histogram2d(xField, xLo, xHi, xBins, yField, yLo, yHi, yBins))
-  def ohlcBuckets(tsField: String, valueField: String,
-      bucketLength: String, keys: Seq[String] = Nil,
-      tieBreak: Seq[String] = Nil): Pipeline =
-    >>(TemporalOps.ohlcBuckets(tsField, valueField, bucketLength, keys,
-      tieBreak))
-  def isotonicCalibration(score: Column, label: Column, bins: Int = 10,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.isotonicCalibration(score, label, bins, groupCols))
-  def krippendorffAlpha(item: Column, label: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.krippendorffAlpha(item, label, groupCols))
-  def wilcoxonSignedRank(aValue: Column, bValue: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.wilcoxonSignedRank(aValue, bValue, groupCols))
-  def signTest(aValue: Column, bValue: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.signTest(aValue, bValue, groupCols))
-  def kruskalWallis(variant: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.kruskalWallis(variant, value, groupCols))
-  def dunnTest(variant: Column, value: Column,
-      groupCols: Seq[String] = Nil, zCrit: Double = 1.96): Pipeline =
-    >>(Probes.dunnTest(variant, value, groupCols, zCrit))
-  def jonckheereTerpstra(variant: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.jonckheereTerpstra(variant, value, groupCols))
-  def logRankTest(side: Column, time: Column, censored: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.logRankTest(side, time, censored, groupCols))
-  def gehanBreslowTest(side: Column, time: Column, censored: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.gehanBreslowTest(side, time, censored, groupCols))
-  def logRankStratified(side: Column, time: Column, censored: Column,
-      strataCols: Seq[String], groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.logRankStratified(side, time, censored, strataCols,
-      groupCols))
-  def logRankK(variant: Column, time: Column, censored: Column,
-      groupCols: Seq[String] = Nil, maxK: Int = 32,
-      chi2Crit: Option[Double] = None): Pipeline =
-    >>(Probes.logRankK(variant, time, censored, groupCols,
-      maxK = maxK, chi2Crit = chi2Crit))
-  def friedmanTest(blockField: String, treatmentField: String,
-      value: Column, groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.friedmanTest(blockField, treatmentField, value, groupCols))
-  def friedmanConover(blockField: String, treatmentField: String,
-      value: Column, groupCols: Seq[String] = Nil,
-      tCrit: Double = 1.96): Pipeline =
-    >>(Probes.friedmanConover(blockField, treatmentField, value,
-      groupCols, tCrit))
-  def pageTest(blockField: String, treatmentField: String,
-      value: Column, groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.pageTest(blockField, treatmentField, value, groupCols))
-  def oneWayAnova(variant: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.oneWayAnova(variant, value, groupCols))
-  def cochranQ(blockField: String, treatmentField: String,
-      success: Column, groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.cochranQ(blockField, treatmentField, success, groupCols))
-  def brownForsytheK(variant: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.brownForsytheK(variant, value, groupCols))
-  def krippendorffAlphaWeighted(item: Column, label: Column,
-      metric: String = "ordinal",
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.krippendorffAlphaWeighted(item, label, metric, groupCols))
-  def fleissKappa(item: Column, label: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.fleissKappa(item, label, groupCols))
-  def patternProfile(columns: Seq[String], topN: Int = 10): Pipeline =
-    >>(Probes.patternProfile(columns, topN))
-  def bootstrapCI(keyCol: Column, value: Column, reps: Int = 200,
-      alpha: Double = 0.05, salt: String = "bs",
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.bootstrapCI(keyCol, value, reps, alpha, salt, groupCols))
-  def permutationTest(keyCol: Column, a: Column, b: Column,
-      reps: Int = 200, salt: String = "pt",
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.permutationTest(keyCol, a, b, reps, salt, groupCols))
-  def rankBiasedOverlap(b: DataFrame, queryField: String,
-      itemField: String, rankField: String, p: Double = 0.9,
-      depth: Int = 10): Pipeline =
-    >>(Probes.rankBiasedOverlap(b, queryField, itemField, rankField,
-      p, depth))
-  def spearmanCorr(groupField: String, xField: String,
-      yField: String): Pipeline =
-    >>(Probes.spearmanCorr(groupField, xField, yField))
-  def kendallTau(groupField: String, idField: String, xField: String,
-      yField: String, maxN: Int = 10000): Pipeline =
-    >>(Probes.kendallTau(groupField, idField, xField, yField, maxN))
-  def mannWhitneyU(side: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.mannWhitneyU(side, value, groupCols))
-  def brunnerMunzel(side: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.brunnerMunzel(side, value, groupCols))
-  def hodgesLehmann(side: Column, value: Column, idField: String,
-      groupCols: Seq[String] = Nil, maxN: Int = 10000,
-      zCrit: Double = 1.96): Pipeline =
-    >>(Probes.hodgesLehmann(side, value, idField, groupCols, maxN,
-      zCrit))
-  def cochranArmitage(dose: Column, success: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.cochranArmitage(dose, success, groupCols))
-  def ksTest(side: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.ksTest(side, value, groupCols))
-  def bhCorrect(idField: String, pField: String, alpha: Double = 0.05,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.bhCorrect(idField, pField, alpha, groupCols))
-  def proportionZTest(side: Column, success: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.proportionZTest(side, success, groupCols))
-  def brownForsythe(side: Column, value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.brownForsythe(side, value, groupCols))
-  def theilSen(groupField: String, idField: String, xField: String,
-      yField: String, maxN: Int = 10000): Pipeline =
-    >>(Probes.theilSen(groupField, idField, xField, yField, maxN))
-  def mannKendall(groupField: String, idField: String, tField: String,
-      xField: String, maxN: Int = 10000): Pipeline =
-    >>(Probes.mannKendall(groupField, idField, tField, xField, maxN))
-  def seasonalMannKendall(groupField: String, seasonField: String,
-      idField: String, tField: String, xField: String,
-      maxN: Int = 10000): Pipeline =
-    >>(Probes.seasonalMannKendall(groupField, seasonField, idField,
-      tField, xField, maxN))
-  def seasonalTheilSen(groupField: String, seasonField: String,
-      idField: String, xField: String, yField: String,
-      maxN: Int = 10000): Pipeline =
-    >>(Probes.seasonalTheilSen(groupField, seasonField, idField,
-      xField, yField, maxN))
-  def theilSenCI(groupField: String, idField: String, xField: String,
-      yField: String, maxN: Int = 10000,
-      zCrit: Double = 1.96): Pipeline =
-    >>(Probes.theilSenCI(groupField, idField, xField, yField, maxN,
-      zCrit))
-  def mcnemarTest(aCorrect: Column, bCorrect: Column,
-      groupCols: Seq[String] = Nil, correction: Boolean = true): Pipeline =
-    >>(Probes.mcnemarTest(aCorrect, bCorrect, groupCols, correction))
-  def fleschReadability(idField: String, textField: String): Pipeline =
-    >>(graft.ext.TextOps.fleschReadability(idField, textField))
-  def chiSquareSelect(features: Seq[String], label: Column): Pipeline =
-    >>(Probes.chiSquareSelect(features, label))
-  def proportionCI(success: Column, groupCols: Seq[String] = Nil,
-      z: Double = 1.96): Pipeline =
-    >>(Probes.proportionCI(success, groupCols, z))
-  def rocAuc(score: Column, label: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.rocAuc(score, label, groupCols))
-  def prAuc(score: Column, label: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.prAuc(score, label, groupCols))
-  def benfordDigits(value: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(Probes.benfordDigits(value, groupCols))
-  def tCloseness(quasi: Seq[String], sensitive: String): Pipeline =
-    >>(Probes.tCloseness(quasi, sensitive))
-  def linkPrediction(srcField: String, dstField: String,
-      minCommon: Int = 1, maxDegree: Int = 0): Pipeline =
-    >>(graft.ext.GraphOps.linkPrediction(srcField, dstField,
-      minCommon, maxDegree))
-  def labelPropagation(srcField: String, dstField: String,
-      rounds: Int = 5): Pipeline =
-    >>(graft.ext.GraphOps.labelPropagation(srcField, dstField, rounds))
-  def modularity(labels: DataFrame): Pipeline =
-    >>(graft.ext.GraphOps.modularity(labels))
-  def kCore(srcField: String, dstField: String, k: Int,
-      rounds: Int = 10): Pipeline =
-    >>(graft.ext.GraphOps.kCore(srcField, dstField, k, rounds))
-  def kTruss(srcField: String, dstField: String, k: Int,
-      rounds: Int = 10): Pipeline =
-    >>(graft.ext.GraphOps.kTruss(srcField, dstField, k, rounds))
-  def corpusDivergence(sourceField: String, textField: String,
-      topV: Int = 1000): Pipeline =
-    >>(graft.ext.TextOps.corpusDivergence(sourceField, textField, topV))
-  def associationRules(txnField: String, itemField: String,
-      minSupportCount: Long = 2, minConfidence: Double = 0.0,
-      maxBasket: Int = 256): Pipeline =
-    >>(graft.ext.Frequency.associationRules(txnField, itemField,
-      minSupportCount, minConfidence, maxBasket))
-  def quantileNormalize(groupField: String, valueField: String,
-      tieBreak: String): Pipeline =
-    >>(Ops.quantileNormalize(groupField, valueField, tieBreak))
-  def oovRate(vocab: DataFrame, idField: String,
-      textField: String): Pipeline =
-    >>(graft.ext.TextOps.oovRate(vocab, idField, textField))
-  def hits(srcField: String, dstField: String,
-      iterations: Int = 3, exactOrder: Boolean = true): Pipeline =
-    >>(graft.ext.GraphOps.hits(srcField, dstField, iterations, exactOrder))
-  def fellegiSunter(comparisons: Seq[(String, Column, Double, Double)],
-      upperThreshold: Double, lowerThreshold: Double): Pipeline =
-    >>(graft.ext.Dedup.fellegiSunter(comparisons,
-      upperThreshold, lowerThreshold))
-  def setSimilarityJoin(idField: String, tokensField: String,
-      threshold: Double): Pipeline =
-    >>(graft.ext.Dedup.setSimilarityJoin(idField, tokensField, threshold))
-  def fellegiSunterFit(comparisons: Seq[(String, Column)],
-      iterations: Int = 5): Pipeline =
-    >>(graft.ext.Dedup.fellegiSunterFit(comparisons, iterations))
-  def fellegiSunterAuto(comparisons: Seq[(String, Column)],
-      upperThreshold: Double, lowerThreshold: Double,
-      iterations: Int = 5): Pipeline =
-    >>(graft.ext.Dedup.fellegiSunterAuto(comparisons,
-      upperThreshold, lowerThreshold, iterations))
-  def fellegiSunterAutoTuned(comparisons: Seq[(String, Column)],
-      upperPosterior: Double = 0.99, lowerPosterior: Double = 0.01,
-      iterations: Int = 5): Pipeline =
-    >>(graft.ext.Dedup.fellegiSunterAutoTuned(comparisons,
-      upperPosterior, lowerPosterior, iterations))
-  def holtWinters(keyField: String, tsField: String, valueField: String,
-      alpha: Double, beta: Double, gamma: Double, period: Int,
-      tieBreak: String, exactOrder: Boolean = true,
-      phi: Double = 1.0): Pipeline =
-    >>(graft.ops.WindowOps.holtWinters(keyField, tsField, valueField,
-      alpha, beta, gamma, period, tieBreak, exactOrder, phi))
-  def holtSmooth(keyField: String, tsField: String, valueField: String,
-      alpha: Double, beta: Double, tieBreak: String,
-      exactOrder: Boolean = true, phi: Double = 1.0): Pipeline =
-    >>(graft.ops.WindowOps.holtSmooth(keyField, tsField, valueField,
-      alpha, beta, tieBreak, exactOrder, phi))
-  def rollingCorr(keys: Seq[String], orderFields: Seq[String],
-      xField: String, yField: String, window: Int,
-      exact: Boolean = true): Pipeline =
-    >>(graft.ops.WindowOps.rollingCorr(keys, orderFields,
-      xField, yField, window, exact))
-  def kaplanMeier(time: Column, censored: Column,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(graft.ops.WindowOps.kaplanMeier(time, censored, groupCols))
-  def rmst(time: Column, censored: Column, tau: Double,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(graft.ops.WindowOps.rmst(time, censored, tau, groupCols))
-  def survivalQuantile(time: Column, censored: Column, q: Double = 0.5,
-      groupCols: Seq[String] = Nil): Pipeline =
-    >>(graft.ops.WindowOps.survivalQuantile(time, censored, q, groupCols))
-  def countDuplicates(keys: String*): Pipeline = >>(Probes.countDuplicates(keys))
-  def assertUnique(keys: String*): Pipeline = >>(Probes.assertUnique(keys))
+    via(Ops.threshold(field, low, high))
+  def countDuplicates(keys: String*): Pipeline = via(Probes.countDuplicates(keys))
+  def audit(fields: String*): Pipeline = via(Probes.audit(fields))
+  def assertUnique(keys: String*): Pipeline = via(Probes.assertUnique(keys))
   def assertContains(field: String, value: Any): Pipeline =
-    >>(Probes.assertContains(field, value))
+    via(Probes.assertContains(field, value))
   def assertMissing(field: String, value: Any): Pipeline =
-    >>(Probes.assertMissing(field, value))
+    via(Probes.assertMissing(field, value))
 
   /** Materialize before fan-out — the reference engine retains a consumable
     * object consumed by more than one downstream node; on Spark that is an

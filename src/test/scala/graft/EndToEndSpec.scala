@@ -728,10 +728,12 @@ class EndToEndSpec extends SparkSpec {
     assert(batched.exceptAll(rerun).count() === 0)
   }
 
-  test("flagship façade chain: extract -> normalize -> gopher gate -> line dedup -> incremental dedup -> mix -> pack") {
-    // the EP1 Pipeline form of the pipeline_flagship oracle row — the
-    // seams (schema handoffs, meta survival, stage liveness) pinned
-    // against the same fixture at sf0.001
+  test("flagship chain composes from catalog operators") {
+    // extract -> normalize -> gopher gate -> line dedup -> incremental
+    // dedup -> mix -> pack, chained as the pipeline_flagship oracle row
+    // chains it — the seams (schema handoffs, meta survival, stage
+    // liveness) pinned against the same fixture at sf0.001
+    import graft.ops.Ops
     import graft.pipeline.Pipeline
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -745,7 +747,7 @@ class EndToEndSpec extends SparkSpec {
       concat(lit("<html><body><!-- c --><p>"), col("text"),
         lit("</p><nav>HOME | ABOUT</nav></body></html>")).as("text"))
     val cleaned = Pipeline(wrapped)
-      .htmlExtract("text")
+      .derive("text", TextOps.htmlExtract(col("text")))
       .derive("text", TextOps.normalizeText(col("text")))
       .result
     // extraction really ran: no tags/comments survive, markup gone
@@ -755,14 +757,15 @@ class EndToEndSpec extends SparkSpec {
     val nPass = passing.count()
     assert(nPass > 0 && nPass < raw.count()) // the gate is LIVE
     val toks = split(coalesce(col("text"), lit("")), " ")
-    val lined = Pipeline(cleaned).semiJoin(passing, Seq("doc_id")).result
+    val lined = Pipeline(cleaned).via(Ops.semiJoin(passing, Seq("doc_id")))
+      .result
       .select(col("doc_id"), col("lang"), col("source"),
         array_join(transform(
           sequence(lit(0), ceil(size(toks) / lit(8.0)).cast("int") - 1),
           b => array_join(slice(toks, b * lit(8) + 1, lit(8)), " ")),
           "\n").as("text"))
     val deduped = Pipeline(lined)
-      .dedupLines("doc_id", "text", minCount = 2).result
+      .via(TextOps.dedupLines("doc_id", "text", minCount = 2)).result
       .join(lined.select("doc_id", "lang", "source"), Seq("doc_id"))
     assert(deduped.count() === nPass) // line pass is row-preserving
     assert(deduped.agg(sum("n_removed")).head.getLong(0) > 0L) // and live
@@ -771,18 +774,18 @@ class EndToEndSpec extends SparkSpec {
       .select(TextOps.fingerprint(col("clean_text")).as("f")).distinct()
     val batch = deduped.filter(col("doc_id") >= 100000)
     val nBatch = batch.count()
-    val fresh = Pipeline(batch)
-      .dedupIncremental("clean_text", "doc_id", seen).result
+    val fresh = batch.transform(
+      Dedup.incrementalByFingerprint("clean_text", "doc_id", seen))
     // every re-crawl's cleaned text already sits in the index — all drop
     assert(nBatch > 0L && fresh.count() === 0L)
     // mix + pack run over the history survivors end to end
     val packed = Pipeline(deduped.filter(col("doc_id") < 100000))
-      .temperatureMix("doc_id", "source", budgetRows = 30)
+      .via(TextOps.temperatureMix("doc_id", "source", budgetRows = 30))
       .derive("n_tokens",
         size(split(translate(col("clean_text"), "\n", " "), " "))
           .cast("long"))
-      .packSequences("n_tokens", budget = 256, shardField = "lang",
-        orderBy = Seq("doc_id"))
+      .via(TextOps.packSequences("n_tokens", budget = 256,
+        shardField = "lang", orderBy = Seq("doc_id")))
       .result
     assert(packed.count() > 0L)
     assert(packed.columns.contains("bin") &&

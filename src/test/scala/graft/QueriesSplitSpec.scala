@@ -50,8 +50,10 @@ class QueriesSplitSpec extends AnyFunSuite {
 
   test("the driver surface covers the round-13 closing vector and the r14 additions") {
     val all = SparkEntry.queries.keySet
-    assert(all.size >= 261, s"query surface shrank to ${all.size}")
+    // the exact surface, so a refactor cannot silently drop a query
+    assert(all.size === 361, s"query surface changed to ${all.size}")
     assert(all("pipeline_flagship") && all("pareto_front_3d"))
     assert(SparkEntry.oracleSql.keySet.subsetOf(all))
+    assert(SparkEntry.oracleSql.size === all.size - 2)
   }
 }

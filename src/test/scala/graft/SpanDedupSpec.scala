@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, TextOps}
-import graft.pipeline.Pipeline
 
 /** Semantics tests for the span-level dedup family and BM25 retrieval —
   * the edge cases the sf0.01 oracle corpus cannot probe: sub-n documents,
@@ -230,19 +229,18 @@ class SpanDedupSpec extends SparkSpec {
     assert(pairs === Array((1L, 2L))) // no (1,1)
   }
 
-  test("Pipeline façade exposes the span-dedup and retrieval surface") {
+  test("span-dedup and retrieval operators run as transforms") {
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c z d e f"))
       .toDF("doc_id", "text")
-    assert(Pipeline(docs).duplicateSpans("doc_id", "text", n = 3)
-      .result.count() === 3)
-    assert(Pipeline(docs).stripDuplicateSpans("doc_id", "text", n = 3)
-      .result.count() === 2)
-    assert(Pipeline(docs).bm25TopK("doc_id", "text", Seq("z"), k = 1)
-      .result.select("doc_id").as[Long].collect() === Array(2L))
+    assert(docs.transform(TextOps.duplicateSpans("doc_id", "text", n = 3))
+      .count() === 3)
+    assert(docs.transform(TextOps.stripDuplicateSpans("doc_id", "text", n = 3))
+      .count() === 2)
+    assert(docs.transform(TextOps.bm25TopK("doc_id", "text", Seq("z"), k = 1))
+      .select("doc_id").as[Long].collect() === Array(2L))
     val right = Seq((10L, dupText)).toDF("doc_id", "text")
-    assert(Pipeline(Seq((1L, dupText)).toDF("doc_id", "text"))
-      .crossCorpusNearDuplicates(right, "doc_id", "text", threshold = 0.5)
-      .result.count() === 1)
+    assert(Dedup.crossCorpusNearDuplicates("doc_id", "text", threshold = 0.5)(
+      Seq((1L, dupText)).toDF("doc_id", "text"), right).count() === 1)
   }
 
   test("stripSelfRepeats drops later in-doc occurrences, keeps the first") {
@@ -346,105 +344,102 @@ class SpanDedupSpec extends SparkSpec {
     }
   }
 
-  test("Pipeline façade exposes the round-8 mixing and dedup surface") {
+  test("mixing and dedup operators run as transforms") {
     val docs = Seq((1L, "a b c d", "s1"), (2L, "e f g h", "s1"))
       .toDF("doc_id", "text", "source")
-    assert(Pipeline(docs)
-      .tokenBudgetMix("doc_id", "text", "source", tokensPerSource = 4)
-      .result.count() === 1)
-    assert(Pipeline(docs).sourceOverlap("source", "text", n = 2)
-      .result.count() === 0) // one source, no pairs
+    assert(docs.transform(TextOps.tokenBudgetMix("doc_id", "text", "source",
+      tokensPerSource = 4)).count() === 1)
+    assert(docs.transform(TextOps.sourceOverlap("source", "text", n = 2))
+      .count() === 0) // one source, no pairs
     val vecs = Seq((1L, Array.fill(8)(1.0f)), (2L, Array.fill(8)(1.0f)))
       .toDF("vec_id", "embedding")
-    assert(Pipeline(vecs)
-      .semanticDedup("vec_id", "embedding", threshold = 0.9, planes = 2,
-        dim = 8)
-      .result.count() === 1)
-    assert(Pipeline(docs)
-      .clusterDedupByQuality("doc_id", "text",
-        graft.ext.TextOps.qualityScore(org.apache.spark.sql.functions
-          .col("text")), threshold = 0.9, shingleSize = 2)
-      .result.count() === 2) // no near-dups: both survive
-    assert(Pipeline(docs).packTexts("doc_id", "text", "source", budget = 8)
-      .result.count() === 1) // both docs fit one s1 bin
-    assert(Pipeline(docs).unigramCfQuality("doc_id", "text")
-      .result.count() === 2)
+    assert(vecs.transform(Dedup.semanticDedup("vec_id", "embedding",
+      threshold = 0.9, planes = 2, dim = 8)).count() === 1)
+    assert(docs.transform(Dedup.clusterDedupByQuality("doc_id", "text",
+        TextOps.qualityScore(col("text")), threshold = 0.9, shingleSize = 2))
+      .count() === 2) // no near-dups: both survive
+    assert(docs.transform(TextOps.packTexts("doc_id", "text", "source",
+      budget = 8)).count() === 1) // both docs fit one s1 bin
+    assert(docs.transform(TextOps.unigramCfQuality("doc_id", "text"))
+      .count() === 2)
   }
 
-  test("Pipeline façade exposes the round-13 eval/selection/QA surface") {
+  test("eval, selection and QA operators run as transforms") {
     import org.apache.spark.sql.functions.col
+    import graft.ext.Similarity
+    import graft.ops.{Ops, TemporalOps, WindowOps}
+    import graft.probes.Probes
     val docs = Seq((1L, "a b c d e", "en"), (2L, "a b c d e", "en"),
       (3L, "x y z w v", "de")).toDF("doc_id", "text", "lang")
-    assert(Pipeline(docs)
-      .lshRecallEval("doc_id", "text", threshold = 0.5,
-        configs = Seq((8, 4)), shingleSize = 2).result.count() === 1)
-    assert(Pipeline(docs)
-      .tfidfCosinePairs("doc_id", "text", threshold = 0.5)
-      .result.count() >= 1)
-    assert(Pipeline(docs).collocations("text", minCount = 2, k = 5)
-      .result.count() >= 1)
-    assert(Pipeline(Seq((1L, "pay 4111111111111111 now")).toDF("id", "t"))
-      .scrubCards("t").result.head().getString(1).contains("<CARD>"))
-    assert(Pipeline(docs.withColumn("q", col("doc_id").cast("double"))
-        .withColumn("c", -col("doc_id")))
-      .paretoFront("q", "c").result.count() >= 1)
-    assert(Pipeline(docs)
-      .labelAgreement(col("lang"), col("lang")).result
+    assert(docs.transform(Dedup.lshRecallEval("doc_id", "text",
+      threshold = 0.5, configs = Seq((8, 4)), shingleSize = 2))
+      .count() === 1)
+    assert(docs.transform(TextOps.tfidfCosinePairs("doc_id", "text",
+      threshold = 0.5)).count() >= 1)
+    assert(docs.transform(TextOps.collocations("text", minCount = 2, k = 5))
+      .count() >= 1)
+    assert(Seq((1L, "pay 4111111111111111 now")).toDF("id", "t")
+      .withColumn("t", TextOps.scrubCards(col("t")))
+      .head().getString(1).contains("<CARD>"))
+    assert(docs.withColumn("q", col("doc_id").cast("double"))
+      .withColumn("c", -col("doc_id"))
+      .transform(Ops.paretoFront("q", "c")).count() >= 1)
+    assert(docs.transform(Probes.labelAgreement(col("lang"), col("lang")))
       .head().getDouble(4) === 1.0) // self-agreement: kappa 1
-    assert(Pipeline(docs.withColumn("s", col("doc_id") / 10.0)
-        .withColumn("y", col("doc_id") > 1))
-      .scoreCalibration(col("s"), col("y"), bins = 2).result.count() >= 1)
+    assert(docs.withColumn("s", col("doc_id") / 10.0)
+      .withColumn("y", col("doc_id") > 1)
+      .transform(Probes.scoreCalibration(col("s"), col("y"), bins = 2))
+      .count() >= 1)
     val vecs = (0 until 12).map(i =>
       (i.toLong, Array.tabulate(8)(d => (i * d % 5).toFloat)))
       .toDF("vec_id", "embedding")
-    assert(Pipeline(vecs)
-      .ivfRecallEval("vec_id", "embedding", vecs.filter(col("vec_id") < 3),
-        "vec_id", "embedding", k = 2, nCentroids = 2, nprobes = Seq(1, 2))
-      .result.count() === 2)
-    val basis = graft.ext.Similarity.pcaBasis(vecs, "embedding", k = 2)
-    assert(Pipeline(vecs).pcaProject("embedding", basis).result
+    assert(Similarity.ivfRecallEval(vecs, "vec_id", "embedding",
+      vecs.filter(col("vec_id") < 3), "vec_id", "embedding", k = 2,
+      nCentroids = 2, nprobes = Seq(1, 2)).count() === 2)
+    val basis = Similarity.pcaBasis(vecs, "embedding", k = 2)
+    assert(vecs.transform(Similarity.pcaProject("embedding", basis))
       .head().getSeq[Float](2).length === 2)
-    assert(Pipeline(docs)
-      .confusionMatrix(col("lang"), col("lang")).result.count() === 2)
+    assert(docs.transform(Probes.confusionMatrix(col("lang"), col("lang")))
+      .count() === 2)
     val robots = Seq(("h", "User-agent: *\nDisallow: /x"))
       .toDF("host", "robots")
-    val rules = Pipeline(robots).robotsRules("host", "robots").result
+    val rules = robots.transform(TextOps.robotsRules("host", "robots"))
     assert(rules.count() === 1)
     val urls = Seq((1L, "https://h/x/1", 1), (2L, "https://h/ok", 2))
       .toDF("id", "url", "pri")
-    assert(Pipeline(urls).robotsFilter("id", "url", rules).result
+    assert(urls.transform(TextOps.robotsFilter("id", "url", rules))
       .count() === 1)
-    assert(Pipeline(urls).crawlSchedule("id", "url", "pri", 1).result
+    assert(urls.transform(TextOps.crawlSchedule("id", "url", "pri", 1))
       .select("fetch_slot").as[Int].collect().sorted.toSeq === Seq(0, 1))
     val ev = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 09:00:00"),
       "a", 1.0, 1L),
       (1L, java.sql.Timestamp.valueOf("2024-01-01 09:01:00"), "b", 2.0, 2L),
       (1L, java.sql.Timestamp.valueOf("2024-01-01 09:02:00"), "c", 3.0, 3L))
       .toDF("user_id", "ts", "event_type", "value", "event_id")
-    assert(Pipeline(ev).eventPaths("user_id", "ts", "event_type",
-      tieBreak = Seq("event_id")).result.count() === 1)
-    assert(Pipeline(ev).histogram2d("value", 0.0, 4.0, 2,
-      "value", 0.0, 4.0, 2).result.count() === 2)
-    assert(Pipeline(ev).ohlcBuckets("ts", "value", "1 hour",
-      tieBreak = Seq("event_id")).result.head().getDouble(1) === 1.0)
-    assert(Pipeline(ev).concentration(Seq("user_id"), "event_type")
-      .result.head().getLong(1) === 3L)
-    assert(Pipeline(ev.withColumn("v", col("value").cast("long")))
-      .gini(Seq("user_id"), "v").result.count() === 1)
-    assert(Pipeline(ev).imputeMedian("value").result.count() === 3)
-    assert(Pipeline(ev).decayedCounts(Seq("event_type"), "ts",
-      java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 86400L)
-      .result.count() === 3)
-    assert(Pipeline(ev).burstiness("user_id", "ts",
-      tieBreak = Seq("event_id")).result.head().getLong(2) === 2L)
-    assert(Pipeline(ev).activityProfile("event_type", "ts")
-      .result.count() === 3)
-    assert(Pipeline(vecs).embeddingProfile("embedding")
-      .result.count() === 8)
-    val alloc = Pipeline(ev.groupBy("event_type")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n")))
-      .proportionalAllocate("event_type", "n", total = 9L).result
+    assert(ev.transform(WindowOps.eventPaths("user_id", "ts", "event_type",
+      tieBreak = Seq("event_id"))).count() === 1)
+    assert(ev.transform(Ops.histogram2d("value", 0.0, 4.0, 2,
+      "value", 0.0, 4.0, 2)).count() === 2)
+    assert(ev.transform(TemporalOps.ohlcBuckets("ts", "value", "1 hour",
+      tieBreak = Seq("event_id"))).head().getDouble(1) === 1.0)
+    assert(ev.transform(Probes.concentration(Seq("user_id"), "event_type"))
+      .head().getLong(1) === 3L)
+    assert(ev.withColumn("v", col("value").cast("long"))
+      .transform(Probes.gini(Seq("user_id"), "v")).count() === 1)
+    assert(ev.transform(Ops.imputeMedian("value")).count() === 3)
+    assert(ev.transform(TemporalOps.decayedCounts(Seq("event_type"), "ts",
+      java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), 86400L))
+      .count() === 3)
+    assert(ev.transform(WindowOps.burstiness("user_id", "ts",
+      tieBreak = Seq("event_id"))).head().getLong(2) === 2L)
+    assert(ev.transform(WindowOps.activityProfile("event_type", "ts"))
+      .count() === 3)
+    assert(vecs.transform(Similarity.embeddingProfile("embedding"))
+      .count() === 8)
+    val alloc = ev.groupBy("event_type")
+      .agg(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"))
+      .transform(Ops.proportionalAllocate("event_type", "n", total = 9L))
     assert(alloc.agg(org.apache.spark.sql.functions.sum("allocation"))
       .head().getLong(0) === 9L)
   }

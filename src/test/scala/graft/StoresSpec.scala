@@ -687,9 +687,13 @@ class StoresSpec extends SparkSpec {
   }
 
   test("pipeline facade composes catalog operators") {
+    import org.apache.spark.sql.DataFrame
+    import graft.ext.Dedup
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0), ("", 4.0))
       .toDF("k", "v")
+    val exact: DataFrame => DataFrame = Dedup.exact(Seq("k", "v"), "v")
     val out = Pipeline(df)
+      .via(exact) // no (k, v) repeats: every row survives
       .filterNotEmpty("k")
       .aggregate(Seq("k"), Seq("v" -> "sum"))
       .sort(Seq("k" -> true))
@@ -698,155 +702,155 @@ class StoresSpec extends SparkSpec {
     assert(rows.map(_.getAs[String]("k")).toSeq == Seq("a", "b"))
     assert(rows.head.getAs[Double]("v_sum") == 3.0)
     assert(rows.head.getAs[Long]("record_count") == 2L)
+    // via adds nothing of its own: the plan is the operator's plan
+    assert(Pipeline(df).via(exact).result.queryExecution.analyzed
+      .sameResult(exact(df).queryExecution.analyzed))
   }
 
-  test("pipeline facade reaches the extension surface") {
+  test("extension operators run as transforms") {
+    import graft.ext.{Conversations, Dedup, GraphOps, TextOps}
+    import graft.ops.{Ops, WindowOps}
+    import graft.probes.Probes
     val docs = Seq((1L, "same text"), (2L, "same text"), (3L, "other words"))
       .toDF("doc_id", "text")
-    val deduped = Pipeline(docs).dedupByFingerprint("text", "doc_id")
-      .result.select("doc_id").as[Long].collect().sorted.toSeq
+    val deduped = docs.transform(Dedup.byFingerprint("text", "doc_id"))
+      .select("doc_id").as[Long].collect().sorted.toSeq
     assert(deduped == Seq(1L, 3L))
-    val skew = Pipeline(docs.withColumn("k", lit("hot")))
-      .keySkew(Seq("k"), topN = 1).result.head()
+    val skew = docs.withColumn("k", lit("hot"))
+      .transform(Probes.keySkew(Seq("k"), topN = 1)).head()
     assert(skew.getAs[Long]("key_count") == 3L &&
       skew.getAs[Double]("share") == 1.0)
-    // round-13 additions ride the same façade
-    val html = Pipeline(Seq((1L, "<p>a</p><a href=\"/x\">l</a>"))
-      .toDF("doc_id", "text"))
-      .htmlLinks("text").htmlExtract("text").result.head()
+    val html = Seq((1L, "<p>a</p><a href=\"/x\">l</a>")).toDF("doc_id", "text")
+      .withColumn("links", TextOps.htmlLinks(col("text")))
+      .withColumn("text", TextOps.htmlExtract(col("text"))).head()
     assert(html.getString(1) === "a l" &&
       html.getSeq[String](2) === Seq("/x"))
-    val anon = Pipeline(Seq(("z", 1), ("z", 2), ("q", 3)).toDF("zip", "p"))
-      .kAnonymize(Seq("zip"), k = 2).result
+    val anon = Seq(("z", 1), ("z", 2), ("q", 3)).toDF("zip", "p")
+      .transform(Probes.kAnonymize(Seq("zip"), k = 2))
       .select("zip").as[String].collect().toSeq
     assert(anon === Seq("z", "z"))
-    // round-14 additions ride the same façade
     val turns = Seq((1, 1, "user", "hi"), (1, 2, "assistant", "yo"))
       .toDF("conv", "ord", "role", "content")
-    val conv = Pipeline(turns)
-      .assembleConversations("conv", Seq("ord"), "role", "content")
-      .result.head()
+    val conv = turns.transform(Conversations.assemble("conv", Seq("ord"),
+      "role", "content")).head()
     assert(conv.getAs[String]("text") === "<|user|>\nhi\n<|assistant|>\nyo\n")
-    val trunc = Pipeline(turns)
-      .truncateConversations("conv", Seq("ord"), "role", "content",
-        budget = 1).result.head()
+    val trunc = turns.transform(Conversations.truncate("conv", Seq("ord"),
+      "role", "content", budget = 1)).head()
     assert(trunc.getAs[Long]("kept_turns") === 1L)
-    val golden = Pipeline(Seq(("a", 1L, 1, "X"), ("a", 2L, 2, "Y"))
-      .toDF("k", "ts", "id", "v"))
-      .goldenRecord("k", Seq("v" -> "latest"), Some("ts"), Some("id"))
-      .result.head()
+    val golden = Seq(("a", 1L, 1, "X"), ("a", 2L, 2, "Y"))
+      .toDF("k", "ts", "id", "v")
+      .transform(Ops.goldenRecord("k", Seq("v" -> "latest"), Some("ts"),
+        Some("id"))).head()
     assert(golden.getAs[String]("v") === "Y")
-    val ul2 = Pipeline(Seq((1L, "a b c")).toDF("doc_id", "text"))
-      .ul2Mix("doc_id", "text").result.head()
+    val ul2 = Seq((1L, "a b c")).toDF("doc_id", "text")
+      .transform(TextOps.ul2Mix("doc_id", "text")).head()
     assert(Set("r", "s", "x")(ul2.getAs[String]("regime")))
-    val sched = Pipeline(Seq((1L, "s1"), (2L, "s2")).toDF("doc_id", "source"))
-      .annealMixSchedule("source", phases = 2).result.count()
+    val sched = Seq((1L, "s1"), (2L, "s2")).toDF("doc_id", "source")
+      .transform(TextOps.annealMixSchedule("source", phases = 2)).count()
     assert(sched === 4L)
-    val boil = Pipeline(Seq((1L, "g", "x\ny"), (2L, "g", "x\nz"))
-      .toDF("doc_id", "site", "text"))
-      .boilerplateLines("doc_id", "site", "text", minDocFrac = 0.9,
-        minDocs = 2).result
+    val boil = Seq((1L, "g", "x\ny"), (2L, "g", "x\nz"))
+      .toDF("doc_id", "site", "text")
+      .transform(TextOps.boilerplateLines("doc_id", "site", "text",
+        minDocFrac = 0.9, minDocs = 2))
       .select("n_removed").as[Long].collect().sum
     assert(boil === 2L) // "x" stripped from both docs
-    val te = Pipeline(Seq(("a", 1.0), ("a", 3.0)).toDF("c", "y"))
-      .targetEncode("c", "y", smoothing = 1.0).result
+    val te = Seq(("a", 1.0), ("a", 3.0)).toDF("c", "y")
+      .transform(Ops.targetEncode("c", "y", smoothing = 1.0))
       .select("y_te").as[Double].collect()
     assert(te.forall(v => v > 1.0 && v < 3.0))
-    val fh = Pipeline(Seq(Tuple1("v")).toDF("s"))
-      .featureHash(Seq("s"), dims = 4).result
+    val fh = Seq(Tuple1("v")).toDF("s")
+      .withColumn("features", Ops.featureHash(Seq("s"), dims = 4))
       .select("features").as[Seq[Double]].collect().head
     assert(fh.map(math.abs).sum === 1.0)
-    val lagged = Pipeline(Seq((1L, 1L, 2.0), (1L, 2L, 4.0)).toDF("k", "o", "v"))
-      .lagFeatures(Seq("k"), Seq("o"), "v", Seq(1)).result
+    val lagged = Seq((1L, 1L, 2.0), (1L, 2L, 4.0)).toDF("k", "o", "v")
+      .transform(WindowOps.lagFeatures(Seq("k"), Seq("o"), "v", Seq(1)))
       .select("v_lag_1").as[Option[Double]].collect().toSet
     assert(lagged === Set(None, Some(2.0)))
-    val cs = Pipeline(Seq((1L,
+    val cs = Seq((1L,
       java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), 1L, 30.0))
-      .toDF("k", "t", "tb", "v"))
-      .cusumShift("k", "t", "v", target = 10.0, slack = 0.0,
-        threshold = 5.0, tieBreak = "tb").result.head()
+      .toDF("k", "t", "tb", "v")
+      .transform(WindowOps.cusumShift("k", "t", "v", target = 10.0,
+        slack = 0.0, threshold = 5.0, tieBreak = "tb")).head()
     assert(cs.getAs[Boolean]("shift_flag"))
-    val zed = Pipeline(Seq((1L, 2L)).toDF("a", "b"))
-      .zorderRepartition("a", "b", partitions = 1).result.count()
+    val zed = Seq((1L, 2L)).toDF("a", "b")
+      .transform(Ops.zorderRepartition("a", "b", partitions = 1)).count()
     assert(zed === 1L)
-    val quar = Pipeline(Seq(Tuple1(Option.empty[Double])).toDF("v"))
-      .quarantine(Seq("v_set" -> col("v").isNotNull)).result
+    val quar = Seq(Tuple1(Option.empty[Double])).toDF("v")
+      .transform(Probes.quarantine(Seq("v_set" -> col("v").isNotNull)))
       .select("quarantine_reasons").as[String].collect().head
     assert(quar === "v_set")
-    // this session's additions ride the same façade
-    val auc = Pipeline(Seq((1.0, false), (2.0, true)).toDF("s", "l"))
-      .rocAuc(col("s"), col("l")).result.head()
+    val auc = Seq((1.0, false), (2.0, true)).toDF("s", "l")
+      .transform(Probes.rocAuc(col("s"), col("l"))).head()
     assert(auc.getAs[Double]("auc") === 1.0)
-    val ap = Pipeline(Seq((1.0, false), (2.0, true)).toDF("s", "l"))
-      .prAuc(col("s"), col("l")).result.head()
+    val ap = Seq((1.0, false), (2.0, true)).toDF("s", "l")
+      .transform(Probes.prAuc(col("s"), col("l"))).head()
     assert(ap.getAs[Double]("ap") === 1.0)
-    val ben = Pipeline(Seq(Tuple1(19.0)).toDF("v"))
-      .benfordDigits(col("v")).result.head()
+    val ben = Seq(Tuple1(19.0)).toDF("v")
+      .transform(Probes.benfordDigits(col("v"))).head()
     assert(ben.getAs[Int]("digit") === 1 && ben.getAs[Double]("share") === 1.0)
-    val tc = Pipeline(Seq(("g", "a"), ("g", "b")).toDF("q", "v"))
-      .tCloseness(Seq("q"), "v").result.head()
+    val tc = Seq(("g", "a"), ("g", "b")).toDF("q", "v")
+      .transform(Probes.tCloseness(Seq("q"), "v")).head()
     assert(tc.getAs[Double]("t_closeness") === 0.0)
-    val lp = Pipeline(Seq((1L, 2L), (2L, 3L)).toDF("s", "d"))
-      .linkPrediction("s", "d").result.head()
+    val lp = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
+      .transform(GraphOps.linkPrediction("s", "d")).head()
     assert(lp.getAs[Long]("common_neighbors") === 1L)
-    val hh = Pipeline(Seq((1L, 2L)).toDF("s", "d"))
-      .hits("s", "d").result.orderBy("node").collect()
+    val hh = Seq((1L, 2L)).toDF("s", "d")
+      .transform(GraphOps.hits("s", "d")).orderBy("node").collect()
     assert(hh.map(_.getAs[Double]("authority")).toSeq === Seq(0.0, 1.0))
-    val fs = Pipeline(Seq((1L, 2L, true)).toDF("id_a", "id_b", "ag"))
-      .fellegiSunter(Seq(("f", col("ag"), 0.8, 0.2)), 1.0, 0.0)
-      .result.head()
+    val fs = Seq((1L, 2L, true)).toDF("id_a", "id_b", "ag")
+      .transform(Dedup.fellegiSunter(Seq(("f", col("ag"), 0.8, 0.2)),
+        1.0, 0.0)).head()
     assert(fs.getAs[String]("fs_decision") === "match")
-    val ssj = Pipeline(Seq((1L, Seq("a", "b")), (2L, Seq("a", "b")))
-      .toDF("id", "toks"))
-      .setSimilarityJoin("id", "toks", 1.0).result.head()
+    val ssj = Seq((1L, Seq("a", "b")), (2L, Seq("a", "b")))
+      .toDF("id", "toks")
+      .transform(Dedup.setSimilarityJoin("id", "toks", 1.0)).head()
     assert(ssj.getAs[Double]("jaccard") === 1.0)
-    val holt = Pipeline(Seq((1L,
+    val holt = Seq((1L,
       java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), 1L, 3.0))
-      .toDF("k", "t", "tb", "v"))
-      .holtSmooth("k", "t", "v", alpha = 0.5, beta = 0.5, tieBreak = "tb")
-      .result.head()
+      .toDF("k", "t", "tb", "v")
+      .transform(WindowOps.holtSmooth("k", "t", "v", alpha = 0.5,
+        beta = 0.5, tieBreak = "tb")).head()
     assert(holt.getAs[Double]("forecast") === 3.0)
-    val rc = Pipeline((1 to 4).map(i => ("k", i, i.toDouble, 2.0 * i))
-      .toDF("g", "i", "x", "y"))
-      .rollingCorr(Seq("g"), Seq("i"), "x", "y", window = 3)
-      .result.orderBy(col("i").desc).head()
+    val rc = (1 to 4).map(i => ("k", i, i.toDouble, 2.0 * i))
+      .toDF("g", "i", "x", "y")
+      .transform(WindowOps.rollingCorr(Seq("g"), Seq("i"), "x", "y",
+        window = 3)).orderBy(col("i").desc).head()
     assert(math.abs(rc.getAs[Double]("corr") - 1.0) < 1e-12)
-    val bt = Pipeline(Seq((1L, 2L), (1L, 2L)).toDF("w", "l"))
-      .bradleyTerry("w", "l", iterations = 2)
-      .result.orderBy("item").collect()
+    val bt = Seq((1L, 2L), (1L, 2L)).toDF("w", "l")
+      .transform(Ops.bradleyTerry("w", "l", iterations = 2))
+      .orderBy("item").collect()
     assert(bt.map(_.getAs[Long]("wins")).toSeq === Seq(2L, 0L))
     assert(bt(1).getAs[Double]("strength") === 0.0)
-    val iso = Pipeline(Seq((0.1, true), (0.9, false)).toDF("s", "y"))
-      .isotonicCalibration(col("s"), col("y"))
-      .result.orderBy("bin").collect()
+    val iso = Seq((0.1, true), (0.9, false)).toDF("s", "y")
+      .transform(Probes.isotonicCalibration(col("s"), col("y")))
+      .orderBy("bin").collect()
     assert(iso.map(_.getAs[Double]("calibrated")).toSeq === Seq(0.5, 0.5))
     val fitPairs = (Seq.fill(10)((true, true)) ++
       Seq.fill(10)((false, false)) ++ Seq((true, false))).toDF("a", "b")
-    val fsFit = Pipeline(fitPairs)
-      .fellegiSunterFit(Seq(("fa", col("a")), ("fb", col("b"))),
-        iterations = 2)
-      .result.orderBy("comparison").collect()
+    val fsFit = fitPairs
+      .transform(Dedup.fellegiSunterFit(Seq(("fa", col("a")),
+        ("fb", col("b"))), iterations = 2))
+      .orderBy("comparison").collect()
     assert(fsFit.map(_.getString(0)).toSeq === Seq("fa", "fb"))
     assert(fsFit.forall(r => r.getAs[Double]("m") > 0 &&
       r.getAs[Double]("m") < 1))
-    val fsAuto = Pipeline(fitPairs)
-      .fellegiSunterAuto(Seq(("fa", col("a")), ("fb", col("b"))),
-        upperThreshold = 100.0, lowerThreshold = -100.0, iterations = 2)
-      .result
+    val fsAuto = fitPairs
+      .transform(Dedup.fellegiSunterAuto(Seq(("fa", col("a")),
+        ("fb", col("b"))), upperThreshold = 100.0,
+        lowerThreshold = -100.0, iterations = 2))
     assert(fsAuto.columns.contains("fs_score") &&
       fsAuto.filter(col("fs_decision") =!= "possible").count() === 0L)
-    val fk = Pipeline(Seq(("A", "x"), ("A", "x"), ("B", "y"), ("B", "y"))
-      .toDF("i", "l"))
-      .fleissKappa(col("i"), col("l")).result.head()
+    val fk = Seq(("A", "x"), ("A", "x"), ("B", "y"), ("B", "y"))
+      .toDF("i", "l")
+      .transform(Probes.fleissKappa(col("i"), col("l"))).head()
     assert(fk.getAs[Double]("kappa") === 1.0)
-    val bci = Pipeline((1 to 20).map(i => (i.toLong, 3.5)).toDF("k", "v"))
-      .bootstrapCI(col("k"), col("v"), reps = 20).result.head()
+    val bci = (1 to 20).map(i => (i.toLong, 3.5)).toDF("k", "v")
+      .transform(Probes.bootstrapCI(col("k"), col("v"), reps = 20)).head()
     assert(bci.getAs[Double]("ci_low") === 3.5 &&
       bci.getAs[Double]("ci_high") === 3.5)
-    val pt = Pipeline((1 to 20).map(i => (i.toLong, 1.0, 1.0))
-      .toDF("k", "a", "b"))
-      .permutationTest(col("k"), col("a"), col("b"), reps = 10)
-      .result.head()
+    val pt = (1 to 20).map(i => (i.toLong, 1.0, 1.0)).toDF("k", "a", "b")
+      .transform(Probes.permutationTest(col("k"), col("a"), col("b"),
+        reps = 10)).head()
     assert(pt.getAs[Double]("p_value") === 1.0) // zero diffs: every flip ties
   }
 }
