@@ -5,8 +5,8 @@ import scala.util.control.NonFatal
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR `SPARK_GRAFT_BENCH_REPS` times (default 3) and
   * prints one JSON line with per-query MEDIAN seconds (`queries`), the
-  * raw per-run vectors (`runs`), and the all-runs wall clock
-  * (`wall_sec`). Results are written to the `noop` DSv2 sink — a full
+  * raw per-run vectors (`runs`), the all-runs wall clock
+  * (`wall_sec`), and the queries with a failed timed rep (`failed`). Results are written to the `noop` DSv2 sink — a full
   * evaluation of every output row — because `.count()` lets Catalyst
   * prune unevaluated projections and would bench pure-projection
   * queries as bare scans.
@@ -27,13 +27,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(SparkEntry.NanosAsLongKey, "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = SparkEntry.sessionBuilder(cpus.toInt).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
@@ -115,8 +109,11 @@ object Bench {
       s"\"" + k + "\":" + ts.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
+    // a query with any failed timed rep, listed by name
+    val failed = results.collect { case (k, (_, _, ts)) if ts.contains(-1.0) => k }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"fresh_session":$fresh,"wall_sec":$wall,"queries":$qs,"mins":$mins,"runs":$runs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"fresh_session":$fresh,"wall_sec":$wall,"queries":$qs,"mins":$mins,"runs":$runs,"failed":${
+        failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(line)
     // Measurement-reporting fix (r20 VERDICT "What's wrong #1"),
     // additions only: the full line above is ~15 KB with 361 queries
@@ -126,7 +123,7 @@ object Bench {
     // parseable JSON. Same env vars, same master string, same timing
     // methodology, same queries, same full line.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":${
-      results.length},"reps":$reps,"cpus":"$cpus","fresh_session":$fresh,"wall_sec":$wall,"sf":"$sfDir"}""")
+      results.length},"failed":${failed.length},"reps":$reps,"cpus":"$cpus","fresh_session":$fresh,"wall_sec":$wall,"sf":"$sfDir"}""")
     // stdout capture has been observed to truncate the head of long JSON
     // lines (~90 per-query entries); persist the full vector to a file so
     // per-query timings always survive a round. BENCH_LATEST.json is
@@ -134,16 +131,20 @@ object Bench {
     // round-15 slip committed a 1-query solo re-measure as the closing
     // vector): a SPARK_GRAFT_BENCH_ONLY subset run writes
     // BENCH_SOLO.json instead, structurally unable to clobber it.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+    val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    val outPath = explicitOut.getOrElse(
       if (only.isDefined) "/root/repo/BENCH_SOLO.json"
       else "/root/repo/BENCH_LATEST.json")
     // The full vector ALSO lands in a per-core-count file
     // (BENCH_LATEST_c$cpus.json): the driver's low-core scaling run
     // re-invokes this main with a different $SPARK_GRAFT_CPUS and used
     // to overwrite the main-vector file, losing the full 32-core
-    // vector (r20: only a 34-query tail of the c32 run survived).
-    val cpusPath = outPath.stripSuffix(".json") + s"_c$cpus.json"
-    Seq(outPath, cpusPath).foreach { p =>
+    // vector (r20: only a 34-query tail of the c32 run survived). An
+    // explicit SPARK_GRAFT_BENCH_OUT is written alone.
+    val cpusPath =
+      if (explicitOut.isDefined) None
+      else Some(outPath.stripSuffix(".json") + s"_c$cpus.json")
+    (outPath +: cpusPath.toSeq).foreach { p =>
       try {
         val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
         try w.println(line) finally w.close()

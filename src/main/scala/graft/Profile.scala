@@ -1,6 +1,6 @@
 package graft
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
@@ -27,12 +27,7 @@ object Profile {
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(SparkEntry.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
+    val builder = SparkEntry.sessionBuilder(cpus.toInt)
     // A/B experiment hook: "key=value;key=value" extra session confs
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
       .map(_.trim).filter(_.contains('=')).foreach { kv =>
@@ -82,21 +77,24 @@ object Profile {
             m.memoryBytesSpilled / 1e6)
         }
       }
+      // deliver every posted stage event before the listener goes, so
+      // late rep-2 stages are not dropped
+      def detach(): Unit =
+        try ListenerBusDrain.drain(spark.sparkContext)
+        finally spark.sparkContext.removeSparkListener(listener)
       println(s"==== $name ====")
       try (1 to reps).foreach { r =>
         // listener active for rep 2 ONLY (r20 ADVICE: with reps > 2 it
         // used to aggregate stages from reps 2..N, contradicting the
         // per-stage table's "one rep" doc)
         if (r == 2) spark.sparkContext.addSparkListener(listener)
-        if (r == 3) { Thread.sleep(200)
-          spark.sparkContext.removeSparkListener(listener) }
+        if (r == 3) detach()
         System.gc()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"  rep$r%d wall: $dt%8.3f s")
-      } finally spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let stage-completed events drain
+      } finally detach()
       println(
         "  stageId     ms tasks  shufRdMB  shufWrMB     inRec    wrRec  spillMB  name")
       stages.sortBy(-_.ms).take(25).foreach { s =>

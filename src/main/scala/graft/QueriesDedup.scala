@@ -6,20 +6,38 @@ import graft.ext.{BinaryOps, Dedup, Frequency, GraphOps, Similarity, TextOps}
 import graft.ops.{Ops, TemporalOps, WindowOps}
 import graft.probes.Probes
 
-/** Exact/near/incremental dedup, span/line/url dedup, fuzzy linkage, and contamination queries — split from the ExtQueries monolith (round 14):
-  * same entries, same keys, byte-identical bodies; [[ExtQueries]]
-  * merges every family back into the single driver-facing map. */
+/** Dedup queries: exact/near/incremental, span/line/url, fuzzy linkage, contamination. */
 private[graft] object QueriesDedup {
   import SparkEntry.table
   import QueryHelpers._
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fingerprint_dedup" -> { (s, dir) =>
+  def registry: Seq[Query] = Seq(
+    Query("fingerprint_dedup",
+      """SELECT doc_id, lang,
+         md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS fingerprint
+         FROM documents
+         QUALIFY row_number() OVER (
+           PARTITION BY md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g'))
+           ORDER BY doc_id) = 1
+         ORDER BY doc_id""") { (s, dir) =>
       Dedup.exact(Seq("fingerprint"), "doc_id")(
         TextOps.withFingerprint("text")(corpus(s, dir, "documents")))
         .select("doc_id", "lang", "fingerprint").orderBy("doc_id")
     },
-    "decontaminate" -> { (s, dir) =>
+    Query("decontaminate", s"""
+      WITH bg AS (
+        SELECT DISTINCT md5(g) AS h FROM (
+          SELECT unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id < 100)),
+      cg AS (
+        SELECT DISTINCT doc_id FROM (
+          SELECT doc_id, md5(g) AS h FROM (
+            SELECT doc_id, unnest(${shinglesSql(8)}) AS g
+            FROM documents WHERE doc_id >= 100))
+        JOIN bg USING (h))
+      SELECT doc_id, lang FROM documents
+      WHERE doc_id >= 100 AND doc_id NOT IN (SELECT doc_id FROM cg)
+      ORDER BY doc_id""") { (s, dir) =>
       // docs < 100 stand in for the benchmark/eval set; the batch keeps
       // only docs sharing no 8-gram with it
       val docs = corpus(s, dir, "documents")
@@ -28,7 +46,7 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 100))
         .select("doc_id", "lang").orderBy("doc_id")
     },
-    "incremental_dedup" -> { (s, dir) =>
+    Query("incremental_dedup", IncrementalDedupSql) { (s, dir) =>
       // crawl N+1 against the crawl-N fingerprint index: docs < 250 are
       // "already ingested" (only their 16-byte fingerprints persist),
       // docs >= 250 are the new batch
@@ -39,7 +57,21 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 250))
         .select("doc_id", "lang").orderBy("doc_id")
     },
-    "dedup_map" -> { (s, dir) =>
+    // winner = min id per fingerprint group; one (dup, kept) row per
+    // non-winner — mirrors Dedup.duplicateMapByFingerprint
+    Query("dedup_map", """
+      WITH batch AS (
+        SELECT doc_id, text FROM documents
+        UNION ALL
+        SELECT doc_id + 100000 AS doc_id, text FROM documents
+        WHERE doc_id < 50),
+      f AS (SELECT doc_id,
+          md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS fp
+        FROM batch),
+      w AS (SELECT fp, CAST(min(doc_id) AS BIGINT) AS kept_id
+        FROM f GROUP BY fp)
+      SELECT f.doc_id AS dup_id, w.kept_id FROM f JOIN w USING (fp)
+      WHERE f.doc_id <> w.kept_id ORDER BY dup_id, kept_id""") { (s, dir) =>
       // a batch where docs < 50 arrive twice (re-crawl): the provenance
       // map re-points every replica to its canonical smallest-id copy
       val docs = corpus(s, dir, "documents")
@@ -48,7 +80,26 @@ private[graft] object QueriesDedup {
       Dedup.duplicateMapByFingerprint("text", "doc_id")(batch)
         .orderBy("dup_id", "kept_id")
     },
-    "contamination_report" -> { (s, dir) =>
+    // integer gram counts only — exact cross-engine, no float folds;
+    // zero-gram docs surface as (0, 0) via the outer join
+    Query("contamination_report", s"""
+      WITH bg AS (
+        SELECT DISTINCT md5(g) AS h FROM (
+          SELECT unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id < 100)),
+      grams AS (SELECT doc_id, md5(g) AS h FROM (
+          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id >= 100)),
+      agg AS (SELECT doc_id,
+          CAST(sum(CASE WHEN h IN (SELECT h FROM bg) THEN 1 ELSE 0 END) AS BIGINT)
+            AS matched_ngrams,
+          count(*) AS total_ngrams
+        FROM grams GROUP BY doc_id)
+      SELECT d.doc_id,
+        coalesce(agg.matched_ngrams, CAST(0 AS BIGINT)) AS matched_ngrams,
+        coalesce(agg.total_ngrams, CAST(0 AS BIGINT)) AS total_ngrams
+      FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
+      WHERE d.doc_id >= 100 ORDER BY d.doc_id""") { (s, dir) =>
       // the audit BEFORE decontaminate drops anything: per batch doc,
       // matched vs total distinct 8-gram digests against the benchmark
       val docs = corpus(s, dir, "documents")
@@ -57,7 +108,25 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 100))
         .orderBy("doc_id")
     },
-    "contamination_by_benchmark" -> { (s, dir) =>
+    // per-(doc, benchmark) match counts over distinct gram digests; only
+    // contaminated pairs emitted — mirrors
+    // TextOps.contaminationReportPerBenchmark (bench_id = lang carve)
+    Query("contamination_by_benchmark", s"""
+      WITH bg AS (
+        SELECT DISTINCT lang AS bench_id, md5(g) AS h FROM (
+          SELECT lang, unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id < 100)),
+      grams AS (SELECT doc_id, md5(g) AS h FROM (
+          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id >= 100)),
+      tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS total_ngrams
+        FROM grams GROUP BY doc_id),
+      m AS (SELECT doc_id, bench_id,
+          CAST(count(*) AS BIGINT) AS matched_ngrams
+        FROM grams JOIN bg USING (h) GROUP BY doc_id, bench_id)
+      SELECT m.doc_id, m.bench_id, m.matched_ngrams, t.total_ngrams
+      FROM m JOIN tot t ON m.doc_id = t.doc_id
+      ORDER BY m.doc_id, m.bench_id""") { (s, dir) =>
       // the per-benchmark breakdown: the eval carve (< 100) split into
       // one "benchmark" per language; matched counts attribute to the
       // benchmark, so one suite's grams can be dropped without dropping
@@ -70,7 +139,10 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 100))
         .orderBy("doc_id", "bench_id")
     },
-    "incremental_dedup_bloom" -> { (s, dir) =>
+    // the bloom prefilter is semantically transparent (false = proven
+    // absent; maybes fall through to the exact anti-join), so the oracle
+    // is incremental_dedup's, verbatim
+    Query("incremental_dedup_bloom", IncrementalDedupSql) { (s, dir) =>
       // same contract as incremental_dedup (oracle shared verbatim):
       // bloom prefilter proves most new docs absent without the join
       val docs = corpus(s, dir, "documents")
@@ -81,25 +153,50 @@ private[graft] object QueriesDedup {
         .select("doc_id", "lang").orderBy("doc_id")
     },
     // ---- dedup ------------------------------------------------------------
-    "dedup_exact" -> { (s, dir) =>
+    Query("dedup_exact",
+      """SELECT event_id, user_id, event_type, value FROM events
+         QUALIFY row_number() OVER (
+           PARTITION BY user_id, event_type ORDER BY event_id) = 1
+         ORDER BY user_id, event_type""") { (s, dir) =>
       Dedup.exact(Seq("user_id", "event_type"), "event_id")(
         table(s, dir, "events"))
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("user_id", "event_type")
     },
-    "minhash_pairs" -> { (s, dir) =>
+    Query("minhash_pairs", minhashNearDupSql(shingleN = 3, threshold = "2e-1")) { (s, dir) =>
       Dedup.minhashNearDuplicates("doc_id", "text", threshold = 0.2)(
         corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "minhash_pairs_oph" -> { (s, dir) =>
+    Query("minhash_pairs_oph", minhashNearDupOphSql(shingleN = 3,
+      threshold = "2e-1", numHashes = 16, bands = 4)) { (s, dir) =>
       // one md5 per shingle (vs one per 4 signature slots): the OPH
       // signature path that keeps k = 128+ sketching affordable
       Dedup.minhashNearDuplicatesOph("doc_id", "text", threshold = 0.2)(
         corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "simhash_pairs" -> { (s, dir) =>
+    Query("simhash_pairs", s"""
+      WITH hs AS (SELECT doc_id,
+        list_transform(list_distinct(string_split(text,' ')), t ->
+          CAST(list_sum(list_transform(range(1,16), j ->
+            (strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)
+            * CAST(16**(15-j) AS BIGINT))) AS BIGINT)) AS hs
+        FROM documents),
+      sig AS (SELECT doc_id,
+        CAST(list_sum(list_transform(range(0,60), b ->
+          CASE WHEN list_sum(list_transform(hs, h ->
+                 CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) >= 0
+               THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
+        FROM hs),
+      bk AS (SELECT doc_id, sig, sig >> 48 AS bucket FROM sig),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bk)
+      SELECT a.doc_id AS id_a, c.doc_id AS id_b,
+        CAST(bit_count(xor(a.sig, c.sig)) AS INTEGER) AS hamming
+      FROM sized a JOIN sized c ON a.bucket = c.bucket
+      WHERE a.doc_id < c.doc_id AND a.n <= 64
+        AND bit_count(xor(a.sig, c.sig)) <= 10
+      ORDER BY id_a, id_b""") { (s, dir) =>
       Dedup.simhashNearDuplicates("doc_id", "text", maxHamming = 10,
         prefixBits = 12)(corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
@@ -107,13 +204,14 @@ private[graft] object QueriesDedup {
     // n-gram (bigram) Jaccard near-dup, shipped as LSH candidates + exact
     // Jaccard verify — the blocked brute-force form is a unit-test-only
     // recall baseline (Dedup.ngramJaccardPairs).
-    "ngram_jaccard_pairs" -> { (s, dir) =>
+    Query("ngram_jaccard_pairs", minhashNearDupSql(shingleN = 2, threshold = "3e-1")) { (s, dir) =>
       Dedup.minhashNearDuplicates("doc_id", "text", threshold = 0.3,
         numHashes = 8, bands = 4, shingleSize = 2)(
         corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "dedup_eval" -> { (s, dir) =>
+    Query("dedup_eval", lshRecallEvalSql(shingleN = 3, threshold = "2e-1",
+      docFilter = "doc_id < 400", configs = Seq((8, 2), (8, 4), (16, 8)))) { (s, dir) =>
       // LSH operating-point tuning table on a bounded doc sample (the
       // exact-truth side is quadratic by nature — see lshRecallEval's
       // scaladoc): recall + candidate efficiency for three band
@@ -122,7 +220,35 @@ private[graft] object QueriesDedup {
         configs = Seq((8, 2), (8, 4), (16, 8)))(
         corpus(s, dir, "documents").filter(col("doc_id") < 400))
     },
-    "tfidf_cosine_pairs" -> { (s, dir) =>
+    // mirrors TextOps.tfidfCosinePairs: rational idf tf*(N+1)/(df+1),
+    // df > 64 dropped from the space, term-ordered float folds for the
+    // dot and norm sums (the bigram-LM order-pinning discipline)
+    Query("tfidf_cosine_pairs", """
+      WITH tf AS (SELECT doc_id, term, count(*) AS tf
+          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+                FROM documents WHERE doc_id < 400)
+          WHERE term <> '' GROUP BY doc_id, term),
+      dfreq AS (SELECT term, count(*) AS df FROM tf
+          GROUP BY term HAVING count(*) <= 64),
+      n AS (SELECT count(DISTINCT doc_id) AS n FROM documents
+            WHERE doc_id < 400),
+      w AS (SELECT doc_id, term,
+          CAST(tf * (n.n + 1) AS DOUBLE) / CAST(df + 1 AS DOUBLE) AS w
+        FROM tf JOIN dfreq USING (term) CROSS JOIN n),
+      norms AS (SELECT doc_id, sqrt(list_reduce(
+          list_prepend(CAST(0 AS DOUBLE), list(w * w ORDER BY term)),
+          (a, b) -> a + b)) AS nrm
+        FROM w GROUP BY doc_id),
+      dots AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
+          list_reduce(list_prepend(CAST(0 AS DOUBLE),
+            list(x.w * y.w ORDER BY x.term)), (a, b) -> a + b) AS dot
+        FROM w x JOIN w y ON x.term = y.term AND x.doc_id < y.doc_id
+        GROUP BY x.doc_id, y.doc_id)
+      SELECT id_a, id_b, dot / (a.nrm * b.nrm) AS cosine
+      FROM dots JOIN norms a ON dots.id_a = a.doc_id
+                JOIN norms b ON dots.id_b = b.doc_id
+      WHERE dot / (a.nrm * b.nrm) >= 3e-1
+      ORDER BY id_a, id_b""") { (s, dir) =>
       // sparse lexical similarity: rare-term overlap outranks stopword
       // overlap; df cap bounds the term join (see scaladoc). Bounded to
       // a constant doc sample: the fixture's ~40-word vocabulary pushes
@@ -133,7 +259,20 @@ private[graft] object QueriesDedup {
         corpus(s, dir, "documents").filter(col("doc_id") < 400))
         .orderBy("id_a", "id_b")
     },
-    "dedup_clusters" -> { (s, dir) =>
+    // components of the near-dup graph via recursive min-label closure —
+    // a pure function of the pair set, so it mirrors Spark's iterative
+    // label propagation exactly
+    Query("dedup_clusters", s"""
+      WITH RECURSIVE pairs AS (
+        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
+      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                UNION ALL SELECT id_b, id_a FROM pairs),
+      reach(node, lbl) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src)
+      SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
+      FROM reach GROUP BY node ORDER BY doc_id""") { (s, dir) =>
       val docs = corpus(s, dir, "documents")
       val pairs = Dedup.minhashNearDuplicates("doc_id", "text",
         threshold = 0.2)(docs).select("id_a", "id_b")
@@ -141,7 +280,27 @@ private[graft] object QueriesDedup {
         .select(col("node").as("doc_id"), col("lbl").as("cluster_rep"))
         .orderBy("doc_id")
     },
-    "fuzzy_key_pairs" -> { (s, dir) =>
+    // {self} ∪ del-1 variants (distinct), maxBucket=64 via the window
+    // count, pair-dedup before the levenshtein verify — mirrors
+    // Dedup.fuzzyKeyPairs exactly (levenshtein is integer-exact in both
+    // engines)
+    Query("fuzzy_key_pairs",
+      """WITH v AS (
+           SELECT c_custkey AS id, c_name AS key,
+             unnest(list_distinct(list_prepend(c_name,
+               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
+                 ELSE list_transform(range(1, length(c_name) + 1), i ->
+                   substr(c_name, 1, CAST(i - 1 AS INT))
+                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
+               END))) AS var
+           FROM customer WHERE c_name IS NOT NULL),
+         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
+         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+             a.key AS key_a, b.key AS key_b
+           FROM sized a JOIN sized b ON a.var = b.var
+           WHERE a.id < b.id AND a.n <= 64)
+         SELECT id_a, id_b FROM cand
+         WHERE levenshtein(key_a, key_b) <= 1 ORDER BY id_a, id_b""") { (s, dir) =>
       // entity resolution on customer names: every pair within one edit
       // (typo'd / off-by-one-digit ids), deletion-neighborhood blocked
       Dedup.fuzzyKeyPairs("c_custkey", "c_name")(
@@ -149,7 +308,28 @@ private[graft] object QueriesDedup {
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
     },
-    "jw_link_pairs" -> { (s, dir) =>
+    // same del-1 candidate CTEs, scored with DuckDB's builtin
+    // jaro_winkler_similarity — the native kernel is pinned
+    // bit-identical to it (both-empty → 0, boost only above 0.7), so
+    // the 0.9 float threshold selects identical pairs
+    Query("jw_link_pairs",
+      """WITH v AS (
+           SELECT c_custkey AS id, c_name AS key,
+             unnest(list_distinct(list_prepend(c_name,
+               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
+                 ELSE list_transform(range(1, length(c_name) + 1), i ->
+                   substr(c_name, 1, CAST(i - 1 AS INT))
+                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
+               END))) AS var
+           FROM customer WHERE c_name IS NOT NULL),
+         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
+         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+             a.key AS key_a, b.key AS key_b
+           FROM sized a JOIN sized b ON a.var = b.var
+           WHERE a.id < b.id AND a.n <= 64)
+         SELECT id_a, id_b, jaro_winkler_similarity(key_a, key_b) AS jw
+         FROM cand WHERE jaro_winkler_similarity(key_a, key_b) >= 9e-1
+         ORDER BY id_a, id_b""") { (s, dir) =>
       // same del-1 candidate set, scored with the graded Jaro–Winkler
       // kernel (bit-identical to DuckDB's builtin) instead of the
       // binary levenshtein gate
@@ -157,7 +337,22 @@ private[graft] object QueriesDedup {
         table(s, dir, "customer").select("c_custkey", "c_name"))
         .orderBy("id_a", "id_b")
     },
-    "set_sim_join" -> { (s, dir) =>
+    // the oracle is the BRUTE-FORCE all-pairs join the prefix filter
+    // provably equals: exact integer intersections, one division,
+    // same >= threshold gate — any missed or extra pair hash-fails
+    Query("set_sim_join", s"""
+      WITH d AS (SELECT doc_id, ${shinglesSql(3)} AS t
+          FROM documents WHERE text IS NOT NULL),
+      d2 AS (SELECT doc_id, t FROM d WHERE len(t) > 0),
+      p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          CAST(len(list_intersect(a.t, b.t)) AS BIGINT) AS ov,
+          CAST(len(a.t) AS BIGINT) AS na, CAST(len(b.t) AS BIGINT) AS nb
+        FROM d2 a JOIN d2 b ON a.doc_id < b.doc_id)
+      SELECT id_a, id_b,
+        CAST(ov AS DOUBLE) / CAST(na + nb - ov AS DOUBLE) AS jaccard
+      FROM p
+      WHERE CAST(ov AS DOUBLE) / CAST(na + nb - ov AS DOUBLE) >= 5e-1
+      ORDER BY id_a, id_b""") { (s, dir) =>
       // EXACT Jaccard >= 0.5 join on 3-gram shingles: prefix-filtered
       // (rarest-tokens-first buckets), zero recall loss — finds exactly
       // the planted near-dup pairs the LSH rungs find probabilistically
@@ -166,7 +361,50 @@ private[graft] object QueriesDedup {
           .withColumn("toks", TextOps.shingles(col("text"), 3)))
         .orderBy("id_a", "id_b")
     },
-    "fellegi_sunter" -> { (s, dir) =>
+    // same del-1 candidates + levenshtein gate, then the four
+    // Fellegi–Sunter CASE terms with litD'd Scala-computed log2(m/u)
+    // weights summed in the identical left-chain order
+    Query("fellegi_sunter", {
+      def w(m: Double, u: Double) =
+        (litD(math.log(m / u) / math.log(2.0)),
+          litD(math.log((1.0 - m) / (1.0 - u)) / math.log(2.0)))
+      val (nameA, nameD) = w(0.5, 0.001)
+      val (natA, natD) = w(0.95, 0.04)
+      val (segA, segD) = w(0.9, 0.2)
+      val (balA, balD) = w(0.8, 0.05)
+      def term(agree: String, wa: String, wd: String) =
+        s"CASE WHEN ($agree) IS NULL THEN CAST(0 AS DOUBLE) " +
+          s"WHEN $agree THEN $wa ELSE $wd END"
+      s"""WITH v AS (
+           SELECT c_custkey AS id, c_name AS key,
+             unnest(list_distinct(list_prepend(c_name,
+               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
+                 ELSE list_transform(range(1, length(c_name) + 1), i ->
+                   substr(c_name, 1, CAST(i - 1 AS INT))
+                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
+               END))) AS var
+           FROM customer WHERE c_name IS NOT NULL),
+         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
+         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+             a.key AS key_a, b.key AS key_b
+           FROM sized a JOIN sized b ON a.var = b.var
+           WHERE a.id < b.id AND a.n <= 64),
+         p AS (SELECT id_a, id_b, key_a, key_b FROM cand
+           WHERE levenshtein(key_a, key_b) <= 1),
+         s AS (SELECT id_a, id_b,
+             (((${term("key_a = key_b", nameA, nameD)}
+              + ${term("a.c_nationkey = b.c_nationkey", natA, natD)})
+              + ${term("a.c_mktsegment = b.c_mktsegment", segA, segD)})
+              + ${term("abs(a.c_acctbal - b.c_acctbal) < CAST(1000 AS DOUBLE)",
+                balA, balD)}) AS fs_score
+           FROM p JOIN customer a ON a.c_custkey = p.id_a
+                  JOIN customer b ON b.c_custkey = p.id_b)
+         SELECT id_a, id_b, fs_score,
+           CASE WHEN fs_score >= ${litD(6.0)} THEN 'match'
+                WHEN fs_score <= ${litD(0.0)} THEN 'non_match'
+                ELSE 'possible' END AS fs_decision
+         FROM s ORDER BY id_a, id_b"""
+    }) { (s, dir) =>
       // probabilistic linkage verdicts over the del-1 candidate set:
       // four field comparisons with driver-computed log2(m/u) weights,
       // thresholded into match / possible / non_match
@@ -189,7 +427,32 @@ private[graft] object QueriesDedup {
         .select("id_a", "id_b", "fs_score", "fs_decision")
         .orderBy("id_a", "id_b")
     },
-    "incremental_set_sim" -> { (s, dir) =>
+    // mirrors Dedup.incrementalSetSimilarity's drop criterion against
+    // the brute-force truth the prefix machinery provably equals:
+    // batch docs (id >= 300) drop on a true-jaccard >= 0.5 match to
+    // history (id < 300) or to a smaller-id batch doc; empty shingle
+    // sets generate no candidates and always survive
+    Query("incremental_set_sim", s"""
+      WITH d AS (SELECT doc_id, source, ${shinglesSql(3)} AS t
+          FROM documents WHERE text IS NOT NULL),
+      d2 AS (SELECT doc_id, source, t FROM d WHERE len(t) > 0),
+      h AS (SELECT * FROM d2 WHERE doc_id < 300),
+      b AS (SELECT * FROM d2 WHERE doc_id >= 300),
+      cl AS (SELECT DISTINCT y.doc_id FROM h x JOIN b y
+          ON x.doc_id <> y.doc_id
+          AND CAST(len(list_intersect(x.t, y.t)) AS DOUBLE)
+            / CAST(len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))
+                AS DOUBLE) >= 5e-1),
+      il AS (SELECT DISTINCT y.doc_id FROM b x JOIN b y
+          ON x.doc_id < y.doc_id
+          AND CAST(len(list_intersect(x.t, y.t)) AS DOUBLE)
+            / CAST(len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))
+                AS DOUBLE) >= 5e-1)
+      SELECT doc_id, source FROM d
+      WHERE doc_id >= 300
+        AND doc_id NOT IN (SELECT doc_id FROM cl)
+        AND doc_id NOT IN (SELECT doc_id FROM il)
+      ORDER BY doc_id""") { (s, dir) =>
       // the EXACT rung's crawl loop: history = docs < 300 (their
       // stored token-set index rows), batch = the rest; a batch doc
       // survives unless its TRUE jaccard reaches 0.5 against history
@@ -203,7 +466,17 @@ private[graft] object QueriesDedup {
         .select("doc_id", "source")
         .orderBy("doc_id")
     },
-    "fellegi_sunter_fit" -> { (s, dir) =>
+    // mirrors Dedup.fellegiSunterFit: γ pattern frame, 5 unrolled EM
+    // rounds (1-row parameter CTE cross-joined per round), pinned
+    // pattern-key folds, clamp/fallback M-step — IEEE-identical
+    Query("fellegi_sunter_fit", fellegiSunterFitSql(
+      "SELECT l_quantity, l_discount, l_tax, l_linenumber FROM lineitem",
+      Seq(
+        ("qty_hi", "l_quantity >= 25"),
+        ("disc_lo", "l_discount <= 5e-2"),
+        ("tax_lo",
+          "CASE WHEN l_linenumber % 7 = 0 THEN NULL ELSE l_tax <= 4e-2 END")),
+      iterations = 5)) { (s, dir) =>
       // the trainer for fellegi_sunter's hand-supplied m/u: 5 EM rounds
       // over lineitem-derived comparison vectors, every fold
       // order-pinned so the fitted doubles hash-match the unrolled
@@ -217,19 +490,62 @@ private[graft] object QueriesDedup {
         iterations = 5)(table(s, dir, "lineitem"))
         .orderBy("comparison")
     },
-    "embedding_dedup" -> { (s, dir) =>
+    // maxBucket=64 cap mirrored via the window count, exactly
+    // Dedup.embeddingNearDuplicates' between(2, maxBucket)
+    Query("embedding_dedup", s"""
+      WITH bucketed AS (SELECT vec_id, embedding, ${lshBucketSql()} AS bucket
+        FROM embeddings),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bucketed)
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        ${cosineSql("a.embedding", "b.embedding")} AS cosine
+      FROM sized a JOIN sized b ON a.bucket = b.bucket
+      WHERE a.vec_id < b.vec_id AND a.n <= 64
+        AND ${cosineSql("a.embedding", "b.embedding")} >= 4e-1
+      ORDER BY id_a, id_b""") { (s, dir) =>
       Dedup.embeddingNearDuplicates("vec_id", "embedding", threshold = 0.4,
         planes = 6, dim = 64)(corpus(s, dir, "embeddings"))
         .orderBy("id_a", "id_b")
     },
-    "embedding_dedup_multi" -> { (s, dir) =>
+    // two independent plane sets (offsets 0 and 6), candidate pairs
+    // deduplicated by the UNION before the exact-cosine verify —
+    // mirrors Dedup.embeddingNearDuplicates(tables = 2)
+    Query("embedding_dedup_multi", s"""
+      WITH b0 AS (SELECT vec_id, embedding, ${lshBucketSql(0)} AS bucket
+        FROM embeddings),
+      s0 AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM b0),
+      b1 AS (SELECT vec_id, embedding, ${lshBucketSql(6)} AS bucket
+        FROM embeddings),
+      s1 AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM b1),
+      cand AS (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        FROM s0 a JOIN s0 b ON a.bucket = b.bucket
+        WHERE a.vec_id < b.vec_id AND a.n <= 64
+        UNION
+        SELECT a.vec_id, b.vec_id
+        FROM s1 a JOIN s1 b ON a.bucket = b.bucket
+        WHERE a.vec_id < b.vec_id AND a.n <= 64),
+      scored AS (SELECT id_a, id_b,
+        ${cosineSql("a.embedding", "b.embedding")} AS cosine
+        FROM cand JOIN embeddings a ON cand.id_a = a.vec_id
+                  JOIN embeddings b ON cand.id_b = b.vec_id)
+      SELECT id_a, id_b, cosine FROM scored
+      WHERE cosine >= 4e-1 ORDER BY id_a, id_b""") { (s, dir) =>
       // 2 independent plane sets: recovers near pairs the single table's
       // hyperplane cuts split (recall asserted vs brute force in DedupSpec)
       Dedup.embeddingNearDuplicates("vec_id", "embedding", threshold = 0.4,
         planes = 6, dim = 64, tables = 2)(corpus(s, dir, "embeddings"))
         .orderBy("id_a", "id_b")
     },
-    "semantic_contamination" -> { (s, dir) =>
+    // per-SIDE bucket caps (window counts within each side), candidates
+    // only span corpus × eval — mirrors Dedup.semanticContaminationPairs
+    Query("semantic_contamination", s"""
+      WITH $semanticCandSql
+      SELECT cand.doc_id, cand.eval_id,
+        ${cosineSql("c.embedding", "e.embedding")} AS cosine
+      FROM cand JOIN embeddings c ON cand.doc_id = c.vec_id
+                JOIN embeddings e ON cand.eval_id = e.vec_id
+      WHERE ${cosineSql("c.embedding", "e.embedding")} >= 3e-1
+      ORDER BY doc_id, eval_id""") { (s, dir) =>
       // paraphrase-level decontamination audit: eval set = vec_id < 100,
       // corpus = the rest; candidates only ever span the two sides
       val emb = corpus(s, dir, "embeddings")
@@ -238,7 +554,15 @@ private[graft] object QueriesDedup {
         emb.filter(col("vec_id") >= 100), emb.filter(col("vec_id") < 100))
         .orderBy("doc_id", "eval_id")
     },
-    "semantic_decontaminate" -> { (s, dir) =>
+    Query("semantic_decontaminate", s"""
+      WITH $semanticCandSql,
+      flagged AS (SELECT DISTINCT cand.doc_id AS vec_id
+        FROM cand JOIN embeddings c ON cand.doc_id = c.vec_id
+                  JOIN embeddings e ON cand.eval_id = e.vec_id
+        WHERE ${cosineSql("c.embedding", "e.embedding")} >= 3e-1)
+      SELECT vec_id, label FROM embeddings
+      WHERE vec_id >= 100 AND vec_id NOT IN (SELECT vec_id FROM flagged)
+      ORDER BY vec_id""") { (s, dir) =>
       // the drop form: corpus rows cosine-close to ANY eval embedding
       // are removed, survivors keep their columns
       val emb = corpus(s, dir, "embeddings")
@@ -248,13 +572,44 @@ private[graft] object QueriesDedup {
         .select("vec_id", "label")
         .orderBy("vec_id")
     },
-    "winnow_fingerprints" -> { (s, dir) =>
+    Query("winnow_fingerprints", s"""
+      WITH g AS (SELECT doc_id,
+          list_transform(range(1, greatest(length(text) - 7, 1) + 1), i ->
+            ${hash32Sql("substr(text, CAST(i AS INT), 8)")}) AS grams
+        FROM documents),
+      w AS (SELECT doc_id,
+          list_distinct(list_transform(range(0, greatest(len(grams) - 4, 0) + 1), j ->
+            list_min(grams[CAST(j + 1 AS INT) : CAST(j + 4 AS INT)]))) AS fps
+        FROM g)
+      SELECT doc_id, unnest(fps) AS fp FROM w ORDER BY doc_id, fp""") { (s, dir) =>
       corpus(s, dir, "documents")
         .select(col("doc_id"),
           explode(TextOps.winnowFingerprints(col("text"), k = 8, w = 4)).as("fp"))
         .orderBy("doc_id", "fp")
     },
-    "winnow_pairs" -> { (s, dir) =>
+    // maxBucket=64 via the window count, exactly Dedup.winnowOverlapPairs'
+    // between(2, maxBucket); fingerprints are per-doc distinct, so the
+    // pair count is the number of SHARED fingerprints. The len(fps) >= 30
+    // floor mirrors the minShared size prefilter: sub-floor docs can never
+    // reach minShared shared fingerprints, and the bucket cap counts
+    // pair-eligible docs only.
+    Query("winnow_pairs", s"""
+      WITH g AS (SELECT doc_id,
+          list_transform(range(1, greatest(length(text) - 7, 1) + 1), i ->
+            ${hash32Sql("substr(text, CAST(i AS INT), 8)")}) AS grams
+        FROM documents),
+      w AS (SELECT doc_id,
+          list_distinct(list_transform(range(0, greatest(len(grams) - 4, 0) + 1), j ->
+            list_min(grams[CAST(j + 1 AS INT) : CAST(j + 4 AS INT)]))) AS fps
+        FROM g),
+      f AS (SELECT doc_id, unnest(fps) AS fp FROM w WHERE len(fps) >= 30),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY fp) AS n FROM f)
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        count(*) AS shared_fingerprints
+      FROM sized a JOIN sized b ON a.fp = b.fp
+      WHERE a.doc_id < b.doc_id AND a.n <= 64
+      GROUP BY 1, 2 HAVING count(*) >= 30
+      ORDER BY id_a, id_b""") { (s, dir) =>
       // shared-passage near-dup (MOSS): pairs sharing >= 30 winnowing
       // fingerprints (the 99.9th-percentile overlap on this corpus — the
       // dense shared vocabulary makes low counts ubiquitous), ubiquitous
@@ -263,7 +618,29 @@ private[graft] object QueriesDedup {
         minShared = 30, maxBucket = 64)(corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "containment_gate" -> { (s, dir) =>
+    // batch mirror of the streaming containment gate: distinct per-doc
+    // gram digests left-joined against the reference digest set, one
+    // integer hit/total ratio per doc (single IEEE division — exact
+    // cross-engine), zero-gram docs survive at 0.0 via the outer join
+    Query("containment_gate", s"""
+      WITH ref AS (SELECT DISTINCT md5(g) AS h FROM (
+          SELECT unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id < 100)),
+      dg AS (SELECT doc_id, md5(g) AS h FROM (
+          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
+          FROM documents WHERE doc_id >= 100)),
+      agg AS (SELECT doc_id,
+          CAST(count(*) AS BIGINT) AS total,
+          CAST(sum(CASE WHEN h IN (SELECT h FROM ref) THEN 1 ELSE 0 END)
+            AS BIGINT) AS hits
+        FROM dg GROUP BY doc_id),
+      sc AS (SELECT d.doc_id,
+          coalesce(CAST(a.hits AS DOUBLE) / CAST(a.total AS DOUBLE), 0.0)
+            AS containment
+        FROM (SELECT doc_id FROM documents WHERE doc_id >= 100) d
+        LEFT JOIN agg a USING (doc_id))
+      SELECT doc_id, containment FROM sc
+      WHERE containment < 0.5 ORDER BY doc_id""") { (s, dir) =>
       // the batch form of the streaming containment gate (same code
       // path — withWatermark is a no-op on batch): drop documents
       // whose distinct 8-gram digests are >= 50% contained in the
@@ -282,28 +659,39 @@ private[graft] object QueriesDedup {
         .select("doc_id", "containment")
         .orderBy("doc_id")
     },
-    "containment_pairs" -> { (s, dir) =>
+    // distinct 8-gram digests per doc (shinglesSql is already distinct),
+    // per-gram doc frequency as the bucket cap, ordered-pair shared
+    // counts, both containment directions from integer totals — mirrors
+    // Dedup.containmentPairs
+    Query("containment_pairs", containmentPairsSql(cutoff = None)) { (s, dir) =>
       // asymmetric quote/subset detection: a pair survives when either
       // doc's distinct 8-grams are >= 50% contained in the other's
       Dedup.containmentPairs("doc_id", "text", n = 8,
         threshold = 0.5)(corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "containment_pairs_sampled" -> { (s, dir) =>
+    // deterministic quarter of the digest space (leading 32 bits <
+    // 2^30) — mirrors Dedup.containmentPairs(gramFraction = 0.25)
+    Query("containment_pairs_sampled",
+      containmentPairsSql(cutoff = Some(1073741824L))) { (s, dir) =>
       // the 100 TB mode: same detector over a deterministic quarter of
       // the gram-digest space — the shuffle shrinks 4x before any agg
       Dedup.containmentPairs("doc_id", "text", n = 8,
         threshold = 0.5, gramFraction = 0.25)(corpus(s, dir, "documents"))
         .orderBy("id_a", "id_b")
     },
-    "duplicate_spans" -> { (s, dir) =>
+    // duplicated 8-gram gaps-and-islands — a new span starts where the
+    // gap between consecutive duplicated gram starts exceeds n
+    Query("duplicate_spans", dupSpansSql(8, minSpanTokens = 0)) { (s, dir) =>
       // exact-substring dedup audit: maximal token spans covered by
       // 8-grams occurring in >= 2 distinct documents
       TextOps.duplicateSpans("doc_id", "text", n = 8)(
         corpus(s, dir, "documents"))
         .orderBy("doc_id", "span_start")
     },
-    "duplicate_spans_min" -> { (s, dir) =>
+    // same, paragraph granularity: spans shorter than 12 tokens dropped
+    // AFTER island merging (mirrors duplicateSpans' minSpanTokens)
+    Query("duplicate_spans_min", dupSpansSql(8, minSpanTokens = 12)) { (s, dir) =>
       // paragraph granularity: short incidental overlaps (< 12 tokens)
       // dropped engine-side after island merging
       TextOps.duplicateSpans("doc_id", "text", n = 8, minDocs = 2,
@@ -311,13 +699,68 @@ private[graft] object QueriesDedup {
         corpus(s, dir, "documents"))
         .orderBy("doc_id", "span_start")
     },
-    "strip_duplicate_spans" -> { (s, dir) =>
+    // min-doc_id canon per duplicated digest; non-canon occurrences mark
+    // their n covered token positions for removal
+    Query("strip_duplicate_spans", s"""
+      WITH g AS (${posGramsSql(8)}),
+      canon AS (SELECT h, min(doc_id) AS keep FROM g
+        GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
+        FROM g JOIN canon ON g.h = canon.h AND g.doc_id <> canon.keep
+        CROSS JOIN range(0, 8) r(off)),
+      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
+        FROM (SELECT doc_id, string_split(text,' ') AS t,
+                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
+              FROM documents)),
+      kept AS (SELECT doc_id, tp, tok FROM toks
+        WHERE NOT EXISTS (SELECT 1 FROM rem
+          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
+      rebuilt AS (SELECT doc_id, count(*) AS kept,
+          string_agg(tok, ' ' ORDER BY tp) AS clean
+        FROM kept GROUP BY doc_id)
+      SELECT d.doc_id,
+        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
+        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
+        coalesce(r.clean, '') AS clean_text
+      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
+      ORDER BY d.doc_id""") { (s, dir) =>
       // apply form: min-doc_id canon keeps each duplicated passage once
       TextOps.stripDuplicateSpans("doc_id", "text", n = 8)(
         corpus(s, dir, "documents"))
         .orderBy("doc_id")
     },
-    "strip_contaminated_spans" -> { (s, dir) =>
+    // batch 8-grams matching the eval carve's distinct gram digests drop
+    // their covered span; rebuild identical to strip_duplicate_spans —
+    // mirrors TextOps.stripContaminatedSpans
+    Query("strip_contaminated_spans", s"""
+      WITH g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+          md5(array_to_string(t[CAST(i AS INT):CAST(i + 7 AS INT)], ' ')) AS h
+        FROM (SELECT doc_id, string_split(text,' ') AS t,
+                unnest(range(1, greatest(len(string_split(text,' ')) - 7, 0) + 1)) AS i
+              FROM documents WHERE doc_id >= 100)),
+      bench AS (SELECT DISTINCT md5(gr) AS h FROM (
+          SELECT unnest(${shinglesSql(8)}) AS gr
+          FROM documents WHERE doc_id < 100) b),
+      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
+        FROM g JOIN bench ON g.h = bench.h
+        CROSS JOIN range(0, 8) r(off)),
+      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
+        FROM (SELECT doc_id, string_split(text,' ') AS t,
+                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
+              FROM documents WHERE doc_id >= 100)),
+      kept AS (SELECT doc_id, tp, tok FROM toks
+        WHERE NOT EXISTS (SELECT 1 FROM rem
+          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
+      rebuilt AS (SELECT doc_id, count(*) AS kept,
+          string_agg(tok, ' ' ORDER BY tp) AS clean
+        FROM kept GROUP BY doc_id)
+      SELECT d.doc_id,
+        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
+        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
+        coalesce(r.clean, '') AS clean_text
+      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
+      WHERE d.doc_id >= 100
+      ORDER BY d.doc_id""") { (s, dir) =>
       // surgical decontamination: strip only the spans shared with the
       // eval carve (docs < 100), keep the rest of each batch doc
       val docs = corpus(s, dir, "documents")
@@ -326,14 +769,62 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 100))
         .orderBy("doc_id")
     },
-    "strip_self_repeats" -> { (s, dir) =>
+    // later in-doc occurrences of a trigram drop their covered span;
+    // rebuild identical to strip_duplicate_spans — mirrors
+    // TextOps.stripSelfRepeats
+    Query("strip_self_repeats", s"""
+      WITH g AS (${posGramsSql(3)}),
+      firsts AS (SELECT doc_id, h, min(pos) AS p0 FROM g
+        GROUP BY doc_id, h HAVING count(*) >= 2),
+      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
+        FROM g JOIN firsts f ON g.doc_id = f.doc_id AND g.h = f.h
+        CROSS JOIN range(0, 3) r(off)
+        WHERE g.pos > f.p0),
+      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
+        FROM (SELECT doc_id, string_split(text,' ') AS t,
+                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
+              FROM documents)),
+      kept AS (SELECT doc_id, tp, tok FROM toks
+        WHERE NOT EXISTS (SELECT 1 FROM rem
+          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
+      rebuilt AS (SELECT doc_id, count(*) AS kept,
+          string_agg(tok, ' ' ORDER BY tp) AS clean
+        FROM kept GROUP BY doc_id)
+      SELECT d.doc_id,
+        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
+        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
+        coalesce(r.clean, '') AS clean_text
+      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
+      ORDER BY d.doc_id""") { (s, dir) =>
       // in-doc looping/boilerplate cleanup: later occurrences of any
       // trigram within the same doc are stripped, first kept
       TextOps.stripSelfRepeats("doc_id", "text", n = 3)(
         corpus(s, dir, "documents"))
         .orderBy("doc_id")
     },
-    "line_dedup" -> { (s, dir) =>
+    // mirrors the line_dedup pre-lining (8-word lines via the same
+    // integer grid) then the CCNet removal contract: corpus-frequency
+    // >= 2 lines vanish EVERYWHERE (first occurrence too), blank
+    // lines never count, per-doc rebuild in line order
+    Query("line_dedup", """
+      WITH d AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t
+                 FROM documents),
+      l AS (SELECT doc_id, CAST(b AS BIGINT) AS lp,
+              array_to_string(
+                t[CAST(b*8+1 AS INT):CAST(b*8+8 AS INT)], ' ') AS line
+            FROM d, unnest(range(0, CAST(ceil(len(t)/8e0) AS INT))) AS u(b)),
+      h AS (SELECT line FROM l WHERE trim(line) <> ''
+            GROUP BY line HAVING count(*) >= 2),
+      k AS (SELECT l.doc_id, l.lp, l.line, h.line IS NOT NULL AS heavy
+            FROM l LEFT JOIN h ON l.line = h.line)
+      SELECT doc_id,
+        CAST(count(*) AS BIGINT) AS n_lines,
+        CAST(coalesce(sum(CASE WHEN heavy THEN 1 END), 0) AS BIGINT)
+          AS n_removed,
+        coalesce(array_to_string(
+          list(line ORDER BY lp) FILTER (WHERE NOT heavy), chr(10)), '')
+          AS clean_text
+      FROM k GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       // CCNet/RefinedWeb boilerplate pass: the word-soup corpus gains
       // line structure (8-word lines) via a deterministic re-join,
       // then any line appearing verbatim >= 2 times ACROSS the corpus
@@ -349,7 +840,38 @@ private[graft] object QueriesDedup {
       TextOps.dedupLines("doc_id", "text", minCount = 2)(lined)
         .orderBy("doc_id")
     },
-    "boilerplate_lines" -> { (s, dir) =>
+    // mirrors TextOps.boilerplateLines over the 2-word lining: document
+    // frequency per (source, line) — distinct docs, blank lines never
+    // count — heavy when df/group_docs >= 0.1 and the source has >= 10
+    // docs; per-doc rebuild in line order, heavy lines stripped
+    Query("boilerplate_lines", """
+      WITH d AS (SELECT doc_id, source,
+                   string_split(coalesce(text, ''), ' ') AS t
+                 FROM documents),
+      l AS (SELECT doc_id, source, CAST(b AS BIGINT) AS lp,
+              array_to_string(
+                t[CAST(b*2+1 AS INT):CAST(b*2+2 AS INT)], ' ') AS line
+            FROM d, unnest(range(0, CAST(ceil(len(t)/2e0) AS INT))) AS u(b)),
+      nd AS (SELECT source, count(*) AS group_docs FROM d GROUP BY source),
+      h AS (SELECT l.source, l.line
+            FROM l JOIN nd ON l.source = nd.source
+            WHERE trim(l.line) <> ''
+            GROUP BY l.source, l.line, nd.group_docs
+            HAVING nd.group_docs >= 10
+               AND CAST(count(DISTINCT l.doc_id) AS DOUBLE)
+                   / CAST(nd.group_docs AS DOUBLE) >= 1e-1),
+      k AS (SELECT l.doc_id, l.source, l.lp, l.line,
+              h.line IS NOT NULL AS heavy
+            FROM l LEFT JOIN h
+              ON l.source = h.source AND l.line = h.line)
+      SELECT doc_id, source,
+        CAST(count(*) AS BIGINT) AS n_lines,
+        CAST(coalesce(sum(CASE WHEN heavy THEN 1 END), 0) AS BIGINT)
+          AS n_removed,
+        coalesce(array_to_string(
+          list(line ORDER BY lp) FILTER (WHERE NOT heavy), chr(10)), '')
+          AS clean_text
+      FROM k GROUP BY doc_id, source ORDER BY doc_id""") { (s, dir) =>
       // per-SOURCE boilerplate (CCNet refinement of line_dedup): 2-word
       // lines via the deterministic re-join, stripped when present in
       // >= 10% of the SAME source's documents (site-local nav/footer
@@ -366,7 +888,8 @@ private[graft] object QueriesDedup {
         minDocFrac = 0.1, minDocs = 10)(lined)
         .orderBy("doc_id")
     },
-    "cross_corpus_pairs" -> { (s, dir) =>
+    Query("cross_corpus_pairs",
+      crossCorpusNearDupSql(shingleN = 3, threshold = "2e-1", splitId = 250)) { (s, dir) =>
       // near-dup the "new crawl" (>= 250) against the "reference corpus"
       // (< 250) — candidates only ever span the two sides
       val docs = corpus(s, dir, "documents")
@@ -374,7 +897,8 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250))
         .orderBy("id_a", "id_b")
     },
-    "incremental_near_dup" -> { (s, dir) =>
+    Query("incremental_near_dup",
+      incrementalNearDupSql(shingleN = 3, threshold = "5e-1", splitId = 250)) { (s, dir) =>
       // crawl N+1 near-dup'd against the ACCUMULATED corpus: docs < 250
       // persist only as MinHash signature index rows (no text); docs
       // >= 250 are the new batch, dropped when estimated Jaccard
@@ -387,7 +911,46 @@ private[graft] object QueriesDedup {
         docs.filter(col("doc_id") >= 250))
         .select("doc_id", "lang").orderBy("doc_id")
     },
-    "incremental_embedding_dedup" -> { (s, dir) =>
+    // int8 quantization identical to similarity_topk_q8; sign-LSH
+    // buckets computed ON THE CODES (the stored state); quantized
+    // cosine (integer dot/norms, one division) >= threshold drops a
+    // batch vector against index∪smaller-id-batch bucket-mates, capped
+    // buckets per side — mirrors Dedup.incrementalEmbeddingDedup
+    Query("incremental_embedding_dedup", s"""
+      WITH c AS (SELECT vec_id,
+          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax,
+          embedding FROM embeddings),
+      q8 AS (SELECT vec_id,
+          CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
+               ELSE list_transform(embedding, x ->
+                 CAST(floor(CAST(x AS DOUBLE) * 127 / amax + 5e-1) AS INT)) END AS codes
+        FROM c),
+      n AS (SELECT vec_id, codes,
+          CAST(list_sum(list_transform(codes, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS nn,
+          ${lshBucketSql(0, "codes")} AS bucket
+        FROM q8),
+      idx AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS bn
+        FROM n WHERE vec_id < 250),
+      bat AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS bn
+        FROM n WHERE vec_id >= 250),
+      cand AS (
+        SELECT i.codes AS ca, i.nn AS na, b.vec_id AS id_b,
+               b.codes AS cb, b.nn AS nb
+        FROM idx i JOIN bat b ON i.bucket = b.bucket
+        WHERE i.bn <= 64 AND b.bn <= 64 AND i.vec_id <> b.vec_id
+        UNION ALL
+        SELECT a.codes, a.nn, b.vec_id, b.codes, b.nn
+        FROM bat a JOIN bat b ON a.bucket = b.bucket
+        WHERE a.bn <= 64 AND a.vec_id < b.vec_id),
+      losers AS (SELECT DISTINCT id_b FROM cand
+        WHERE (CASE WHEN na = 0 OR nb = 0 THEN CAST(0 AS DOUBLE)
+               ELSE CAST(CAST(list_sum(list_transform(range(1, len(ca) + 1), j ->
+                   CAST(ca[CAST(j AS INT)] AS BIGINT) * cb[CAST(j AS INT)])) AS BIGINT) AS DOUBLE)
+                 / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) END) >= 4e-1)
+      SELECT e.vec_id, e.label FROM embeddings e
+      WHERE e.vec_id >= 250
+        AND e.vec_id NOT IN (SELECT id_b FROM losers)
+      ORDER BY e.vec_id""") { (s, dir) =>
       // the embedding analog: vectors < 250 persist only as int8 code
       // index rows (no floats); vectors >= 250 are the new batch,
       // dropped when quantized cosine >= 0.4 against a bucket-sharing
@@ -399,7 +962,27 @@ private[graft] object QueriesDedup {
         threshold = 0.4)(e.filter(col("vec_id") >= 250))
         .select("vec_id", "label").orderBy("vec_id")
     },
-    "semantic_dedup" -> { (s, dir) =>
+    // LSH near-dup pairs -> recursive min-label closure -> min-id
+    // survivors — mirrors Dedup.semanticDedup (pair generation identical
+    // to the embedding_dedup oracle, closure identical to dedup_clusters)
+    Query("semantic_dedup", s"""
+      WITH RECURSIVE bucketed AS (SELECT vec_id, embedding, ${lshBucketSql()} AS bucket
+        FROM embeddings),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bucketed),
+      p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        FROM sized a JOIN sized b ON a.bucket = b.bucket
+        WHERE a.vec_id < b.vec_id AND a.n <= 64
+          AND ${cosineSql("a.embedding", "b.embedding")} >= 4e-1),
+      edges AS (SELECT id_a AS src, id_b AS dst FROM p
+                UNION ALL SELECT id_b, id_a FROM p),
+      reach(node, lbl) AS (
+        SELECT vec_id, vec_id FROM embeddings
+        UNION
+        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
+      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node)
+      SELECT e.vec_id, e.label FROM embeddings e
+      JOIN comp c ON e.vec_id = c.node
+      WHERE c.lbl = c.node ORDER BY e.vec_id""") { (s, dir) =>
       // SemDeDup shape: LSH near-dup pairs -> connected components ->
       // min-id survivor per embedding cluster
       Dedup.semanticDedup("vec_id", "embedding", threshold = 0.4,
@@ -407,7 +990,28 @@ private[graft] object QueriesDedup {
         .select("vec_id", "label")
         .orderBy("vec_id")
     },
-    "cluster_dedup_best" -> { (s, dir) =>
+    // quality-weighted keeper per near-dup cluster (ties -> min doc_id);
+    // cluster label closure identical to dedup_clusters, quality
+    // expression identical to quality_score (bit-exact ORDER BY)
+    Query("cluster_dedup_best", s"""
+      WITH RECURSIVE pr AS (
+        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
+      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
+                UNION ALL SELECT id_b, id_a FROM pr),
+      reach(node, lbl) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
+      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node),
+      q AS ($qualityPerDocSql),
+      ranked AS (SELECT comp.node AS doc_id, comp.lbl,
+          count(*) OVER (PARTITION BY comp.lbl) AS cluster_size,
+          row_number() OVER (PARTITION BY comp.lbl
+            ORDER BY q.quality DESC, comp.node ASC) AS rn
+        FROM comp JOIN q ON comp.node = q.doc_id)
+      SELECT d.doc_id, d.source, CAST(r.cluster_size AS BIGINT) AS cluster_size
+      FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
+      WHERE r.rn = 1 ORDER BY d.doc_id""") { (s, dir) =>
       // quality-weighted canonical election: of each near-dup cluster
       // keep the highest-quality doc (ties -> min doc_id), not min-id
       val docs = corpus(s, dir, "documents")
@@ -416,7 +1020,31 @@ private[graft] object QueriesDedup {
         .select("doc_id", "source", "cluster_size")
         .orderBy("doc_id")
     },
-    "cluster_safe_split" -> { (s, dir) =>
+    // cluster closure identical to dedup_clusters; split cutoffs
+    // identical to train_split but hashed on the CLUSTER label —
+    // mirrors Dedup.clusterSafeSplit
+    Query("cluster_safe_split", s"""
+      WITH RECURSIVE pr AS (
+        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
+      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
+                UNION ALL SELECT id_b, id_a FROM pr),
+      reach(node, lbl) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
+      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node),
+      hashed AS (SELECT node, lbl,
+          list_sum(list_transform(range(1,9), j ->
+            (strpos('0123456789abcdef',
+               substr(md5(CAST(lbl AS VARCHAR)), j, 1)) - 1)
+            * CAST(16**(8-j) AS BIGINT))) AS h
+        FROM comp)
+      SELECT node AS doc_id, CAST(lbl AS BIGINT) AS cluster_rep,
+        CASE WHEN h < 3435973836 THEN 'train'
+             WHEN h < 3865470566 THEN 'val'
+             WHEN h < 4294967296 THEN 'test'
+             ELSE 'train' END AS split
+      FROM hashed ORDER BY doc_id""") { (s, dir) =>
       // leakage-safe split: near-dup clusters can never straddle splits
       Dedup.clusterSafeSplit("doc_id", "text",
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
@@ -424,7 +1052,28 @@ private[graft] object QueriesDedup {
         .select("doc_id", "cluster_rep", "split")
         .orderBy("doc_id")
     },
-    "duplicate_span_mask" -> { (s, dir) =>
+    // min-doc_id canon per duplicated digest (the strip oracle's rem
+    // set); mask = NOT removed, per token position
+    Query("duplicate_span_mask", s"""
+      WITH g AS (${posGramsSql(8)}),
+      canon AS (SELECT h, min(doc_id) AS keep FROM g
+        GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
+        FROM g JOIN canon ON g.h = canon.h AND g.doc_id <> canon.keep
+        CROSS JOIN range(0, 8) r(off)),
+      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp,
+          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        FROM (SELECT doc_id, text,
+                unnest(range(1, len(string_split(text, ' ')) + 1)) AS i
+              FROM documents)),
+      m AS (SELECT t.doc_id, t.n_tokens, t.tp,
+          CASE WHEN rem.tp IS NULL THEN 1 ELSE 0 END AS keep
+        FROM toks t LEFT JOIN rem
+          ON rem.doc_id = t.doc_id AND rem.tp = t.tp)
+      SELECT doc_id, n_tokens,
+        CAST(sum(1 - keep) OVER (PARTITION BY doc_id) AS BIGINT) AS n_masked,
+        tp AS token_pos, CAST(keep AS INT) AS keep
+      FROM m ORDER BY doc_id, token_pos""") { (s, dir) =>
       // the loss-mask form of span dedup: text untouched, per-token
       // keep flags exploded to rows for the compare
       TextOps.duplicateSpanMask("doc_id", "text", n = 8)(
@@ -435,7 +1084,33 @@ private[graft] object QueriesDedup {
           col("pos").cast("long").as("token_pos"), col("col").as("keep"))
         .orderBy("doc_id", "token_pos")
     },
-    "fuzzy_join" -> { (s, dir) =>
+    // the del-1 variant blocking mirrored with SIDES: candidates only
+    // span master × dirty, combined bucket population capped, the same
+    // bit-pinned jaro_winkler_similarity verifies
+    Query("fuzzy_join", """
+      WITH m AS (SELECT 0 AS side, c_custkey AS id, c_name AS key
+                 FROM customer WHERE c_name IS NOT NULL
+            UNION ALL
+            SELECT 1, c_custkey + 1000000,
+                   substr(c_name, 1, length(c_name) - 1)
+            FROM customer WHERE c_name IS NOT NULL),
+      v AS (SELECT side, id, key,
+              unnest(list_distinct(list_prepend(key,
+                CASE WHEN length(key) = 0 THEN CAST([] AS VARCHAR[])
+                  ELSE list_transform(range(1, length(key) + 1), i ->
+                    substr(key, 1, CAST(i - 1 AS INT))
+                    || substr(key, CAST(i + 1 AS INT), length(key)))
+                END))) AS var
+            FROM m),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
+      cand AS (SELECT DISTINCT a.id AS left_id, b.id AS right_id,
+          a.key AS key_left, b.key AS key_right
+        FROM sized a JOIN sized b ON a.var = b.var
+        WHERE a.side = 0 AND b.side = 1 AND a.n <= 64)
+      SELECT left_id, right_id, key_left, key_right,
+        jaro_winkler_similarity(key_left, key_right) AS jw
+      FROM cand WHERE jaro_winkler_similarity(key_left, key_right) >= 9e-1
+      ORDER BY left_id, right_id""") { (s, dir) =>
       // cross-catalog record linkage: a "dirty export" derived from
       // customer (shifted ids, last name char dropped) links back to
       // the master table through del-1 blocking + the JW scorer —
@@ -449,7 +1124,25 @@ private[graft] object QueriesDedup {
         minJw = 0.9)(master)
         .orderBy("left_id", "right_id")
     },
-    "phonetic_pairs" -> { (s, dir) =>
+    Query("phonetic_pairs", s"""
+      WITH w AS (SELECT p_name AS word,
+          min(p_partkey) AS word_id FROM part GROUP BY 1),
+      k AS (SELECT word_id AS id, word AS key,
+          upper(regexp_replace(word, '[^A-Za-z]', '', 'g')) AS cl
+        FROM w WHERE word IS NOT NULL),
+      cod AS (SELECT id, key, ${soundexSql("cl")} AS code
+        FROM k WHERE length(cl) > 0),
+      sized AS (SELECT *, count(*) OVER (PARTITION BY code) AS n
+        FROM cod),
+      cand AS (SELECT a.id AS id_a, b.id AS id_b,
+          a.key AS key_a, b.key AS key_b
+        FROM sized a JOIN sized b
+          ON a.code = b.code AND a.id < b.id AND a.key <> b.key
+        WHERE a.n BETWEEN 2 AND 64)
+      SELECT id_a, id_b, key_a, key_b,
+        jaro_winkler_similarity(key_a, key_b) AS jw
+      FROM cand WHERE jaro_winkler_similarity(key_a, key_b) >= 6e-1
+      ORDER BY id_a, id_b""") { (s, dir) =>
       // phonetic record linkage over the distinct part names:
       // soundex blocking + native Jaro–Winkler verify — the
       // sounds-alike pairs del-1 blocking is structurally blind to
@@ -460,7 +1153,31 @@ private[graft] object QueriesDedup {
         .orderBy("id_a", "id_b")
     },
     // ---- binary / multimodal ----------------------------------------------
-    "url_dedup" -> { (s, dir) =>
+    // the noisy construction replayed verbatim, but the canonical key
+    // computed ARITHMETICALLY (never through the regex chain) — the
+    // keeper is the min-id row per canonical key, Dedup.exact's
+    // election with doc_id as tie-break
+    Query("url_dedup", """
+      WITH u AS (SELECT doc_id,
+          (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'http://' END) ||
+          (CASE WHEN doc_id % 4 = 0 THEN 'Example' ELSE 'example' END) ||
+          CAST(doc_id % 7 AS VARCHAR) || '.com' ||
+          (CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END) ||
+          '/p/' || CAST(doc_id % 40 AS VARCHAR) ||
+          (CASE WHEN doc_id % 2 = 1 THEN '/' ELSE '' END) ||
+          (CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed'
+                WHEN doc_id % 3 = 1 THEN '?utm_campaign=a&gclid=xyz'
+                ELSE '' END) ||
+          (CASE WHEN doc_id % 11 = 0 THEN '#sec' ELSE '' END) AS url,
+          'http://example' || CAST(doc_id % 7 AS VARCHAR) || '.com/p/' ||
+            CAST(doc_id % 40 AS VARCHAR) AS canonical_url
+        FROM documents),
+      r AS (SELECT doc_id, url, canonical_url,
+          row_number() OVER (PARTITION BY canonical_url ORDER BY doc_id)
+            AS rn
+        FROM u)
+      SELECT doc_id, url, canonical_url FROM r WHERE rn = 1
+      ORDER BY doc_id""") { (s, dir) =>
       // crawl-frontier dedup on the canonical URL: five noise axes
       // (scheme case, host case, default port, tracking params,
       // trailing slash, fragment) dress the same logical page in up to
@@ -483,7 +1200,13 @@ private[graft] object QueriesDedup {
         corpus(s, dir, "documents").select(id, url.as("url")))
         .orderBy("doc_id")
     },
-    "perceptual_hash_pairs" -> { (s, dir) =>
+    // 60-bit perceptual hashes over 61 stride-sampled bytes (ASCII
+    // fixture: ord by char == byte value): aHash = integer mean test
+    // sample*60 >= sum, dHash = gradient sample(k+1) > sample(k); both
+    // with the 4x15-bit banded LSH, per-bucket cap, popcount verify —
+    // mirror BinaryOps.aHash60 / dHash60 / perceptualHashPairs
+    Query("perceptual_hash_pairs",
+      perceptualPairsSql(dHash = false, maxHamming = 10)) { (s, dir) =>
       // perceptual (aHash) near-dup over the binary column: banded LSH
       // on the 60-bit hash, popcount verify. The fixture carries no
       // byte-identical blobs (hamming-0 pairs), so the verified query
@@ -495,7 +1218,8 @@ private[graft] object QueriesDedup {
           .select(col("doc_id"), BinaryOps.toBlob(col("text")).as("blob")))
         .orderBy("id_a", "id_b")
     },
-    "perceptual_hash_pairs_dhash" -> { (s, dir) =>
+    Query("perceptual_hash_pairs_dhash",
+      perceptualPairsSql(dHash = true, maxHamming = 20)) { (s, dir) =>
       // the gradient flavor: bit k is sample(k+1) > sample(k) — robust
       // under constant byte shifts; same bands/verify as the aHash
       // form, radius 20 because gradient bits flip more readily on
@@ -506,7 +1230,47 @@ private[graft] object QueriesDedup {
           .select(col("doc_id"), BinaryOps.toBlob(col("text")).as("blob")))
         .orderBy("id_a", "id_b")
     },
-    "incremental_phash_dedup" -> { (s, dir) =>
+    // same aHash pipeline split into an index half (doc_id < 250) and a
+    // batch half; per-side banded buckets with the 64 cap, exact
+    // popcount verify, batch blob dropped on any in-radius index
+    // neighbor or smaller-id batch neighbor — mirrors
+    // BinaryOps.incrementalPerceptualDedup
+    Query("incremental_phash_dedup", """
+      WITH s AS (SELECT doc_id, length(text) AS n,
+          list_transform(range(0, 61), k ->
+            CAST(ord(substr(text, CAST((k * length(text)) // 61 AS INT) + 1, 1))
+              AS BIGINT)) AS ss
+        FROM documents),
+      t AS (SELECT doc_id, n, ss,
+          CAST(list_sum(ss[1:60]) AS BIGINT) AS total FROM s),
+      h AS (SELECT doc_id,
+          CASE WHEN n = 0 THEN CAST(0 AS BIGINT)
+               ELSE CAST(list_sum(list_transform(range(0, 60), k ->
+                 CASE WHEN ss[CAST(k + 1 AS INT)] * 60 >= total
+                      THEN (CAST(1 AS BIGINT) << CAST(k AS INT))
+                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT)
+          END AS ph FROM t),
+      zi AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bn
+        FROM (SELECT doc_id, ph, u.b AS band,
+                (ph >> (u.b * 15)) & 32767 AS bucket
+              FROM h, unnest([0, 1, 2, 3]) u(b) WHERE doc_id < 250)),
+      zb AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bn
+        FROM (SELECT doc_id, ph, u.b AS band,
+                (ph >> (u.b * 15)) & 32767 AS bucket
+              FROM h, unnest([0, 1, 2, 3]) u(b) WHERE doc_id >= 250)),
+      losers AS (
+        SELECT DISTINCT b.doc_id AS id_b
+        FROM zi a JOIN zb b ON a.band = b.band AND a.bucket = b.bucket
+        WHERE a.bn <= 64 AND b.bn <= 64 AND a.doc_id <> b.doc_id
+          AND bit_count(xor(a.ph, b.ph)) <= 10
+        UNION
+        SELECT b.doc_id
+        FROM zb a JOIN zb b ON a.band = b.band AND a.bucket = b.bucket
+        WHERE a.bn <= 64 AND b.bn <= 64 AND a.doc_id < b.doc_id
+          AND bit_count(xor(a.ph, b.ph)) <= 10)
+      SELECT d.doc_id, d.lang FROM documents d
+      WHERE d.doc_id >= 250 AND d.doc_id NOT IN (SELECT id_b FROM losers)
+      ORDER BY d.doc_id""") { (s, dir) =>
       // crawl N+1 perceptual-dedup'd against the ACCUMULATED corpus:
       // blobs with doc_id < 250 persist only as (id, phash) index rows
       // (no media bytes); doc_id >= 250 is the new batch, dropped when
@@ -548,823 +1312,4 @@ private[graft] object QueriesDedup {
         FROM cps6 c JOIN evs6 e ON c.bucket = e.bucket
         WHERE c.n <= 64 AND e.n <= 64)"""
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "fingerprint_dedup" ->
-      """SELECT doc_id, lang,
-         md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS fingerprint
-         FROM documents
-         QUALIFY row_number() OVER (
-           PARTITION BY md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g'))
-           ORDER BY doc_id) = 1
-         ORDER BY doc_id""",
-    // batch mirror of the streaming containment gate: distinct per-doc
-    // gram digests left-joined against the reference digest set, one
-    // integer hit/total ratio per doc (single IEEE division — exact
-    // cross-engine), zero-gram docs survive at 0.0 via the outer join
-    "containment_gate" -> s"""
-      WITH ref AS (SELECT DISTINCT md5(g) AS h FROM (
-          SELECT unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id < 100)),
-      dg AS (SELECT doc_id, md5(g) AS h FROM (
-          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id >= 100)),
-      agg AS (SELECT doc_id,
-          CAST(count(*) AS BIGINT) AS total,
-          CAST(sum(CASE WHEN h IN (SELECT h FROM ref) THEN 1 ELSE 0 END)
-            AS BIGINT) AS hits
-        FROM dg GROUP BY doc_id),
-      sc AS (SELECT d.doc_id,
-          coalesce(CAST(a.hits AS DOUBLE) / CAST(a.total AS DOUBLE), 0.0)
-            AS containment
-        FROM (SELECT doc_id FROM documents WHERE doc_id >= 100) d
-        LEFT JOIN agg a USING (doc_id))
-      SELECT doc_id, containment FROM sc
-      WHERE containment < 0.5 ORDER BY doc_id""",
-    "decontaminate" -> s"""
-      WITH bg AS (
-        SELECT DISTINCT md5(g) AS h FROM (
-          SELECT unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id < 100)),
-      cg AS (
-        SELECT DISTINCT doc_id FROM (
-          SELECT doc_id, md5(g) AS h FROM (
-            SELECT doc_id, unnest(${shinglesSql(8)}) AS g
-            FROM documents WHERE doc_id >= 100))
-        JOIN bg USING (h))
-      SELECT doc_id, lang FROM documents
-      WHERE doc_id >= 100 AND doc_id NOT IN (SELECT doc_id FROM cg)
-      ORDER BY doc_id""",
-    // integer gram counts only — exact cross-engine, no float folds;
-    // zero-gram docs surface as (0, 0) via the outer join
-    "contamination_report" -> s"""
-      WITH bg AS (
-        SELECT DISTINCT md5(g) AS h FROM (
-          SELECT unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id < 100)),
-      grams AS (SELECT doc_id, md5(g) AS h FROM (
-          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id >= 100)),
-      agg AS (SELECT doc_id,
-          CAST(sum(CASE WHEN h IN (SELECT h FROM bg) THEN 1 ELSE 0 END) AS BIGINT)
-            AS matched_ngrams,
-          count(*) AS total_ngrams
-        FROM grams GROUP BY doc_id)
-      SELECT d.doc_id,
-        coalesce(agg.matched_ngrams, CAST(0 AS BIGINT)) AS matched_ngrams,
-        coalesce(agg.total_ngrams, CAST(0 AS BIGINT)) AS total_ngrams
-      FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-      WHERE d.doc_id >= 100 ORDER BY d.doc_id""",
-    // per-(doc, benchmark) match counts over distinct gram digests; only
-    // contaminated pairs emitted — mirrors
-    // TextOps.contaminationReportPerBenchmark (bench_id = lang carve)
-    "contamination_by_benchmark" -> s"""
-      WITH bg AS (
-        SELECT DISTINCT lang AS bench_id, md5(g) AS h FROM (
-          SELECT lang, unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id < 100)),
-      grams AS (SELECT doc_id, md5(g) AS h FROM (
-          SELECT doc_id, unnest(${shinglesSql(8)}) AS g
-          FROM documents WHERE doc_id >= 100)),
-      tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS total_ngrams
-        FROM grams GROUP BY doc_id),
-      m AS (SELECT doc_id, bench_id,
-          CAST(count(*) AS BIGINT) AS matched_ngrams
-        FROM grams JOIN bg USING (h) GROUP BY doc_id, bench_id)
-      SELECT m.doc_id, m.bench_id, m.matched_ngrams, t.total_ngrams
-      FROM m JOIN tot t ON m.doc_id = t.doc_id
-      ORDER BY m.doc_id, m.bench_id""",
-    "incremental_dedup" -> IncrementalDedupSql,
-    // the bloom prefilter is semantically transparent (false = proven
-    // absent; maybes fall through to the exact anti-join), so the oracle
-    // is incremental_dedup's, verbatim
-    "incremental_dedup_bloom" -> IncrementalDedupSql,
-    "dedup_exact" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-         QUALIFY row_number() OVER (
-           PARTITION BY user_id, event_type ORDER BY event_id) = 1
-         ORDER BY user_id, event_type""",
-    // winner = min id per fingerprint group; one (dup, kept) row per
-    // non-winner — mirrors Dedup.duplicateMapByFingerprint
-    "dedup_map" -> """
-      WITH batch AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 100000 AS doc_id, text FROM documents
-        WHERE doc_id < 50),
-      f AS (SELECT doc_id,
-          md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS fp
-        FROM batch),
-      w AS (SELECT fp, CAST(min(doc_id) AS BIGINT) AS kept_id
-        FROM f GROUP BY fp)
-      SELECT f.doc_id AS dup_id, w.kept_id FROM f JOIN w USING (fp)
-      WHERE f.doc_id <> w.kept_id ORDER BY dup_id, kept_id""",
-    "minhash_pairs" -> minhashNearDupSql(shingleN = 3, threshold = "2e-1"),
-    "minhash_pairs_oph" -> minhashNearDupOphSql(shingleN = 3,
-      threshold = "2e-1", numHashes = 16, bands = 4),
-    // components of the near-dup graph via recursive min-label closure —
-    // a pure function of the pair set, so it mirrors Spark's iterative
-    // label propagation exactly
-    "dedup_clusters" -> s"""
-      WITH RECURSIVE pairs AS (
-        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL SELECT id_b, id_a FROM pairs),
-      reach(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src)
-      SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_rep
-      FROM reach GROUP BY node ORDER BY doc_id""",
-    "simhash_pairs" -> s"""
-      WITH hs AS (SELECT doc_id,
-        list_transform(list_distinct(string_split(text,' ')), t ->
-          CAST(list_sum(list_transform(range(1,16), j ->
-            (strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)
-            * CAST(16**(15-j) AS BIGINT))) AS BIGINT)) AS hs
-        FROM documents),
-      sig AS (SELECT doc_id,
-        CAST(list_sum(list_transform(range(0,60), b ->
-          CASE WHEN list_sum(list_transform(hs, h ->
-                 CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) >= 0
-               THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        FROM hs),
-      bk AS (SELECT doc_id, sig, sig >> 48 AS bucket FROM sig),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bk)
-      SELECT a.doc_id AS id_a, c.doc_id AS id_b,
-        CAST(bit_count(xor(a.sig, c.sig)) AS INTEGER) AS hamming
-      FROM sized a JOIN sized c ON a.bucket = c.bucket
-      WHERE a.doc_id < c.doc_id AND a.n <= 64
-        AND bit_count(xor(a.sig, c.sig)) <= 10
-      ORDER BY id_a, id_b""",
-    "ngram_jaccard_pairs" -> minhashNearDupSql(shingleN = 2, threshold = "3e-1"),
-    "dedup_eval" -> lshRecallEvalSql(shingleN = 3, threshold = "2e-1",
-      docFilter = "doc_id < 400", configs = Seq((8, 2), (8, 4), (16, 8))),
-    // mirrors TextOps.tfidfCosinePairs: rational idf tf*(N+1)/(df+1),
-    // df > 64 dropped from the space, term-ordered float folds for the
-    // dot and norm sums (the bigram-LM order-pinning discipline)
-    "tfidf_cosine_pairs" -> """
-      WITH tf AS (SELECT doc_id, term, count(*) AS tf
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                FROM documents WHERE doc_id < 400)
-          WHERE term <> '' GROUP BY doc_id, term),
-      dfreq AS (SELECT term, count(*) AS df FROM tf
-          GROUP BY term HAVING count(*) <= 64),
-      n AS (SELECT count(DISTINCT doc_id) AS n FROM documents
-            WHERE doc_id < 400),
-      w AS (SELECT doc_id, term,
-          CAST(tf * (n.n + 1) AS DOUBLE) / CAST(df + 1 AS DOUBLE) AS w
-        FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-      norms AS (SELECT doc_id, sqrt(list_reduce(
-          list_prepend(CAST(0 AS DOUBLE), list(w * w ORDER BY term)),
-          (a, b) -> a + b)) AS nrm
-        FROM w GROUP BY doc_id),
-      dots AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            list(x.w * y.w ORDER BY x.term)), (a, b) -> a + b) AS dot
-        FROM w x JOIN w y ON x.term = y.term AND x.doc_id < y.doc_id
-        GROUP BY x.doc_id, y.doc_id)
-      SELECT id_a, id_b, dot / (a.nrm * b.nrm) AS cosine
-      FROM dots JOIN norms a ON dots.id_a = a.doc_id
-                JOIN norms b ON dots.id_b = b.doc_id
-      WHERE dot / (a.nrm * b.nrm) >= 3e-1
-      ORDER BY id_a, id_b""",
-    // {self} ∪ del-1 variants (distinct), maxBucket=64 via the window
-    // count, pair-dedup before the levenshtein verify — mirrors
-    // Dedup.fuzzyKeyPairs exactly (levenshtein is integer-exact in both
-    // engines)
-    "fuzzy_key_pairs" ->
-      """WITH v AS (
-           SELECT c_custkey AS id, c_name AS key,
-             unnest(list_distinct(list_prepend(c_name,
-               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(range(1, length(c_name) + 1), i ->
-                   substr(c_name, 1, CAST(i - 1 AS INT))
-                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
-               END))) AS var
-           FROM customer WHERE c_name IS NOT NULL),
-         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
-         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-             a.key AS key_a, b.key AS key_b
-           FROM sized a JOIN sized b ON a.var = b.var
-           WHERE a.id < b.id AND a.n <= 64)
-         SELECT id_a, id_b FROM cand
-         WHERE levenshtein(key_a, key_b) <= 1 ORDER BY id_a, id_b""",
-    // the oracle is the BRUTE-FORCE all-pairs join the prefix filter
-    // provably equals: exact integer intersections, one division,
-    // same >= threshold gate — any missed or extra pair hash-fails
-    "set_sim_join" -> s"""
-      WITH d AS (SELECT doc_id, ${shinglesSql(3)} AS t
-          FROM documents WHERE text IS NOT NULL),
-      d2 AS (SELECT doc_id, t FROM d WHERE len(t) > 0),
-      p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(len(list_intersect(a.t, b.t)) AS BIGINT) AS ov,
-          CAST(len(a.t) AS BIGINT) AS na, CAST(len(b.t) AS BIGINT) AS nb
-        FROM d2 a JOIN d2 b ON a.doc_id < b.doc_id)
-      SELECT id_a, id_b,
-        CAST(ov AS DOUBLE) / CAST(na + nb - ov AS DOUBLE) AS jaccard
-      FROM p
-      WHERE CAST(ov AS DOUBLE) / CAST(na + nb - ov AS DOUBLE) >= 5e-1
-      ORDER BY id_a, id_b""",
-    // same del-1 candidates + levenshtein gate, then the four
-    // Fellegi–Sunter CASE terms with litD'd Scala-computed log2(m/u)
-    // weights summed in the identical left-chain order
-    "fellegi_sunter" -> {
-      def w(m: Double, u: Double) =
-        (litD(math.log(m / u) / math.log(2.0)),
-          litD(math.log((1.0 - m) / (1.0 - u)) / math.log(2.0)))
-      val (nameA, nameD) = w(0.5, 0.001)
-      val (natA, natD) = w(0.95, 0.04)
-      val (segA, segD) = w(0.9, 0.2)
-      val (balA, balD) = w(0.8, 0.05)
-      def term(agree: String, wa: String, wd: String) =
-        s"CASE WHEN ($agree) IS NULL THEN CAST(0 AS DOUBLE) " +
-          s"WHEN $agree THEN $wa ELSE $wd END"
-      s"""WITH v AS (
-           SELECT c_custkey AS id, c_name AS key,
-             unnest(list_distinct(list_prepend(c_name,
-               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(range(1, length(c_name) + 1), i ->
-                   substr(c_name, 1, CAST(i - 1 AS INT))
-                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
-               END))) AS var
-           FROM customer WHERE c_name IS NOT NULL),
-         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
-         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-             a.key AS key_a, b.key AS key_b
-           FROM sized a JOIN sized b ON a.var = b.var
-           WHERE a.id < b.id AND a.n <= 64),
-         p AS (SELECT id_a, id_b, key_a, key_b FROM cand
-           WHERE levenshtein(key_a, key_b) <= 1),
-         s AS (SELECT id_a, id_b,
-             (((${term("key_a = key_b", nameA, nameD)}
-              + ${term("a.c_nationkey = b.c_nationkey", natA, natD)})
-              + ${term("a.c_mktsegment = b.c_mktsegment", segA, segD)})
-              + ${term("abs(a.c_acctbal - b.c_acctbal) < CAST(1000 AS DOUBLE)",
-                balA, balD)}) AS fs_score
-           FROM p JOIN customer a ON a.c_custkey = p.id_a
-                  JOIN customer b ON b.c_custkey = p.id_b)
-         SELECT id_a, id_b, fs_score,
-           CASE WHEN fs_score >= ${litD(6.0)} THEN 'match'
-                WHEN fs_score <= ${litD(0.0)} THEN 'non_match'
-                ELSE 'possible' END AS fs_decision
-         FROM s ORDER BY id_a, id_b"""
-    },
-    // mirrors Dedup.incrementalSetSimilarity's drop criterion against
-    // the brute-force truth the prefix machinery provably equals:
-    // batch docs (id >= 300) drop on a true-jaccard >= 0.5 match to
-    // history (id < 300) or to a smaller-id batch doc; empty shingle
-    // sets generate no candidates and always survive
-    "incremental_set_sim" -> s"""
-      WITH d AS (SELECT doc_id, source, ${shinglesSql(3)} AS t
-          FROM documents WHERE text IS NOT NULL),
-      d2 AS (SELECT doc_id, source, t FROM d WHERE len(t) > 0),
-      h AS (SELECT * FROM d2 WHERE doc_id < 300),
-      b AS (SELECT * FROM d2 WHERE doc_id >= 300),
-      cl AS (SELECT DISTINCT y.doc_id FROM h x JOIN b y
-          ON x.doc_id <> y.doc_id
-          AND CAST(len(list_intersect(x.t, y.t)) AS DOUBLE)
-            / CAST(len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))
-                AS DOUBLE) >= 5e-1),
-      il AS (SELECT DISTINCT y.doc_id FROM b x JOIN b y
-          ON x.doc_id < y.doc_id
-          AND CAST(len(list_intersect(x.t, y.t)) AS DOUBLE)
-            / CAST(len(x.t) + len(y.t) - len(list_intersect(x.t, y.t))
-                AS DOUBLE) >= 5e-1)
-      SELECT doc_id, source FROM d
-      WHERE doc_id >= 300
-        AND doc_id NOT IN (SELECT doc_id FROM cl)
-        AND doc_id NOT IN (SELECT doc_id FROM il)
-      ORDER BY doc_id""",
-    // mirrors Dedup.fellegiSunterFit: γ pattern frame, 5 unrolled EM
-    // rounds (1-row parameter CTE cross-joined per round), pinned
-    // pattern-key folds, clamp/fallback M-step — IEEE-identical
-    "fellegi_sunter_fit" -> fellegiSunterFitSql(
-      "SELECT l_quantity, l_discount, l_tax, l_linenumber FROM lineitem",
-      Seq(
-        ("qty_hi", "l_quantity >= 25"),
-        ("disc_lo", "l_discount <= 5e-2"),
-        ("tax_lo",
-          "CASE WHEN l_linenumber % 7 = 0 THEN NULL ELSE l_tax <= 4e-2 END")),
-      iterations = 5),
-    // same del-1 candidate CTEs, scored with DuckDB's builtin
-    // jaro_winkler_similarity — the native kernel is pinned
-    // bit-identical to it (both-empty → 0, boost only above 0.7), so
-    // the 0.9 float threshold selects identical pairs
-    "jw_link_pairs" ->
-      """WITH v AS (
-           SELECT c_custkey AS id, c_name AS key,
-             unnest(list_distinct(list_prepend(c_name,
-               CASE WHEN length(c_name) = 0 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(range(1, length(c_name) + 1), i ->
-                   substr(c_name, 1, CAST(i - 1 AS INT))
-                   || substr(c_name, CAST(i + 1 AS INT), length(c_name)))
-               END))) AS var
-           FROM customer WHERE c_name IS NOT NULL),
-         sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
-         cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-             a.key AS key_a, b.key AS key_b
-           FROM sized a JOIN sized b ON a.var = b.var
-           WHERE a.id < b.id AND a.n <= 64)
-         SELECT id_a, id_b, jaro_winkler_similarity(key_a, key_b) AS jw
-         FROM cand WHERE jaro_winkler_similarity(key_a, key_b) >= 9e-1
-         ORDER BY id_a, id_b""",
-    // maxBucket=64 cap mirrored via the window count, exactly
-    // Dedup.embeddingNearDuplicates' between(2, maxBucket)
-    "embedding_dedup" -> s"""
-      WITH bucketed AS (SELECT vec_id, embedding, ${lshBucketSql()} AS bucket
-        FROM embeddings),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bucketed)
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        ${cosineSql("a.embedding", "b.embedding")} AS cosine
-      FROM sized a JOIN sized b ON a.bucket = b.bucket
-      WHERE a.vec_id < b.vec_id AND a.n <= 64
-        AND ${cosineSql("a.embedding", "b.embedding")} >= 4e-1
-      ORDER BY id_a, id_b""",
-    // two independent plane sets (offsets 0 and 6), candidate pairs
-    // deduplicated by the UNION before the exact-cosine verify —
-    // mirrors Dedup.embeddingNearDuplicates(tables = 2)
-    "embedding_dedup_multi" -> s"""
-      WITH b0 AS (SELECT vec_id, embedding, ${lshBucketSql(0)} AS bucket
-        FROM embeddings),
-      s0 AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM b0),
-      b1 AS (SELECT vec_id, embedding, ${lshBucketSql(6)} AS bucket
-        FROM embeddings),
-      s1 AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM b1),
-      cand AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM s0 a JOIN s0 b ON a.bucket = b.bucket
-        WHERE a.vec_id < b.vec_id AND a.n <= 64
-        UNION
-        SELECT a.vec_id, b.vec_id
-        FROM s1 a JOIN s1 b ON a.bucket = b.bucket
-        WHERE a.vec_id < b.vec_id AND a.n <= 64),
-      scored AS (SELECT id_a, id_b,
-        ${cosineSql("a.embedding", "b.embedding")} AS cosine
-        FROM cand JOIN embeddings a ON cand.id_a = a.vec_id
-                  JOIN embeddings b ON cand.id_b = b.vec_id)
-      SELECT id_a, id_b, cosine FROM scored
-      WHERE cosine >= 4e-1 ORDER BY id_a, id_b""",
-    // per-SIDE bucket caps (window counts within each side), candidates
-    // only span corpus × eval — mirrors Dedup.semanticContaminationPairs
-    "semantic_contamination" -> s"""
-      WITH $semanticCandSql
-      SELECT cand.doc_id, cand.eval_id,
-        ${cosineSql("c.embedding", "e.embedding")} AS cosine
-      FROM cand JOIN embeddings c ON cand.doc_id = c.vec_id
-                JOIN embeddings e ON cand.eval_id = e.vec_id
-      WHERE ${cosineSql("c.embedding", "e.embedding")} >= 3e-1
-      ORDER BY doc_id, eval_id""",
-    "semantic_decontaminate" -> s"""
-      WITH $semanticCandSql,
-      flagged AS (SELECT DISTINCT cand.doc_id AS vec_id
-        FROM cand JOIN embeddings c ON cand.doc_id = c.vec_id
-                  JOIN embeddings e ON cand.eval_id = e.vec_id
-        WHERE ${cosineSql("c.embedding", "e.embedding")} >= 3e-1)
-      SELECT vec_id, label FROM embeddings
-      WHERE vec_id >= 100 AND vec_id NOT IN (SELECT vec_id FROM flagged)
-      ORDER BY vec_id""",
-    "winnow_fingerprints" -> s"""
-      WITH g AS (SELECT doc_id,
-          list_transform(range(1, greatest(length(text) - 7, 1) + 1), i ->
-            ${hash32Sql("substr(text, CAST(i AS INT), 8)")}) AS grams
-        FROM documents),
-      w AS (SELECT doc_id,
-          list_distinct(list_transform(range(0, greatest(len(grams) - 4, 0) + 1), j ->
-            list_min(grams[CAST(j + 1 AS INT) : CAST(j + 4 AS INT)]))) AS fps
-        FROM g)
-      SELECT doc_id, unnest(fps) AS fp FROM w ORDER BY doc_id, fp""",
-    // maxBucket=64 via the window count, exactly Dedup.winnowOverlapPairs'
-    // between(2, maxBucket); fingerprints are per-doc distinct, so the
-    // pair count is the number of SHARED fingerprints. The len(fps) >= 30
-    // floor mirrors the minShared size prefilter: sub-floor docs can never
-    // reach minShared shared fingerprints, and the bucket cap counts
-    // pair-eligible docs only.
-    "winnow_pairs" -> s"""
-      WITH g AS (SELECT doc_id,
-          list_transform(range(1, greatest(length(text) - 7, 1) + 1), i ->
-            ${hash32Sql("substr(text, CAST(i AS INT), 8)")}) AS grams
-        FROM documents),
-      w AS (SELECT doc_id,
-          list_distinct(list_transform(range(0, greatest(len(grams) - 4, 0) + 1), j ->
-            list_min(grams[CAST(j + 1 AS INT) : CAST(j + 4 AS INT)]))) AS fps
-        FROM g),
-      f AS (SELECT doc_id, unnest(fps) AS fp FROM w WHERE len(fps) >= 30),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY fp) AS n FROM f)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        count(*) AS shared_fingerprints
-      FROM sized a JOIN sized b ON a.fp = b.fp
-      WHERE a.doc_id < b.doc_id AND a.n <= 64
-      GROUP BY 1, 2 HAVING count(*) >= 30
-      ORDER BY id_a, id_b""",
-    // min-doc_id canon per duplicated digest (the strip oracle's rem
-    // set); mask = NOT removed, per token position
-    "duplicate_span_mask" -> s"""
-      WITH g AS (${posGramsSql(8)}),
-      canon AS (SELECT h, min(doc_id) AS keep FROM g
-        GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
-        FROM g JOIN canon ON g.h = canon.h AND g.doc_id <> canon.keep
-        CROSS JOIN range(0, 8) r(off)),
-      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp,
-          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        FROM (SELECT doc_id, text,
-                unnest(range(1, len(string_split(text, ' ')) + 1)) AS i
-              FROM documents)),
-      m AS (SELECT t.doc_id, t.n_tokens, t.tp,
-          CASE WHEN rem.tp IS NULL THEN 1 ELSE 0 END AS keep
-        FROM toks t LEFT JOIN rem
-          ON rem.doc_id = t.doc_id AND rem.tp = t.tp)
-      SELECT doc_id, n_tokens,
-        CAST(sum(1 - keep) OVER (PARTITION BY doc_id) AS BIGINT) AS n_masked,
-        tp AS token_pos, CAST(keep AS INT) AS keep
-      FROM m ORDER BY doc_id, token_pos""",
-    // the del-1 variant blocking mirrored with SIDES: candidates only
-    // span master × dirty, combined bucket population capped, the same
-    // bit-pinned jaro_winkler_similarity verifies
-    "fuzzy_join" -> """
-      WITH m AS (SELECT 0 AS side, c_custkey AS id, c_name AS key
-                 FROM customer WHERE c_name IS NOT NULL
-            UNION ALL
-            SELECT 1, c_custkey + 1000000,
-                   substr(c_name, 1, length(c_name) - 1)
-            FROM customer WHERE c_name IS NOT NULL),
-      v AS (SELECT side, id, key,
-              unnest(list_distinct(list_prepend(key,
-                CASE WHEN length(key) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(range(1, length(key) + 1), i ->
-                    substr(key, 1, CAST(i - 1 AS INT))
-                    || substr(key, CAST(i + 1 AS INT), length(key)))
-                END))) AS var
-            FROM m),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY var) AS n FROM v),
-      cand AS (SELECT DISTINCT a.id AS left_id, b.id AS right_id,
-          a.key AS key_left, b.key AS key_right
-        FROM sized a JOIN sized b ON a.var = b.var
-        WHERE a.side = 0 AND b.side = 1 AND a.n <= 64)
-      SELECT left_id, right_id, key_left, key_right,
-        jaro_winkler_similarity(key_left, key_right) AS jw
-      FROM cand WHERE jaro_winkler_similarity(key_left, key_right) >= 9e-1
-      ORDER BY left_id, right_id""",
-    // duplicated 8-gram gaps-and-islands — a new span starts where the
-    // gap between consecutive duplicated gram starts exceeds n
-    "duplicate_spans" -> dupSpansSql(8, minSpanTokens = 0),
-    // same, paragraph granularity: spans shorter than 12 tokens dropped
-    // AFTER island merging (mirrors duplicateSpans' minSpanTokens)
-    "duplicate_spans_min" -> dupSpansSql(8, minSpanTokens = 12),
-    // min-doc_id canon per duplicated digest; non-canon occurrences mark
-    // their n covered token positions for removal
-    "strip_duplicate_spans" -> s"""
-      WITH g AS (${posGramsSql(8)}),
-      canon AS (SELECT h, min(doc_id) AS keep FROM g
-        GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
-        FROM g JOIN canon ON g.h = canon.h AND g.doc_id <> canon.keep
-        CROSS JOIN range(0, 8) r(off)),
-      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
-        FROM (SELECT doc_id, string_split(text,' ') AS t,
-                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
-              FROM documents)),
-      kept AS (SELECT doc_id, tp, tok FROM toks
-        WHERE NOT EXISTS (SELECT 1 FROM rem
-          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
-      rebuilt AS (SELECT doc_id, count(*) AS kept,
-          string_agg(tok, ' ' ORDER BY tp) AS clean
-        FROM kept GROUP BY doc_id)
-      SELECT d.doc_id,
-        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
-        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
-        coalesce(r.clean, '') AS clean_text
-      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-      ORDER BY d.doc_id""",
-    // batch 8-grams matching the eval carve's distinct gram digests drop
-    // their covered span; rebuild identical to strip_duplicate_spans —
-    // mirrors TextOps.stripContaminatedSpans
-    "strip_contaminated_spans" -> s"""
-      WITH g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-          md5(array_to_string(t[CAST(i AS INT):CAST(i + 7 AS INT)], ' ')) AS h
-        FROM (SELECT doc_id, string_split(text,' ') AS t,
-                unnest(range(1, greatest(len(string_split(text,' ')) - 7, 0) + 1)) AS i
-              FROM documents WHERE doc_id >= 100)),
-      bench AS (SELECT DISTINCT md5(gr) AS h FROM (
-          SELECT unnest(${shinglesSql(8)}) AS gr
-          FROM documents WHERE doc_id < 100) b),
-      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
-        FROM g JOIN bench ON g.h = bench.h
-        CROSS JOIN range(0, 8) r(off)),
-      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
-        FROM (SELECT doc_id, string_split(text,' ') AS t,
-                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
-              FROM documents WHERE doc_id >= 100)),
-      kept AS (SELECT doc_id, tp, tok FROM toks
-        WHERE NOT EXISTS (SELECT 1 FROM rem
-          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
-      rebuilt AS (SELECT doc_id, count(*) AS kept,
-          string_agg(tok, ' ' ORDER BY tp) AS clean
-        FROM kept GROUP BY doc_id)
-      SELECT d.doc_id,
-        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
-        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
-        coalesce(r.clean, '') AS clean_text
-      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-      WHERE d.doc_id >= 100
-      ORDER BY d.doc_id""",
-    // later in-doc occurrences of a trigram drop their covered span;
-    // rebuild identical to strip_duplicate_spans — mirrors
-    // TextOps.stripSelfRepeats
-    "strip_self_repeats" -> s"""
-      WITH g AS (${posGramsSql(3)}),
-      firsts AS (SELECT doc_id, h, min(pos) AS p0 FROM g
-        GROUP BY doc_id, h HAVING count(*) >= 2),
-      rem AS (SELECT DISTINCT g.doc_id, g.pos + r.off AS tp
-        FROM g JOIN firsts f ON g.doc_id = f.doc_id AND g.h = f.h
-        CROSS JOIN range(0, 3) r(off)
-        WHERE g.pos > f.p0),
-      toks AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS tp, t[CAST(i AS INT)] AS tok
-        FROM (SELECT doc_id, string_split(text,' ') AS t,
-                unnest(range(1, len(string_split(text,' ')) + 1)) AS i
-              FROM documents)),
-      kept AS (SELECT doc_id, tp, tok FROM toks
-        WHERE NOT EXISTS (SELECT 1 FROM rem
-          WHERE rem.doc_id = toks.doc_id AND rem.tp = toks.tp)),
-      rebuilt AS (SELECT doc_id, count(*) AS kept,
-          string_agg(tok, ' ' ORDER BY tp) AS clean
-        FROM kept GROUP BY doc_id)
-      SELECT d.doc_id,
-        CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
-        CAST(len(string_split(d.text,' ')) - coalesce(r.kept, 0) AS BIGINT) AS n_removed,
-        coalesce(r.clean, '') AS clean_text
-      FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-      ORDER BY d.doc_id""",
-    // mirrors the line_dedup pre-lining (8-word lines via the same
-    // integer grid) then the CCNet removal contract: corpus-frequency
-    // >= 2 lines vanish EVERYWHERE (first occurrence too), blank
-    // lines never count, per-doc rebuild in line order
-    "line_dedup" -> """
-      WITH d AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t
-                 FROM documents),
-      l AS (SELECT doc_id, CAST(b AS BIGINT) AS lp,
-              array_to_string(
-                t[CAST(b*8+1 AS INT):CAST(b*8+8 AS INT)], ' ') AS line
-            FROM d, unnest(range(0, CAST(ceil(len(t)/8e0) AS INT))) AS u(b)),
-      h AS (SELECT line FROM l WHERE trim(line) <> ''
-            GROUP BY line HAVING count(*) >= 2),
-      k AS (SELECT l.doc_id, l.lp, l.line, h.line IS NOT NULL AS heavy
-            FROM l LEFT JOIN h ON l.line = h.line)
-      SELECT doc_id,
-        CAST(count(*) AS BIGINT) AS n_lines,
-        CAST(coalesce(sum(CASE WHEN heavy THEN 1 END), 0) AS BIGINT)
-          AS n_removed,
-        coalesce(array_to_string(
-          list(line ORDER BY lp) FILTER (WHERE NOT heavy), chr(10)), '')
-          AS clean_text
-      FROM k GROUP BY doc_id ORDER BY doc_id""",
-    // mirrors TextOps.boilerplateLines over the 2-word lining: document
-    // frequency per (source, line) — distinct docs, blank lines never
-    // count — heavy when df/group_docs >= 0.1 and the source has >= 10
-    // docs; per-doc rebuild in line order, heavy lines stripped
-    "boilerplate_lines" -> """
-      WITH d AS (SELECT doc_id, source,
-                   string_split(coalesce(text, ''), ' ') AS t
-                 FROM documents),
-      l AS (SELECT doc_id, source, CAST(b AS BIGINT) AS lp,
-              array_to_string(
-                t[CAST(b*2+1 AS INT):CAST(b*2+2 AS INT)], ' ') AS line
-            FROM d, unnest(range(0, CAST(ceil(len(t)/2e0) AS INT))) AS u(b)),
-      nd AS (SELECT source, count(*) AS group_docs FROM d GROUP BY source),
-      h AS (SELECT l.source, l.line
-            FROM l JOIN nd ON l.source = nd.source
-            WHERE trim(l.line) <> ''
-            GROUP BY l.source, l.line, nd.group_docs
-            HAVING nd.group_docs >= 10
-               AND CAST(count(DISTINCT l.doc_id) AS DOUBLE)
-                   / CAST(nd.group_docs AS DOUBLE) >= 1e-1),
-      k AS (SELECT l.doc_id, l.source, l.lp, l.line,
-              h.line IS NOT NULL AS heavy
-            FROM l LEFT JOIN h
-              ON l.source = h.source AND l.line = h.line)
-      SELECT doc_id, source,
-        CAST(count(*) AS BIGINT) AS n_lines,
-        CAST(coalesce(sum(CASE WHEN heavy THEN 1 END), 0) AS BIGINT)
-          AS n_removed,
-        coalesce(array_to_string(
-          list(line ORDER BY lp) FILTER (WHERE NOT heavy), chr(10)), '')
-          AS clean_text
-      FROM k GROUP BY doc_id, source ORDER BY doc_id""",
-    "cross_corpus_pairs" ->
-      crossCorpusNearDupSql(shingleN = 3, threshold = "2e-1", splitId = 250),
-    "incremental_near_dup" ->
-      incrementalNearDupSql(shingleN = 3, threshold = "5e-1", splitId = 250),
-    // int8 quantization identical to similarity_topk_q8; sign-LSH
-    // buckets computed ON THE CODES (the stored state); quantized
-    // cosine (integer dot/norms, one division) >= threshold drops a
-    // batch vector against index∪smaller-id-batch bucket-mates, capped
-    // buckets per side — mirrors Dedup.incrementalEmbeddingDedup
-    "incremental_embedding_dedup" -> s"""
-      WITH c AS (SELECT vec_id,
-          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax,
-          embedding FROM embeddings),
-      q8 AS (SELECT vec_id,
-          CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-               ELSE list_transform(embedding, x ->
-                 CAST(floor(CAST(x AS DOUBLE) * 127 / amax + 5e-1) AS INT)) END AS codes
-        FROM c),
-      n AS (SELECT vec_id, codes,
-          CAST(list_sum(list_transform(codes, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS nn,
-          ${lshBucketSql(0, "codes")} AS bucket
-        FROM q8),
-      idx AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS bn
-        FROM n WHERE vec_id < 250),
-      bat AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS bn
-        FROM n WHERE vec_id >= 250),
-      cand AS (
-        SELECT i.codes AS ca, i.nn AS na, b.vec_id AS id_b,
-               b.codes AS cb, b.nn AS nb
-        FROM idx i JOIN bat b ON i.bucket = b.bucket
-        WHERE i.bn <= 64 AND b.bn <= 64 AND i.vec_id <> b.vec_id
-        UNION ALL
-        SELECT a.codes, a.nn, b.vec_id, b.codes, b.nn
-        FROM bat a JOIN bat b ON a.bucket = b.bucket
-        WHERE a.bn <= 64 AND a.vec_id < b.vec_id),
-      losers AS (SELECT DISTINCT id_b FROM cand
-        WHERE (CASE WHEN na = 0 OR nb = 0 THEN CAST(0 AS DOUBLE)
-               ELSE CAST(CAST(list_sum(list_transform(range(1, len(ca) + 1), j ->
-                   CAST(ca[CAST(j AS INT)] AS BIGINT) * cb[CAST(j AS INT)])) AS BIGINT) AS DOUBLE)
-                 / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) END) >= 4e-1)
-      SELECT e.vec_id, e.label FROM embeddings e
-      WHERE e.vec_id >= 250
-        AND e.vec_id NOT IN (SELECT id_b FROM losers)
-      ORDER BY e.vec_id""",
-    // LSH near-dup pairs -> recursive min-label closure -> min-id
-    // survivors — mirrors Dedup.semanticDedup (pair generation identical
-    // to the embedding_dedup oracle, closure identical to dedup_clusters)
-    "semantic_dedup" -> s"""
-      WITH RECURSIVE bucketed AS (SELECT vec_id, embedding, ${lshBucketSql()} AS bucket
-        FROM embeddings),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY bucket) AS n FROM bucketed),
-      p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM sized a JOIN sized b ON a.bucket = b.bucket
-        WHERE a.vec_id < b.vec_id AND a.n <= 64
-          AND ${cosineSql("a.embedding", "b.embedding")} >= 4e-1),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM p
-                UNION ALL SELECT id_b, id_a FROM p),
-      reach(node, lbl) AS (
-        SELECT vec_id, vec_id FROM embeddings
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
-      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node)
-      SELECT e.vec_id, e.label FROM embeddings e
-      JOIN comp c ON e.vec_id = c.node
-      WHERE c.lbl = c.node ORDER BY e.vec_id""",
-    // quality-weighted keeper per near-dup cluster (ties -> min doc_id);
-    // cluster label closure identical to dedup_clusters, quality
-    // expression identical to quality_score (bit-exact ORDER BY)
-    "cluster_dedup_best" -> s"""
-      WITH RECURSIVE pr AS (
-        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-                UNION ALL SELECT id_b, id_a FROM pr),
-      reach(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
-      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node),
-      q AS ($qualityPerDocSql),
-      ranked AS (SELECT comp.node AS doc_id, comp.lbl,
-          count(*) OVER (PARTITION BY comp.lbl) AS cluster_size,
-          row_number() OVER (PARTITION BY comp.lbl
-            ORDER BY q.quality DESC, comp.node ASC) AS rn
-        FROM comp JOIN q ON comp.node = q.doc_id)
-      SELECT d.doc_id, d.source, CAST(r.cluster_size AS BIGINT) AS cluster_size
-      FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
-      WHERE r.rn = 1 ORDER BY d.doc_id""",
-    // cluster closure identical to dedup_clusters; split cutoffs
-    // identical to train_split but hashed on the CLUSTER label —
-    // mirrors Dedup.clusterSafeSplit
-    "cluster_safe_split" -> s"""
-      WITH RECURSIVE pr AS (
-        SELECT id_a, id_b FROM (${minhashNearDupSql(shingleN = 3, threshold = "2e-1")}) t),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-                UNION ALL SELECT id_b, id_a FROM pr),
-      reach(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
-      comp AS (SELECT node, min(lbl) AS lbl FROM reach GROUP BY node),
-      hashed AS (SELECT node, lbl,
-          list_sum(list_transform(range(1,9), j ->
-            (strpos('0123456789abcdef',
-               substr(md5(CAST(lbl AS VARCHAR)), j, 1)) - 1)
-            * CAST(16**(8-j) AS BIGINT))) AS h
-        FROM comp)
-      SELECT node AS doc_id, CAST(lbl AS BIGINT) AS cluster_rep,
-        CASE WHEN h < 3435973836 THEN 'train'
-             WHEN h < 3865470566 THEN 'val'
-             WHEN h < 4294967296 THEN 'test'
-             ELSE 'train' END AS split
-      FROM hashed ORDER BY doc_id""",
-    "phonetic_pairs" -> s"""
-      WITH w AS (SELECT p_name AS word,
-          min(p_partkey) AS word_id FROM part GROUP BY 1),
-      k AS (SELECT word_id AS id, word AS key,
-          upper(regexp_replace(word, '[^A-Za-z]', '', 'g')) AS cl
-        FROM w WHERE word IS NOT NULL),
-      cod AS (SELECT id, key, ${soundexSql("cl")} AS code
-        FROM k WHERE length(cl) > 0),
-      sized AS (SELECT *, count(*) OVER (PARTITION BY code) AS n
-        FROM cod),
-      cand AS (SELECT a.id AS id_a, b.id AS id_b,
-          a.key AS key_a, b.key AS key_b
-        FROM sized a JOIN sized b
-          ON a.code = b.code AND a.id < b.id AND a.key <> b.key
-        WHERE a.n BETWEEN 2 AND 64)
-      SELECT id_a, id_b, key_a, key_b,
-        jaro_winkler_similarity(key_a, key_b) AS jw
-      FROM cand WHERE jaro_winkler_similarity(key_a, key_b) >= 6e-1
-      ORDER BY id_a, id_b""",
-    // the noisy construction replayed verbatim, but the canonical key
-    // computed ARITHMETICALLY (never through the regex chain) — the
-    // keeper is the min-id row per canonical key, Dedup.exact's
-    // election with doc_id as tie-break
-    "url_dedup" -> """
-      WITH u AS (SELECT doc_id,
-          (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'http://' END) ||
-          (CASE WHEN doc_id % 4 = 0 THEN 'Example' ELSE 'example' END) ||
-          CAST(doc_id % 7 AS VARCHAR) || '.com' ||
-          (CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END) ||
-          '/p/' || CAST(doc_id % 40 AS VARCHAR) ||
-          (CASE WHEN doc_id % 2 = 1 THEN '/' ELSE '' END) ||
-          (CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed'
-                WHEN doc_id % 3 = 1 THEN '?utm_campaign=a&gclid=xyz'
-                ELSE '' END) ||
-          (CASE WHEN doc_id % 11 = 0 THEN '#sec' ELSE '' END) AS url,
-          'http://example' || CAST(doc_id % 7 AS VARCHAR) || '.com/p/' ||
-            CAST(doc_id % 40 AS VARCHAR) AS canonical_url
-        FROM documents),
-      r AS (SELECT doc_id, url, canonical_url,
-          row_number() OVER (PARTITION BY canonical_url ORDER BY doc_id)
-            AS rn
-        FROM u)
-      SELECT doc_id, url, canonical_url FROM r WHERE rn = 1
-      ORDER BY doc_id""",
-    // 60-bit perceptual hashes over 61 stride-sampled bytes (ASCII
-    // fixture: ord by char == byte value): aHash = integer mean test
-    // sample*60 >= sum, dHash = gradient sample(k+1) > sample(k); both
-    // with the 4x15-bit banded LSH, per-bucket cap, popcount verify —
-    // mirror BinaryOps.aHash60 / dHash60 / perceptualHashPairs
-    "perceptual_hash_pairs" ->
-      perceptualPairsSql(dHash = false, maxHamming = 10),
-    "perceptual_hash_pairs_dhash" ->
-      perceptualPairsSql(dHash = true, maxHamming = 20),
-    // same aHash pipeline split into an index half (doc_id < 250) and a
-    // batch half; per-side banded buckets with the 64 cap, exact
-    // popcount verify, batch blob dropped on any in-radius index
-    // neighbor or smaller-id batch neighbor — mirrors
-    // BinaryOps.incrementalPerceptualDedup
-    "incremental_phash_dedup" -> """
-      WITH s AS (SELECT doc_id, length(text) AS n,
-          list_transform(range(0, 61), k ->
-            CAST(ord(substr(text, CAST((k * length(text)) // 61 AS INT) + 1, 1))
-              AS BIGINT)) AS ss
-        FROM documents),
-      t AS (SELECT doc_id, n, ss,
-          CAST(list_sum(ss[1:60]) AS BIGINT) AS total FROM s),
-      h AS (SELECT doc_id,
-          CASE WHEN n = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(list_sum(list_transform(range(0, 60), k ->
-                 CASE WHEN ss[CAST(k + 1 AS INT)] * 60 >= total
-                      THEN (CAST(1 AS BIGINT) << CAST(k AS INT))
-                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT)
-          END AS ph FROM t),
-      zi AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bn
-        FROM (SELECT doc_id, ph, u.b AS band,
-                (ph >> (u.b * 15)) & 32767 AS bucket
-              FROM h, unnest([0, 1, 2, 3]) u(b) WHERE doc_id < 250)),
-      zb AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bn
-        FROM (SELECT doc_id, ph, u.b AS band,
-                (ph >> (u.b * 15)) & 32767 AS bucket
-              FROM h, unnest([0, 1, 2, 3]) u(b) WHERE doc_id >= 250)),
-      losers AS (
-        SELECT DISTINCT b.doc_id AS id_b
-        FROM zi a JOIN zb b ON a.band = b.band AND a.bucket = b.bucket
-        WHERE a.bn <= 64 AND b.bn <= 64 AND a.doc_id <> b.doc_id
-          AND bit_count(xor(a.ph, b.ph)) <= 10
-        UNION
-        SELECT b.doc_id
-        FROM zb a JOIN zb b ON a.band = b.band AND a.bucket = b.bucket
-        WHERE a.bn <= 64 AND b.bn <= 64 AND a.doc_id < b.doc_id
-          AND bit_count(xor(a.ph, b.ph)) <= 10)
-      SELECT d.doc_id, d.lang FROM documents d
-      WHERE d.doc_id >= 250 AND d.doc_id NOT IN (SELECT id_b FROM losers)
-      ORDER BY d.doc_id""",
-    // distinct 8-gram digests per doc (shinglesSql is already distinct),
-    // per-gram doc frequency as the bucket cap, ordered-pair shared
-    // counts, both containment directions from integer totals — mirrors
-    // Dedup.containmentPairs
-    "containment_pairs" -> containmentPairsSql(cutoff = None),
-    // deterministic quarter of the digest space (leading 32 bits <
-    // 2^30) — mirrors Dedup.containmentPairs(gramFraction = 0.25)
-    "containment_pairs_sampled" ->
-      containmentPairsSql(cutoff = Some(1073741824L)),
-  )
 }

@@ -6,277 +6,14 @@ import graft.ext.{BinaryOps, Dedup, Frequency, GraphOps, Similarity, TextOps}
 import graft.ops.{Ops, TemporalOps, WindowOps}
 import graft.probes.Probes
 
-/** Embedding similarity, ANN ladder, retrieval/eval, and pooling queries — split from the ExtQueries monolith (round 14):
-  * same entries, same keys, byte-identical bodies; [[ExtQueries]]
-  * merges every family back into the single driver-facing map. */
+/** Embedding similarity queries: the ANN ladder, retrieval/eval and pooling. */
 private[graft] object QueriesSimilarity {
   import SparkEntry.table
   import QueryHelpers._
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def registry: Seq[Query] = Seq(
     // ---- similarity search -------------------------------------------------
-    "similarity_topk" -> { (s, dir) =>
-      val e = corpus(s, dir, "embeddings")
-      Similarity.bruteForceTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5)
-        .orderBy("query_id", "rank")
-    },
-    "hybrid_rrf" -> { (s, dir) =>
-      // reciprocal-rank fusion of two rankers over the same queries —
-      // here full-dim cosine ⊕ leading-16-dim coarse cosine (rankers
-      // on different score scales fuse by RANK, no calibration);
-      // each RRF term is one integer-denominator division, the fusion
-      // one add — oracle bit-for-bit
-      val e = corpus(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      def coarse(d: DataFrame) = d.select(col("vec_id"),
-        slice(col("embedding"), 1, 16).as("embedding"))
-      val full = Similarity.bruteForceTopK(
-        e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
-      val lowres = Similarity.bruteForceTopK(
-        coarse(e), "vec_id", "embedding", coarse(q), "vec_id", "embedding",
-        k = 10)
-      Similarity.rrfFuse(full, lowres, k0 = 60, topK = 10)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_topk_q8" -> { (s, dir) =>
-      // the memory-bound form: int8 codes (4x less IO), integer dot +
-      // one IEEE division — scales cancel, so exact cross-engine
-      val e = corpus(s, dir, "embeddings")
-      Similarity.bruteForceTopKQuantized(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_hamming" -> { (s, dir) =>
-      // sign-sketch coarse rank (8 bytes/vector scanned) + exact cosine
-      // rerank of the top-50 sliver
-      val e = corpus(s, dir, "embeddings")
-      Similarity.hammingTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5, rerank = 10)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_pq" -> { (s, dir) =>
-      // product-quantization rung: 8 one-byte codes per vector scanned
-      // in the ADC coarse pass (vs 256 B of float32), exact cosine
-      // rerank of the top-30 sliver; stand-in sub-centroids from the
-      // first 8 vectors (oracle-reproducible, same seam as IVF)
-      val e = corpus(s, dir, "embeddings")
-      Similarity.pqTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
-        queryVec = "embedding",
-        centroids = Similarity.standinCentroids(e, "vec_id", "embedding", 8),
-        centroidId = "cid", centroidVec = "center",
-        m = 8, k = 3, rerank = 10)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_hamming_wide" -> { (s, dir) =>
-      // the dim > 64 rung: 128-dim vectors (the 64-d fixture widened by
-      // concatenating its reverse — deterministic, oracle-shared),
-      // 2-word sketches, summed-popcount coarse rank, exact rerank
-      val e = corpus(s, dir, "embeddings")
-        .select(col("vec_id"),
-          concat(col("embedding"), reverse(col("embedding"))).as("embedding"))
-      Similarity.hammingTopKWide(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5, dim = 128, rerank = 10)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_matryoshka" -> { (s, dir) =>
-      // MRL two-stage: coarse cosine over the leading 16 of 64 dims
-      // (4x less float payload in the corpus-wide pass), exact
-      // full-dim rerank of the top-25 sliver
-      val e = corpus(s, dir, "embeddings")
-      Similarity.matryoshkaTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5, coarseDims = 16, rerank = 5)
-        .orderBy("query_id", "rank")
-    },
-    "late_interaction" -> { (s, dir) =>
-      // ColBERT MaxSim over multi-vector docs: the 64-d fixture vector
-      // reinterpreted as 8 token-vectors of dim 8 (deterministic,
-      // oracle-shared), Σ_q max_d cosine scoring, top-3 per query
-      val e = corpus(s, dir, "embeddings")
-        .select(col("vec_id"), transform(sequence(lit(0), lit(7)),
-          t => slice(col("embedding"), t * 8 + 1, lit(8))).as("tok_vecs"))
-      Similarity.lateInteractionTopK(
-        corpus = e, corpusId = "vec_id", corpusVecs = "tok_vecs",
-        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
-        queryVecs = "tok_vecs", k = 3)
-        .orderBy("query_id", "rank")
-    },
-    "hard_negatives" -> { (s, dir) =>
-      // contrastive mining: per query the top-5 most similar candidates
-      // with cosine <= 0.25 — hard, but safely below the near-dup band
-      // that would make them false negatives
-      val e = corpus(s, dir, "embeddings")
-      Similarity.hardNegatives(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding", k = 5, maxSim = 0.25)
-        .orderBy("query_id", "rank")
-    },
-    "fwht_rotate" -> { (s, dir) =>
-      // H·D/√d structured rotation (the PQ-decorrelation prepass):
-      // fixed butterfly order in double, one scale multiply, cast back
-      // to float — the oracle replays all six stages and the REAL cast
-      // rounds to the same bits
-      corpus(s, dir, "embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"), posexplode(
-          Similarity.fwhtRotate(col("embedding"), dim = 64)))
-        .withColumnRenamed("pos", "dim_idx")
-        .withColumnRenamed("col", "value")
-        .orderBy("vec_id", "dim_idx")
-    },
-    "ranking_metrics" -> { (s, dir) =>
-      // in-engine retrieval eval: the Matryoshka rung graded against
-      // brute-force gold — per query recall@5, first-hit rank, RR; the
-      // oracle replays BOTH rungs and the metric joins
-      val e = corpus(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-      val truth = Similarity.bruteForceTopK(
-        e, "vec_id", "embedding", q, "vec_id", "embedding", k = 5)
-      val result = Similarity.matryoshkaTopK(
-        e, "vec_id", "embedding", q, "vec_id", "embedding",
-        k = 5, coarseDims = 16, rerank = 5)
-      Similarity.rankingMetrics(result, truth, k = 5).orderBy("query_id")
-    },
-    "similarity_mmr" -> { (s, dir) =>
-      // MMR diversity re-rank: brute-force top-8 pool per query, then
-      // greedy λ·rel − (1−λ)·max(0, maxSim) selection of 4 via the
-      // native kernel — earliest-pool-index tie discipline replayed
-      // step-for-step by the oracle's recursive CTE
-      val e = corpus(s, dir, "embeddings")
-      Similarity.mmrTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
-        queryVec = "embedding", k = 4, poolSize = 8, lambda = 0.7)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_lsh" -> { (s, dir) =>
-      Similarity.lshTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, planes = 6, dim = 64)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_lsh_multi" -> { (s, dir) =>
-      Similarity.lshTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, planes = 6, dim = 64, tables = 2)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_ivf" -> { (s, dir) =>
-      Similarity.ivfTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, nCentroids = 8, nprobe = 2)
-        .orderBy("query_id", "rank")
-    },
-    "embedding_profile" -> { (s, dir) =>
-      // per-dim health: dead dims waste PQ bits, nonzero means break
-      // cosine/euclidean agreement — read before codebooks and cuts
-      Similarity.embeddingProfile("embedding")(
-        corpus(s, dir, "embeddings"))
-    },
-    "ann_recall_eval" -> { (s, dir) =>
-      // IVF nprobe tuning table: recall@5 vs brute force for probe
-      // widths 1/2/4 over one shared index build
-      val e = corpus(s, dir, "embeddings")
-      Similarity.ivfRecallEval(e, "vec_id", "embedding",
-        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
-        queryVec = "embedding",
-        k = 5, nCentroids = 8, nprobes = Seq(1, 2, 4))
-    },
-    "similarity_ivf_pq" -> { (s, dir) =>
-      // IVF-ADC: the composed 100 TB read path — probe the 2 of 8
-      // coarse cells nearest each query, ADC-score ONLY those cells'
-      // members from stored PQ codes, exact-cosine rerank the pool.
-      // Both centroid frames are the oracle-reproducible stand-in
-      // (first 8 vectors); production swaps kmeansCentroids /
-      // pqCodebooks with every stage unchanged
-      val e = corpus(s, dir, "embeddings")
-      val cents = Similarity.standinCentroids(e, "vec_id", "embedding", 8)
-      Similarity.ivfPqTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
-        queryVec = "embedding",
-        coarseCentroids = cents, nprobe = 2,
-        pqCentroids = cents, m = 8, k = 3, rerank = 10)
-        .orderBy("query_id", "rank")
-    },
-    "similarity_ivf_pq_res" -> { (s, dir) =>
-      // canonical IVF-PQ: codes encode the RESIDUAL v - center(cell),
-      // ADC scores the exact q·center term plus the LUT'd q·residual —
-      // the codebook's bits spend entirely on within-cell offsets
-      val e = corpus(s, dir, "embeddings")
-      val cents = Similarity.standinCentroids(e, "vec_id", "embedding", 8)
-      Similarity.ivfPqTopK(
-        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
-        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
-        queryVec = "embedding",
-        coarseCentroids = cents, nprobe = 2,
-        pqCentroids = cents, m = 8, k = 3, rerank = 10,
-        residual = true)
-        .orderBy("query_id", "rank")
-    },
-    "mean_pool_embeddings" -> { (s, dir) =>
-      // chunk->embed->pool: per-label mean vector via a deterministic
-      // sorted fold (one row per dimension, scalar-typed)
-      Similarity.meanPool("vec_id", "embedding", "label")(
-        corpus(s, dir, "embeddings"))
-        .orderBy("label", "dim")
-    },
-    "max_pool_embeddings" -> { (s, dir) =>
-      // order-independent pooling: one hash-agg over the exploded dims,
-      // no per-group collect
-      Similarity.maxPool("embedding", "label")(
-        corpus(s, dir, "embeddings"))
-        .orderBy("label", "dim")
-    },
-    "knn_label" -> { (s, dir) =>
-      // kNN majority-vote labeling: queries labeled by their 5 nearest
-      // corpus neighbors' labels, ties to the smallest label
-      val e = corpus(s, dir, "embeddings")
-      Similarity.knnClassify(e, "vec_id", "embedding", "label",
-        queries = e.filter(col("vec_id") < 50), queryId = "vec_id",
-        queryVec = "embedding", k = 5)
-        .orderBy("query_id")
-    },
-    "centroid_assign" -> { (s, dir) =>
-      // nearest-class-mean routing: every vector to its best centroid
-      val e = corpus(s, dir, "embeddings")
-      Similarity.centroidAssign("embedding",
-        Similarity.classCentroids("vec_id", "embedding", "label")(e),
-        "label", "centroid")(e.select("vec_id", "embedding"))
-        .select("vec_id", "centroid_label", "centroid_cos")
-        .orderBy("vec_id")
-    },
-    "l2_normalize" -> { (s, dir) =>
-      // unit-sphere normalization: the sequential array-order fold
-      // makes the float norm (and every element) bit-exact cross-engine;
-      // exploded to (vec_id, dim, unit_val) rows for the compare
-      // pinned before the global sort: the range exchange's sampling
-      // pass re-executed the per-vector normalization fold + explode
-      // (measured 2 × ~0.9 s of the ~2 s cell); output bit-identical
-      table(s, dir, "embeddings")
-        .select(col("vec_id"),
-          posexplode(Similarity.l2Normalize(col("embedding"))))
-        .select(col("vec_id"), col("pos").as("dim"),
-          col("col").as("unit_val"))
-        .localCheckpoint()
-        .orderBy("vec_id", "dim")
-    },
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "ann_recall_eval" -> ivfRecallEvalSql(k = 5, nCentroids = 8,
-      maxQueryId = 10, nprobes = Seq(1, 2, 4)),
-    "embedding_profile" -> embeddingProfileSql,
-    "similarity_topk" -> s"""
+    Query("similarity_topk", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10),
       scored AS (SELECT query_id, c.vec_id AS item_id,
         ${cosineSql("qe", "c.embedding")} AS cosine
@@ -285,11 +22,18 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM scored)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      val e = corpus(s, dir, "embeddings")
+      Similarity.bruteForceTopK(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5)
+        .orderBy("query_id", "rank")
+    },
     // both rankers replayed (full cosine, leading-16 coarse cosine),
     // then the identical RRF expression: coalesce(1/(60+r), 0) per
     // side, one add, item_id tiebreak — mirrors Similarity.rrfFuse
-    "hybrid_rrf" -> s"""
+    Query("hybrid_rrf", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qe
                  FROM embeddings WHERE vec_id < 10),
       fa AS (SELECT query_id, c.vec_id AS item_id, row_number() OVER (
@@ -314,12 +58,29 @@ private[graft] object QueriesSimilarity {
       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY rrf_score DESC, item_id ASC) AS rn FROM j)
       SELECT query_id, item_id, rrf_score, CAST(rn AS INTEGER) AS rank
-      FROM r WHERE rn <= 10 ORDER BY query_id, rank""",
+      FROM r WHERE rn <= 10 ORDER BY query_id, rank""") { (s, dir) =>
+      // reciprocal-rank fusion of two rankers over the same queries —
+      // here full-dim cosine ⊕ leading-16-dim coarse cosine (rankers
+      // on different score scales fuse by RANK, no calibration);
+      // each RRF term is one integer-denominator division, the fusion
+      // one add — oracle bit-for-bit
+      val e = corpus(s, dir, "embeddings")
+      val q = e.filter(col("vec_id") < 10)
+      def coarse(d: DataFrame) = d.select(col("vec_id"),
+        slice(col("embedding"), 1, 16).as("embedding"))
+      val full = Similarity.bruteForceTopK(
+        e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
+      val lowres = Similarity.bruteForceTopK(
+        coarse(e), "vec_id", "embedding", coarse(q), "vec_id", "embedding",
+        k = 10)
+      Similarity.rrfFuse(full, lowres, k0 = 60, topK = 10)
+        .orderBy("query_id", "rank")
+    },
     // int8 symmetric quantization (floor(x*127/amax + 0.5) — the shared
     // round-half-up), integer dot/norms, one double division — mirrors
     // Similarity.bruteForceTopKQuantized; scales cancel so no floats
     // beyond the final ratio
-    "similarity_topk_q8" -> """
+    Query("similarity_topk_q8", """
       WITH c AS (SELECT vec_id,
           list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax,
           embedding FROM embeddings),
@@ -341,12 +102,21 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM scored)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      // the memory-bound form: int8 codes (4x less IO), integer dot +
+      // one IEEE division — scales cancel, so exact cross-engine
+      val e = corpus(s, dir, "embeddings")
+      Similarity.bruteForceTopKQuantized(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5)
+        .orderBy("query_id", "rank")
+    },
     // hamming = count of disagreeing sign bits (the packed-XOR popcount
     // computed dimension-wise — same integer), candidates = best 50 per
     // query by (hamming, item), rerank by exact cosine — mirrors
     // Similarity.hammingTopK
-    "similarity_hamming" -> s"""
+    Query("similarity_hamming", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qe
         FROM embeddings WHERE vec_id < 10),
       ham AS (SELECT query_id, c.vec_id AS item_id,
@@ -369,14 +139,23 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC)
           AS INTEGER) AS rank
       FROM scored
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
+      QUALIFY rank <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      // sign-sketch coarse rank (8 bytes/vector scanned) + exact cosine
+      // rerank of the top-50 sliver
+      val e = corpus(s, dir, "embeddings")
+      Similarity.hammingTopK(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5, rerank = 10)
+        .orderBy("query_id", "rank")
+    },
     // product quantization: sub-centroids = length-derived slices of the
     // first 8 vectors; per (vector, subspace) squared-L2 argmin (fold
     // from 0.0 — squares are never -0.0 — ties to the smaller id-sorted
     // position); ADC score folds the per-subspace query·centroid dots in
     // subspace order from 0.0; top-30 coarse pool, exact-cosine rerank —
     // mirrors Similarity.pqEncode / pqTopK
-    "similarity_pq" -> s"""
+    Query("similarity_pq", s"""
       WITH c AS (SELECT vec_id AS cid,
           row_number() OVER (ORDER BY vec_id) - 1 AS pos,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
@@ -417,13 +196,27 @@ private[graft] object QueriesSimilarity {
       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, item_id ASC) AS rn FROM rr) t
       WHERE rn <= 3
-      ORDER BY query_id, rank""",
+      ORDER BY query_id, rank""") { (s, dir) =>
+      // product-quantization rung: 8 one-byte codes per vector scanned
+      // in the ADC coarse pass (vs 256 B of float32), exact cosine
+      // rerank of the top-30 sliver; stand-in sub-centroids from the
+      // first 8 vectors (oracle-reproducible, same seam as IVF)
+      val e = corpus(s, dir, "embeddings")
+      Similarity.pqTopK(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
+        queryVec = "embedding",
+        centroids = Similarity.standinCentroids(e, "vec_id", "embedding", 8),
+        centroidId = "cid", centroidVec = "center",
+        m = 8, k = 3, rerank = 10)
+        .orderBy("query_id", "rank")
+    },
     // the dim > 64 rung over the widened (128-d) fixture: hamming is the
     // dimension-wise sign-disagreement count (= the packed multi-word
     // XOR popcount sum — same integer), isnan-guarded to the kernel's
     // IEEE semantics; candidates top-50 per query, exact-cosine rerank —
     // mirrors Similarity.hammingTopKWide
-    "similarity_hamming_wide" -> s"""
+    Query("similarity_hamming_wide", s"""
       WITH e AS (SELECT vec_id,
           list_concat(embedding, list_reverse(embedding)) AS embedding
         FROM embeddings),
@@ -449,11 +242,23 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC)
           AS INTEGER) AS rank
       FROM scored
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
+      QUALIFY rank <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      // the dim > 64 rung: 128-dim vectors (the 64-d fixture widened by
+      // concatenating its reverse — deterministic, oracle-shared),
+      // 2-word sketches, summed-popcount coarse rank, exact rerank
+      val e = corpus(s, dir, "embeddings")
+        .select(col("vec_id"),
+          concat(col("embedding"), reverse(col("embedding"))).as("embedding"))
+      Similarity.hammingTopKWide(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5, dim = 128, rerank = 10)
+        .orderBy("query_id", "rank")
+    },
     // MRL two-stage: coarse cosine over the 16-element list prefix
     // (same slice both engines), top-25 pool per query, exact full-dim
     // rerank — mirrors Similarity.matryoshkaTopK
-    "similarity_matryoshka" -> s"""
+    Query("similarity_matryoshka", s"""
       WITH e AS (SELECT vec_id, embedding, embedding[1:16] AS pre
         FROM embeddings),
       q AS (SELECT vec_id AS query_id, embedding AS qe, pre AS qs
@@ -474,11 +279,21 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC)
           AS INTEGER) AS rank
       FROM scored
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
+      QUALIFY rank <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      // MRL two-stage: coarse cosine over the leading 16 of 64 dims
+      // (4x less float payload in the corpus-wide pass), exact
+      // full-dim rerank of the top-25 sliver
+      val e = corpus(s, dir, "embeddings")
+      Similarity.matryoshkaTopK(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5, coarseDims = 16, rerank = 5)
+        .orderBy("query_id", "rank")
+    },
     // the same 8×8 token-vector reinterpretation, Σ_q (fold in token
     // order, seeded 0.0) of list_max over doc tokens of the shared
     // cosine — mirrors Similarity.lateInteractionTopK
-    "late_interaction" -> s"""
+    Query("late_interaction", s"""
       WITH e AS (SELECT vec_id, list_transform(range(0, 8), t ->
           embedding[CAST(t * 8 + 1 AS INT):CAST(t * 8 + 8 AS INT)]) AS tv
         FROM embeddings),
@@ -492,10 +307,22 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY maxsim DESC, item_id ASC) AS rn
         FROM scored)
       SELECT query_id, item_id, maxsim, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""") { (s, dir) =>
+      // ColBERT MaxSim over multi-vector docs: the 64-d fixture vector
+      // reinterpreted as 8 token-vectors of dim 8 (deterministic,
+      // oracle-shared), Σ_q max_d cosine scoring, top-3 per query
+      val e = corpus(s, dir, "embeddings")
+        .select(col("vec_id"), transform(sequence(lit(0), lit(7)),
+          t => slice(col("embedding"), t * 8 + 1, lit(8))).as("tok_vecs"))
+      Similarity.lateInteractionTopK(
+        corpus = e, corpusId = "vec_id", corpusVecs = "tok_vecs",
+        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
+        queryVecs = "tok_vecs", k = 3)
+        .orderBy("query_id", "rank")
+    },
     // band filter BEFORE the per-query rank — mirrors
     // Similarity.hardNegatives
-    "hard_negatives" -> s"""
+    Query("hard_negatives", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qe
         FROM embeddings WHERE vec_id < 10),
       scored AS (SELECT query_id, c.vec_id AS item_id,
@@ -506,11 +333,21 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM banded)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 5 ORDER BY query_id, rank""") { (s, dir) =>
+      // contrastive mining: per query the top-5 most similar candidates
+      // with cosine <= 0.25 — hard, but safely below the near-dup band
+      // that would make them false negatives
+      val e = corpus(s, dir, "embeddings")
+      Similarity.hardNegatives(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding", k = 5, maxSim = 0.25)
+        .orderBy("query_id", "rank")
+    },
     // md5-nibble-parity signs, six butterfly stages pairing i with
     // i XOR 2^s (lower = a+b, upper = a-b), 1/sqrt(64) scale, REAL
     // cast — mirrors functions.FwhtRotate stage for stage
-    "fwht_rotate" -> {
+    Query("fwht_rotate", {
       val sgn = "CASE WHEN (strpos('0123456789abcdef', " +
         "substr(md5('fwht_0_' || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 " +
         "= 0 THEN 1e0 ELSE -1e0 END"
@@ -532,10 +369,21 @@ private[graft] object QueriesSimilarity {
         CAST(v[CAST(i + 1 AS INT)] * (1e0 / sqrt(64e0)) AS REAL) AS value
       FROM (SELECT vec_id, v, unnest(range(0, 64)) AS i FROM s5)
       ORDER BY vec_id, dim_idx"""
+    }) { (s, dir) =>
+      // H·D/√d structured rotation (the PQ-decorrelation prepass):
+      // fixed butterfly order in double, one scale multiply, cast back
+      // to float — the oracle replays all six stages and the REAL cast
+      // rounds to the same bits
+      corpus(s, dir, "embeddings").filter(col("vec_id") < 200)
+        .select(col("vec_id"), posexplode(
+          Similarity.fwhtRotate(col("embedding"), dim = 64)))
+        .withColumnRenamed("pos", "dim_idx")
+        .withColumnRenamed("col", "value")
+        .orderBy("vec_id", "dim_idx")
     },
     // both rungs replayed (brute = gold, matryoshka = system), then the
     // rational metric joins: recall = hits/n_relevant, RR = 1/first-hit
-    "ranking_metrics" -> s"""
+    Query("ranking_metrics", s"""
       WITH e AS (SELECT vec_id, embedding, embedding[1:16] AS pre
         FROM embeddings),
       q AS (SELECT vec_id AS query_id, embedding AS qe, pre AS qs
@@ -573,14 +421,26 @@ private[graft] object QueriesSimilarity {
         CASE WHEN first_hit_rank IS NULL THEN 0e0
           ELSE 1e0 / first_hit_rank END AS reciprocal_rank
       FROM nrel LEFT JOIN m ON nrel.query_id = m.query_id
-      ORDER BY nrel.query_id""",
+      ORDER BY nrel.query_id""") { (s, dir) =>
+      // in-engine retrieval eval: the Matryoshka rung graded against
+      // brute-force gold — per query recall@5, first-hit rank, RR; the
+      // oracle replays BOTH rungs and the metric joins
+      val e = corpus(s, dir, "embeddings")
+      val q = e.filter(col("vec_id") < 10)
+      val truth = Similarity.bruteForceTopK(
+        e, "vec_id", "embedding", q, "vec_id", "embedding", k = 5)
+      val result = Similarity.matryoshkaTopK(
+        e, "vec_id", "embedding", q, "vec_id", "embedding",
+        k = 5, coarseDims = 16, rerank = 5)
+      Similarity.rankingMetrics(result, truth, k = 5).orderBy("query_id")
+    },
     // greedy MMR replayed step-for-step: pool = brute top-8 (cosine
     // desc, id asc = the kernel's pool order), each recursion step
     // picks argmax of λ·rel − (1−λ)·max(0, maxSim(cand, selected))
     // with ties to the LOWEST pool index (the kernel's strict-> scan);
     // maxSim folds pairwise cosines seeded at 0.0, the same float ops
     // in the same order as MmrSelect.cos — mirrors Similarity.mmrTopK
-    "similarity_mmr" -> {
+    Query("similarity_mmr", {
       val lam = 0.7
       val oneMinus = 1.0 - lam
       def score(rel: String, maxsim: String) =
@@ -624,8 +484,19 @@ private[graft] object QueriesSimilarity {
       SELECT query_id, CAST(step AS INTEGER) AS rank, item_id, cosine,
         mmr
       FROM sel ORDER BY query_id, rank"""
+    }) { (s, dir) =>
+      // MMR diversity re-rank: brute-force top-8 pool per query, then
+      // greedy λ·rel − (1−λ)·max(0, maxSim) selection of 4 via the
+      // native kernel — earliest-pool-index tie discipline replayed
+      // step-for-step by the oracle's recursive CTE
+      val e = corpus(s, dir, "embeddings")
+      Similarity.mmrTopK(
+        corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+        queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
+        queryVec = "embedding", k = 4, poolSize = 8, lambda = 0.7)
+        .orderBy("query_id", "rank")
     },
-    "similarity_lsh" -> s"""
+    Query("similarity_lsh", s"""
       WITH bucketed AS (SELECT vec_id, embedding, ${lshBucketSql()} AS bucket
         FROM embeddings),
       cand AS (SELECT a.vec_id AS query_id, b.vec_id AS item_id,
@@ -636,11 +507,15 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM cand)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""") { (s, dir) =>
+      Similarity.lshTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
+        k = 3, planes = 6, dim = 64)
+        .orderBy("query_id", "rank")
+    },
     // two independent plane sets; directed candidate pairs deduplicated
     // by the UNION before the exact-cosine rerank — mirrors
     // Similarity.lshTopK(tables = 2)
-    "similarity_lsh_multi" -> s"""
+    Query("similarity_lsh_multi", s"""
       WITH b0 AS (SELECT vec_id, embedding, ${lshBucketSql(0)} AS bucket
         FROM embeddings),
       b1 AS (SELECT vec_id, embedding, ${lshBucketSql(6)} AS bucket
@@ -659,8 +534,12 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM scored)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""",
-    "similarity_ivf" -> s"""
+      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""") { (s, dir) =>
+      Similarity.lshTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
+        k = 3, planes = 6, dim = 64, tables = 2)
+        .orderBy("query_id", "rank")
+    },
+    Query("similarity_ivf", s"""
       WITH c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings
                  WHERE vec_id < 8),
       sc AS (SELECT e.vec_id AS id, e.embedding AS vec, cid,
@@ -679,14 +558,34 @@ private[graft] object QueriesSimilarity {
           PARTITION BY query_id ORDER BY cosine DESC, item_id ASC) AS rn
         FROM cand)
       SELECT query_id, item_id, cosine, CAST(rn AS INTEGER) AS rank
-      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""",
+      FROM ranked WHERE rn <= 3 ORDER BY query_id, rank""") { (s, dir) =>
+      Similarity.ivfTopK(corpus(s, dir, "embeddings"), "vec_id", "embedding",
+        k = 3, nCentroids = 8, nprobe = 2)
+        .orderBy("query_id", "rank")
+    },
+    Query("embedding_profile", embeddingProfileSql) { (s, dir) =>
+      // per-dim health: dead dims waste PQ bits, nonzero means break
+      // cosine/euclidean agreement — read before codebooks and cuts
+      Similarity.embeddingProfile("embedding")(
+        corpus(s, dir, "embeddings"))
+    },
+    Query("ann_recall_eval", ivfRecallEvalSql(k = 5, nCentroids = 8,
+      maxQueryId = 10, nprobes = Seq(1, 2, 4))) { (s, dir) =>
+      // IVF nprobe tuning table: recall@5 vs brute force for probe
+      // widths 1/2/4 over one shared index build
+      val e = corpus(s, dir, "embeddings")
+      Similarity.ivfRecallEval(e, "vec_id", "embedding",
+        queries = e.filter(col("vec_id") < 10), queryId = "vec_id",
+        queryVec = "embedding",
+        k = 5, nCentroids = 8, nprobes = Seq(1, 2, 4))
+    },
     // IVF-ADC composition: coarse assignment = argmax cosine vs the 8
     // stand-in centroids (ties to the smaller cid — mirrors the
     // centroidAssign fold); queries (vec_id < 5) probe their top-2
     // cells; PQ codes / query LUT / ADC fold exactly as similarity_pq,
     // but the ADC join is RESTRICTED to probed-cell members; top-30
     // pool, exact-cosine rerank — mirrors Similarity.ivfPqTopK
-    "similarity_ivf_pq" -> s"""
+    Query("similarity_ivf_pq", s"""
       WITH c AS (SELECT vec_id AS cid,
           row_number() OVER (ORDER BY vec_id) - 1 AS pos,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv,
@@ -741,13 +640,21 @@ private[graft] object QueriesSimilarity {
       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, item_id ASC) AS rn FROM rr) t
       WHERE rn <= 3
-      ORDER BY query_id, rank""",
+      ORDER BY query_id, rank""") { (s, dir) =>
+      // IVF-ADC: the composed 100 TB read path — probe the 2 of 8
+      // coarse cells nearest each query, ADC-score ONLY those cells'
+      // members from stored PQ codes, exact-cosine rerank the pool.
+      // Both centroid frames are the oracle-reproducible stand-in
+      // (first 8 vectors); production swaps kmeansCentroids /
+      // pqCodebooks with every stage unchanged
+      ivfPqStandin(s, dir, residual = false)
+    },
     // residual IVF-PQ: same coarse assignment/probe CTEs; codes argmin
     // over RESIDUAL slices (v − assigned-cell center, per-element
     // double subtraction mirroring the zip_with); adc = the exact
     // q·center(cell) dot (one per probed (query, cell)) + the same
     // subspace-ordered LUT fold — mirrors ivfPqTopK(residual = true)
-    "similarity_ivf_pq_res" -> s"""
+    Query("similarity_ivf_pq_res", s"""
       WITH c AS (SELECT vec_id AS cid,
           row_number() OVER (ORDER BY vec_id) - 1 AS pos,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv,
@@ -816,26 +723,16 @@ private[graft] object QueriesSimilarity {
       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, item_id ASC) AS rn FROM rr) t
       WHERE rn <= 3
-      ORDER BY query_id, rank""",
-    // the sequential array-order fold both engines share makes the
-    // norm, the division, and the float round-back bit-identical
-    "l2_normalize" -> """
-      SELECT vec_id, CAST(i AS INTEGER) AS dim,
-        CASE WHEN norm = 0e0 THEN embedding[CAST(i + 1 AS INT)]
-             ELSE CAST(CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE) / norm
-               AS FLOAT) END AS unit_val
-      FROM (SELECT vec_id, embedding,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-                (a, b) -> a + b)) AS norm,
-              unnest(range(0, len(embedding))) AS i
-            FROM embeddings)
-      ORDER BY vec_id, dim""",
+      ORDER BY query_id, rank""") { (s, dir) =>
+      // canonical IVF-PQ: codes encode the RESIDUAL v - center(cell),
+      // ADC scores the exact q·center term plus the LUT'd q·residual —
+      // the codebook's bits spend entirely on within-cell offsets
+      ivfPqStandin(s, dir, residual = true)
+    },
     // vectors fold in vec_id order from the first element (list_reduce),
     // cast to double first, divide at the end — the identical IEEE
     // addition sequence as Similarity.meanPool's sorted zip_with fold
-    "mean_pool_embeddings" -> """
+    Query("mean_pool_embeddings", """
       WITH folded AS (SELECT label,
           list_reduce(
             list(list_transform(embedding, x -> CAST(x AS DOUBLE)) ORDER BY vec_id),
@@ -845,20 +742,32 @@ private[graft] object QueriesSimilarity {
       SELECT label, CAST(u.i - 1 AS BIGINT) AS dim,
         s[CAST(u.i AS INT)] / n AS mean_val
       FROM folded, unnest(range(1, len(s) + 1)) u(i)
-      ORDER BY label, dim""",
+      ORDER BY label, dim""") { (s, dir) =>
+      // chunk->embed->pool: per-label mean vector via a deterministic
+      // sorted fold (one row per dimension, scalar-typed)
+      Similarity.meanPool("vec_id", "embedding", "label")(
+        corpus(s, dir, "embeddings"))
+        .orderBy("label", "dim")
+    },
     // float max is order-exact; both engines compare in float and cast
     // the winner to double at the end
-    "max_pool_embeddings" -> """
+    Query("max_pool_embeddings", """
       SELECT label, CAST(i - 1 AS BIGINT) AS dim,
         CAST(max(v) AS DOUBLE) AS max_val
       FROM (SELECT label, unnest(embedding) AS v,
               unnest(range(1, len(embedding) + 1)) AS i
             FROM embeddings)
-      GROUP BY label, i ORDER BY label, dim""",
+      GROUP BY label, i ORDER BY label, dim""") { (s, dir) =>
+      // order-independent pooling: one hash-agg over the exploded dims,
+      // no per-group collect
+      Similarity.maxPool("embedding", "label")(
+        corpus(s, dir, "embeddings"))
+        .orderBy("label", "dim")
+    },
     // top-5 neighbor selection identical to similarity_topk (vec_id < 50
     // queries), then one vote count per (query, label); the winner rule
     // (max votes, ties to the smallest label) mirrors Similarity.labelVote
-    "knn_label" -> s"""
+    Query("knn_label", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qe
         FROM embeddings WHERE vec_id < 50),
       scored AS (SELECT query_id, c.vec_id AS item_id,
@@ -873,12 +782,20 @@ private[graft] object QueriesSimilarity {
       SELECT query_id, label AS predicted_label, votes FROM votes
       QUALIFY row_number() OVER (
         PARTITION BY query_id ORDER BY votes DESC, label ASC) = 1
-      ORDER BY query_id""",
+      ORDER BY query_id""") { (s, dir) =>
+      // kNN majority-vote labeling: queries labeled by their 5 nearest
+      // corpus neighbors' labels, ties to the smallest label
+      val e = corpus(s, dir, "embeddings")
+      Similarity.knnClassify(e, "vec_id", "embedding", "label",
+        queries = e.filter(col("vec_id") < 50), queryId = "vec_id",
+        queryVec = "embedding", k = 5)
+        .orderBy("query_id")
+    },
     // centroids fold exactly like mean_pool_embeddings (vec_id-ordered
     // list_reduce — the identical IEEE addition sequence as meanPool),
     // then every vector routes to its max-cosine centroid, ties to the
     // smallest label — mirrors Similarity.centroidAssign's argmax fold
-    "centroid_assign" -> s"""
+    Query("centroid_assign", s"""
       WITH folded AS (SELECT label,
           list_reduce(
             list(list_transform(embedding, x -> CAST(x AS DOUBLE)) ORDER BY vec_id),
@@ -894,6 +811,60 @@ private[graft] object QueriesSimilarity {
       SELECT vec_id, c_label AS centroid_label, centroid_cos FROM scored
       QUALIFY row_number() OVER (
         PARTITION BY vec_id ORDER BY centroid_cos DESC, c_label ASC) = 1
-      ORDER BY vec_id""",
+      ORDER BY vec_id""") { (s, dir) =>
+      // nearest-class-mean routing: every vector to its best centroid
+      val e = corpus(s, dir, "embeddings")
+      Similarity.centroidAssign("embedding",
+        Similarity.classCentroids("vec_id", "embedding", "label")(e),
+        "label", "centroid")(e.select("vec_id", "embedding"))
+        .select("vec_id", "centroid_label", "centroid_cos")
+        .orderBy("vec_id")
+    },
+    // the sequential array-order fold both engines share makes the
+    // norm, the division, and the float round-back bit-identical
+    Query("l2_normalize", """
+      SELECT vec_id, CAST(i AS INTEGER) AS dim,
+        CASE WHEN norm = 0e0 THEN embedding[CAST(i + 1 AS INT)]
+             ELSE CAST(CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE) / norm
+               AS FLOAT) END AS unit_val
+      FROM (SELECT vec_id, embedding,
+              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+                list_transform(embedding,
+                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
+                (a, b) -> a + b)) AS norm,
+              unnest(range(0, len(embedding))) AS i
+            FROM embeddings)
+      ORDER BY vec_id, dim""") { (s, dir) =>
+      // unit-sphere normalization: the sequential array-order fold
+      // makes the float norm (and every element) bit-exact cross-engine;
+      // exploded to (vec_id, dim, unit_val) rows for the compare
+      // pinned before the global sort: the range exchange's sampling
+      // pass re-executed the per-vector normalization fold + explode
+      // (measured 2 × ~0.9 s of the ~2 s cell); output bit-identical
+      table(s, dir, "embeddings")
+        .select(col("vec_id"),
+          posexplode(Similarity.l2Normalize(col("embedding"))))
+        .select(col("vec_id"), col("pos").as("dim"),
+          col("col").as("unit_val"))
+        .localCheckpoint()
+        .orderBy("vec_id", "dim")
+    },
   )
+
+  /** IVF-PQ top-3 for the first 5 vectors over the oracle-reproducible
+    * stand-in centroids (the first 8 vectors) as both the coarse cells and
+    * the PQ codebook: 2 of 8 cells probed, 8 subspaces, rerank pool 10. */
+  private def ivfPqStandin(s: SparkSession, dir: String,
+      residual: Boolean): DataFrame = {
+    val e = corpus(s, dir, "embeddings")
+    val cents = Similarity.standinCentroids(e, "vec_id", "embedding", 8)
+    Similarity.ivfPqTopK(
+      corpus = e, corpusId = "vec_id", corpusVec = "embedding",
+      queries = e.filter(col("vec_id") < 5), queryId = "vec_id",
+      queryVec = "embedding",
+      coarseCentroids = cents, nprobe = 2,
+      pqCentroids = cents, m = 8, k = 3, rerank = 10,
+      residual = residual)
+      .orderBy("query_id", "rank")
+  }
 }

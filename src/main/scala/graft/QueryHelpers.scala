@@ -6,8 +6,8 @@ import graft.ext.{BinaryOps, Dedup, Frequency, GraphOps, Similarity, TextOps}
 import graft.ops.{Ops, TemporalOps, WindowOps}
 import graft.probes.Probes
 
-/** Shared fixture builders and DuckDB SQL fragments for the per-family
-  * query files (split from the ExtQueries monolith, round 14). */
+/** Shared fixture builders and DuckDB SQL fragments for the query
+  * families. */
 private[graft] object QueryHelpers {
   import SparkEntry.table
 
@@ -270,7 +270,7 @@ private[graft] object QueryHelpers {
       ORDER BY doc_id, span_start"""
   }
 
-  /** Interpolated bigram LM score — see the oracleSql entry comment. */
+  /** Interpolated bigram LM score — see the `bigram_lm_quality` entry comment. */
   def bigramLmSql(lambda: Double): String = s"""
       WITH tok AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
         FROM documents),

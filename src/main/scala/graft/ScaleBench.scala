@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.TextOps
 
@@ -20,13 +20,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(SparkEntry.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Optional comma-separated phase subset (spans / bm25 / cc / ann /
@@ -53,6 +47,10 @@ object ScaleBench {
       System.gc()
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
+    def median3(f: => Unit): Double =
+      (1 to 3).map(_ => time(f)).sorted.apply(1)
+    def noop(d: DataFrame): Unit =
+      d.write.mode("overwrite").format("noop").save()
     phase("spans") {
     // warm-up at x1 so codegen/noop-sink init doesn't land on the x1 cell
     TextOps.duplicateSpans("doc_id", "text", n = 8)(replicated(1))
@@ -109,8 +107,6 @@ object ScaleBench {
     // here would falsify. Cells are medians of 3 (single cells swing up
     // to ~3× on this box).
     import graft.ext.Dedup
-    def median3(f: => Unit): Double =
-      (1 to 3).map(_ => time(f)).sorted.apply(1)
     val vecsBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val nv = vecsBase.count()
@@ -894,9 +890,6 @@ object ScaleBench {
         col("text")))
         .reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     def tfidfJob(d: DataFrame, cap: Int): Unit =
       TextOps.tfidfCosinePairs("doc_id", "text", threshold = 0.3,
         maxDf = cap)(d)
@@ -938,9 +931,6 @@ object ScaleBench {
         col("q"), col("negc")))
         .reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     def paretoJob(d: DataFrame): Unit =
       graft.ops.Ops.paretoFront("q", "negc")(d)
         .write.mode("overwrite").format("noop").save()
@@ -973,9 +963,6 @@ object ScaleBench {
     // the SFS-fold skyline must track the corpus linearly like the
     // 2-D windows cell above it.
     import graft.ext.{Dedup, Similarity, TextOps}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     val docsAll = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val ndA = docsAll.count()
@@ -1088,9 +1075,6 @@ object ScaleBench {
     // after the line pass and the tail stages would measure nothing —
     // rotation keeps every stage loaded ×k, so the curve prices the
     // whole composition, not its front half.
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     val docsF = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "lang", "source", "text")
     val ndF = docsF.count()
@@ -1167,9 +1151,6 @@ object ScaleBench {
       Conversations.truncate("user_id", Seq("ts", "event_id"),
         "role", "content", budget = 30)(d)
         .write.mode("overwrite").format("noop").save()
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     locally { val d1 = longer(1).localCheckpoint()
       asmJob(d1); truncJob(d1); d1.unpersist() }
     val convRows = for (k <- Seq(1, 2, 4)) yield {
@@ -1252,9 +1233,6 @@ object ScaleBench {
     phase("r15") {
     import graft.ops.{Ops => O15, WindowOps => W15}
     import graft.ext.{GraphOps => G15, TextOps => T15}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     // rollingCorr: rows-linearity at fixed window (disjoint-key
     // replication: keys ×k, rows ×k — window partitions never span
     // replicas), then the window-growth curve (cumsum-minus-lag frame
@@ -1387,9 +1365,6 @@ object ScaleBench {
     import graft.ops.{Ops => O15b}
     import graft.ext.{Frequency => F15b, GraphOps => G15b}
     import graft.probes.{Probes => P15b}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     // bootstrapCI: cost is explode × reps with map-side combine — must
     // be ~linear in reps AND in rows (disjoint-key replication)
     val cust = spark.read.parquet(s"$sfDir/customer.parquet")
@@ -1515,9 +1490,6 @@ object ScaleBench {
     // batch + cross-universe buckets never materialize.
     phase("r15c") {
     import graft.ext.{Dedup => D15, TextOps => T15c}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     val docs15c = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").filter(col("text").isNotNull)
     val nDocs15c = docs15c.count()
@@ -1558,9 +1530,6 @@ object ScaleBench {
     phase("r16") {
     import graft.ext.{Dedup => D16, GraphOps => G16, TextOps => T16}
     import graft.probes.{Probes => P16}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
     // fellegiSunterFit: the pattern collapse makes each EM round
     // O(3^f) — ×1/×2/×4 pairs at fixed f should pay only the one
     // linear collapse scan, and the PER-ROUND marginal
@@ -1733,11 +1702,6 @@ object ScaleBench {
     phase("r16b") {
     import graft.ext.{GraphOps => G16b, TextOps => T16b}
     import graft.probes.{Probes => P16b}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
 
     // trigramLmQuality: docs ×1/×2/×4 at a FIXED count table (linear
     // in trigram positions — the scoring pass), then table ×1/×2/×4 at
@@ -1909,11 +1873,6 @@ object ScaleBench {
     // ops; bhCorrect is |tests|-sized by contract, no curve to fit) ----
     phase("r16c") {
     import graft.probes.{Probes => P16c}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
     val li16c = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .filter(col("l_extendedprice").isNotNull)
       .select(col("l_suppkey"), col("l_orderkey"), col("l_extendedprice"))
@@ -2001,11 +1960,6 @@ object ScaleBench {
     phase("r17") {
     import graft.probes.{Probes => P17}
     import graft.ext.{TextOps => T17}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
     // kTruss at rounds 1/5/10/30 on the FIXED oracle-shaped graph
     // (fixpoint at ~5): maintained supports pay the one full wedge
     // enumeration at round 0 and peel-front-proportional deltas after,
@@ -2162,11 +2116,6 @@ object ScaleBench {
     phase("r17b") {
     import graft.probes.{Probes => P17b}
     import graft.ext.{TextOps => T17b}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
     // wilcoxonSignedRank (one rank window per group — the MWU cost
     // class) and signTest (one hash-agg — must be flat) on the same
     // paired frame, rows ×1/×2/×4 over disjoint groups
@@ -2347,11 +2296,6 @@ object ScaleBench {
 
     phase("r18") {
     import graft.probes.{Probes => P18}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
     val ev18 = spark.read.parquet(s"$sfDir/events.parquet")
       .filter(col("value").isNotNull && col("event_id").isNotNull &&
         col("user_id").isNotNull)
@@ -2514,11 +2458,6 @@ object ScaleBench {
 
     phase("r19") {
     import graft.probes.{Probes => P19}
-    def median3(f: => Unit): Double = {
-      val ts = (1 to 3).map(_ => time(f)); ts.sorted.apply(1)
-    }
-    def noop(d: DataFrame): Unit =
-      d.write.mode("overwrite").format("noop").save()
     val ev19 = spark.read.parquet(s"$sfDir/events.parquet")
       .filter(col("value").isNotNull && col("event_id").isNotNull &&
         col("user_id").isNotNull)
