@@ -108,7 +108,8 @@ object Bench {
     val runs = results.map { case (k, (_, _, ts)) =>
       s"\"" + k + "\":" + ts.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
+    // a query whose every rep failed has median -1: it adds nothing
+    val total = results.map(_._2._1).filter(_ >= 0).sum
     // a query with any failed timed rep, listed by name
     val failed = results.collect { case (k, (_, _, ts)) if ts.contains(-1.0) => k }
     val line =

@@ -64,22 +64,26 @@ object SparkEntry {
               s"with .config(\"$NanosAsLongKey\", \"true\") (see SparkEntry.NanosAsLongKey)",
             e)
       }
+    normalizeTs(df)
+  }
+
+  /** The fixtures' `ts` column as a TIMESTAMP, keyed on the observed
+    * schema so either fixture vintage loads identically: nanos int64
+    * (read as a long under [[NanosAsLongKey]]) is truncated to micros;
+    * the 2026-08-13 regeneration's micros isAdjustedToUTC=false, which
+    * Spark reads as TIMESTAMP_NTZ, is cast to the session-zone instant
+    * type (UTC session ⇒ identical wall-clock values) so the temporal
+    * surface (unix_micros, window, sessionize) keeps its TIMESTAMP
+    * contract. Works on batch and streaming frames alike. */
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
         df.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-      // the 2026-08-13 fixture regeneration moved events.ts from nanos
-      // int64 to micros isAdjustedToUTC=false, which Spark reads as
-      // TIMESTAMP_NTZ — cast to the session-zone instant type (UTC
-      // session ⇒ identical wall-clock values) so the temporal surface
-      // (unix_micros, window, sessionize) keeps its TIMESTAMP contract;
-      // keyed on the observed schema like the nanos branch, so either
-      // fixture vintage loads identically
       case Some(org.apache.spark.sql.types.TimestampNTZType) =>
         df.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference README's flagship: source -> aggregate -> output. */

@@ -1139,9 +1139,9 @@ object Dedup {
     * the df of rare tokens, not corpus size. Candidates then pass the
     * length-compatibility filter (`τ·max(|a|,|b|) ≤ min(|a|,|b|)`,
     * epsilon-guarded OUTWARD so float τ·n never prunes a true pair)
-    * and verify with one exact `array_intersect` — counts are
-    * integers, `jaccard` one exact division, so the threshold is
-    * oracle-safe.
+    * and verify with the one-pass native [[TextOps.jaccard]] kernel —
+    * counts are integers, `jaccard` one exact division, so the
+    * threshold is oracle-safe.
     *
     * Contract: `tokensField` is an `array<string>` treated as a SET
     * (de-duplicated internally); NULL or empty sets produce no pairs
@@ -1183,11 +1183,7 @@ object Dedup {
         "id_a")
       .join(base.select(col("__id").as("id_b"), col("__toks").as("__tb")),
         "id_b")
-      .withColumn("__ov",
-        size(array_intersect(col("__ta"), col("__tb"))))
-      .withColumn("jaccard", col("__ov").cast("double") /
-        (size(col("__ta")) + size(col("__tb")) - col("__ov"))
-          .cast("double"))
+      .withColumn("jaccard", TextOps.jaccard(col("__ta"), col("__tb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -1383,36 +1379,67 @@ object Dedup {
     * MinHash signatures; this op computes it exactly, so a qualifying
     * duplicate can never slip through a band split). A batch document
     * is dropped when its TRUE Jaccard reaches `threshold` against (a)
-    * any index document sharing a prefix-token bucket, or (b) any
+    * any index document sharing a prefix token, or (b) any
     * SMALLER-id batch document sharing one (the greedy in-batch
     * election, [[incrementalNearDup]]'s convention). Survivors return
     * with all batch columns; append their [[ssjIndexRows]] to the
     * index for the next batch.
     *
-    * Candidates form under the same prefix + length + positional
-    * filters as [[setSimilarityJoin]], in the index's universal hash
-    * order (positions in the stored arrays ARE global positions, so
-    * the positional bound applies unchanged) — and they form from the
-    * index's `toks_prefix` COLUMN, never the wide `toks` one: the
-    * candidate-stage scan of a Parquet-backed index reads only
-    * (id, n, toks_prefix) (column pruning — verified in the spec's
-    * ReadSchema assertion), and the full token arrays are joined back
-    * ONLY for the exact verify of actual candidates. `threshold` must
-    * be ≥ the index's committed `tauMin` (the [[ssjIndexRows]]
-    * contract; enforced here via the `indexTauMin` parameter — the
-    * stored prefix must cover the τ-prefix or recall silently breaks,
-    * so a violating call fails fast instead). A legacy 3-column
-    * `(id, toks, n)` index still works — the prefix derives from
-    * `toks` at query time, paying the old full-column scan.
-    * With `maxBucket = 0`
-    * (default) buckets are uncapped and recall is GUARANTEED — the
-    * point of the exact rung; a positive cap is the production knob
-    * for adversarial corpora (a pile of near-identical docs collapsing
-    * into one bucket) and trades the guarantee for bounded reducers,
-    * documented exactly like the probabilistic legs' caps. Cost per
-    * batch: one prefix-column scan of the stored index + Σ_buckets
-    * |idx|·|batch| + in-batch pair work — never batch×history
-    * all-pairs. */
+    * Candidates are a flat equi-join on the prefix token: the index's
+    * posexploded τ-prefix rows `(token, id, n, position)` probe the
+    * batch's (broadcast — the batch is the small side), and the same
+    * batch rows self-join for the in-batch leg. The length filter
+    * (`τ·max(n_a,n_b) ≤ min(n_a,n_b)`) and PPJoin's positional filter
+    * at the shared token (`min(i,j) + min(n_a−i, n_b−j)` reaches the
+    * overlap floor `α = ⌈τ/(1+τ)·(n_a+n_b)⌉`, see
+    * [[setSimilarityJoin]]) are plain join conditions. The rows then
+    * group per pair, and with `maxBucket = 0` (default) the pair
+    * survives only under PPJoin's ACCUMULATED overlap bound (Xiao et
+    * al., WWW 2008): `c + min(n_a − max i, n_b − max j) ≥ α`, where `c`
+    * counts the pair's shared prefix tokens and `(max i, max j)` is the
+    * last of them. Why it is complete: both arrays are sorted by the
+    * one universal hash order, so a shared token lies below the last
+    * shared prefix token in `a` exactly when it does in `b`; every
+    * shared token below it therefore sits inside BOTH prefixes and is
+    * counted in `c`, and at most `min(n_a − max i, n_b − max j)` shared
+    * tokens lie above it. A pair with true overlap ≥ α also passes the
+    * positional filter at EVERY shared token (the per-token bound is
+    * the same argument with `c ≤ min(i, j)`), so the filter never
+    * drops one of its rows, `c` is exact for it, and the bound keeps
+    * it. All ceils carry the 1e-9 DOWN-guard, so float rounding only
+    * weakens a prune. Surviving pairs verify with the one-pass native
+    * [[TextOps.jaccard]] kernel — counts are integers and the ratio one
+    * division, the same double `|A∩B| / (|A|+|B|−|A∩B|)` gives.
+    *
+    * The candidate join reads the index's `toks_prefix` COLUMN, never
+    * the wide `toks` one: the candidate-stage scan of a Parquet-backed
+    * index reads only (id, n, toks_prefix) (column pruning — verified
+    * in the spec's ReadSchema assertion), and the full token arrays
+    * are joined back ONLY for the exact verify of actual candidates —
+    * two reads of the index by design, one narrow and one wide.
+    * `threshold` must be ≥ the index's committed `tauMin` (the
+    * [[ssjIndexRows]] contract; enforced here via the `indexTauMin`
+    * parameter — the stored prefix must cover the τ-prefix or recall
+    * silently breaks, so a violating call fails fast instead). A
+    * legacy 3-column `(id, toks, n)` index still works — the prefix
+    * derives from `toks` at query time, paying the full-column scan.
+    *
+    * With `maxBucket = 0` recall is GUARANTEED — the point of the
+    * exact rung. A positive cap is the production knob for adversarial
+    * corpora (a pile of near-identical docs collapsing onto one token):
+    * a prefix token shared by more than `maxBucket` documents on either
+    * side forms no candidates, and the pair is kept when the length
+    * and positional filters pass at any remaining shared token (the
+    * accumulated bound would undercount `c` over the dropped tokens).
+    * That trades the guarantee for bounded work, documented exactly
+    * like the probabilistic legs' caps.
+    *
+    * Cost per batch: one prefix-column scan of the stored index, one
+    * broadcast probe emitting a row per (index doc, batch doc, shared
+    * prefix token) that passes the filters, one partially aggregated
+    * shuffle of those rows to pairs, the same for the batch against
+    * itself, and one verify join of the surviving pairs with the full
+    * token arrays — never batch×history all-pairs. */
   def incrementalSetSimilarity(
       idField: String, tokensField: String, index: DataFrame,
       threshold: Double, maxBucket: Int = 0,
@@ -1454,60 +1481,54 @@ object Dedup {
       .localCheckpoint()
     val p = (col("__n") -
       ceil(lit(threshold) * col("__n") - lit(1e-9)) + 1).cast("int")
-    def prefixes(d: DataFrame) = d
-      .select(col("__id"), col("__n"),
-        posexplode(slice(col("__pre"), lit(1), greatest(p, lit(1)))))
-      .select(col("__id"), col("__n"), (col("pos") + 1).as("__p"),
-        col("col").as("__pt"))
-    val cap = if (maxBucket == 0) Int.MaxValue else maxBucket
-    def buckets(d: DataFrame, out: String, minSize: Int) =
-      prefixes(d)
-        // NO explicit-count partitioning here (unlike ssjCandidates):
-        // it was A/B'd and reverted — forcing both bucket sides to a
-        // matching wide hash layout flips the history×batch bucket
-        // join from a broadcast to a sort-merge over bucket-list array
-        // rows, and sorting those arrays measured 5-50× worse than the
-        // coalesced broadcast plan
-        .groupBy(col("__pt"))
-        .agg(collect_list(struct(col("__id"), col("__n"), col("__p")))
-          .as(out))
-        .filter(size(col(out)).between(minSize, cap))
-    val tau = threshold / (1.0 + threshold)
-    def pairOk(x: Column, y: Column): Column =
-      least(x("__n"), y("__n")).cast("double") >=
-        lit(threshold) * greatest(x("__n"), y("__n")) - lit(1e-9) &&
-        (least(x("__p"), y("__p")) +
-          least(x("__n") - x("__p"), y("__n") - y("__p"))) >=
-        ceil(lit(tau) * (x("__n") + y("__n")) - lit(1e-9))
-    // history × batch candidates (id collisions dropped defensively —
-    // disjoint id spaces expected, the incrementalNearDup convention)
-    val crossCands = buckets(idxNarrow, "__la", minSize = 1)
-      .join(buckets(batchRows, "__lb", minSize = 1), Seq("__pt"))
-      .select(explode(flatten(transform(col("__la"), x =>
-        transform(filter(col("__lb"), y =>
-          x("__id") =!= y("__id") && pairOk(x, y)),
-          y => struct(x("__id").as("id_a"), y("__id").as("id_b"))))))
-        .as("__c"))
-      .select(col("__c.id_a").as("id_a"), col("__c.id_b").as("id_b"))
-      .distinct()
-    // in-batch candidates: ordered pairs, smaller id survives
-    val inCands = buckets(batchRows, "__ids", minSize = 2)
-      .select(explode(flatten(transform(col("__ids"), x =>
-        transform(filter(col("__ids"), y =>
-          x("__id") < y("__id") && pairOk(x, y)),
-          y => struct(x("__id").as("id_a"), y("__id").as("id_b"))))))
-        .as("__c"))
-      .select(col("__c.id_a").as("id_a"), col("__c.id_b").as("id_b"))
-      .distinct()
+    // one row per (prefix token, doc); with a cap, tokens held by more
+    // than maxBucket docs of this side are dropped
+    def prefixes(d: DataFrame) = {
+      val rows = d
+        .select(col("__id"), col("__n"),
+          posexplode(slice(col("__pre"), lit(1), greatest(p, lit(1)))))
+        .select(col("__id"), col("__n"), (col("pos") + 1).as("__p"),
+          col("col").as("__pt"))
+      if (maxBucket == 0) rows
+      else rows.join(rows.groupBy(col("__pt")).count()
+        .filter(col("count") <= maxBucket), Seq("__pt"), "left_semi")
+    }
+    def side(rows: DataFrame, s: String) = rows.select(
+      col("__pt").as(s"__pt$s"), col("__id").as(s"id_$s"),
+      col("__n").as(s"__n$s"), col("__p").as(s"__p$s"))
+    val (na, nb, pa, pb) =
+      (col("__na"), col("__nb"), col("__pa"), col("__pb"))
+    // the Jaccard-implied overlap floor α, down-guarded ceil
+    val alpha = ceil(lit(threshold / (1.0 + threshold)) * (na + nb) -
+      lit(1e-9))
+    // the b side is always the batch, broadcast into the join
+    def candidates(a: DataFrame, b: DataFrame, idOk: Column) = {
+      val rows = side(a, "a").join(broadcast(side(b, "b")),
+        col("__pta") === col("__ptb") && idOk &&
+        least(na, nb).cast("double") >=
+          lit(threshold) * greatest(na, nb) - lit(1e-9) &&
+        least(pa, pb) + least(na - pa, nb - pb) >= alpha)
+      if (maxBucket > 0) rows.select("id_a", "id_b").distinct()
+      // __pa/__pb become the positions of the LAST shared prefix token
+      else rows.groupBy(col("id_a"), na, col("id_b"), nb)
+        .agg(count(lit(1)).as("__c"), max(pa).as("__pa"),
+          max(pb).as("__pb"))
+        .filter(col("__c") + least(na - pa, nb - pb) >= alpha)
+        .select("id_a", "id_b")
+    }
+    val batchPre = prefixes(batchRows)
+    // history × batch (id collisions dropped defensively — disjoint id
+    // spaces expected, the incrementalNearDup convention), then the
+    // in-batch leg: ordered pairs, smaller id survives
+    val crossCands = candidates(prefixes(idxNarrow), batchPre,
+      col("id_a") =!= col("id_b"))
+    val inCands = candidates(batchPre, batchPre, col("id_a") < col("id_b"))
     def losers(cands: DataFrame, aSide: DataFrame) = cands
       .join(aSide.select(col("__id").as("id_a"), col("__toks").as("__ta")),
         "id_a")
       .join(batchRows.select(col("__id").as("id_b"),
         col("__toks").as("__tb")), "id_b")
-      .withColumn("__ov", size(array_intersect(col("__ta"), col("__tb"))))
-      .filter(col("__ov").cast("double") /
-        (size(col("__ta")) + size(col("__tb")) - col("__ov"))
-          .cast("double") >= threshold)
+      .filter(TextOps.jaccard(col("__ta"), col("__tb")) >= threshold)
       .select(col("id_b"))
     // NOT pinned (r20): the anti-join's broadcast of `dups` is one
     // BroadcastExchange node, materialized once even when a caller's

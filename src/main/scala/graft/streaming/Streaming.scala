@@ -2136,8 +2136,8 @@ object Streaming {
     * hash order (a NULL keeper row carries zero-token docs through —
     * they match nothing and survive); ONE stateless stream-static LEFT
     * join on the prefix token carries the batch op's length +
-    * positional filters AND the exact `array_intersect` verify as
-    * RESIDUAL conditions; one watermark-bounded aggregation per
+    * positional filters AND the exact one-pass
+    * [[graft.ext.TextOps.jaccard]] verify as RESIDUAL conditions; one watermark-bounded aggregation per
     * document counts verified hits, and hit-free documents pass with
     * all their columns. In-stream repeats: exact-SET duplicates drop
     * via `dropDuplicatesWithinWatermark` on the canonical token-array
@@ -2212,7 +2212,6 @@ object Streaming {
         explode(col("__pref")).as("__pe")): _*)
       .select(cols.map(col) ++ Seq(col("__stoks"), col("__sn"),
         col("__pe.pos").as("__spos"), col("__pe.col").as("__spt")): _*)
-    val ov = size(array_intersect(col("__stoks"), col("__itoks")))
     val joined = toks.join(idxPref,
       col("__spt") === col("__ipt") &&
         least(col("__sn"), col("__in")).cast("double") >=
@@ -2220,8 +2219,8 @@ object Streaming {
         (least(col("__spos"), col("__ipos")) +
           least(col("__sn") - col("__spos"), col("__in") - col("__ipos"))) >=
           ceil(lit(tau) * (col("__sn") + col("__in")) - lit(1e-9)) &&
-        ov.cast("double") /
-          (col("__sn") + col("__in") - ov).cast("double") >= threshold,
+        graft.ext.TextOps.jaccard(col("__stoks"), col("__itoks")) >=
+          threshold,
       "left")
     joined
       .groupBy(cols.map(col): _*)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming demo main: the events fixture replayed as a bounded file
@@ -25,8 +24,8 @@ object StreamingDemo {
     // A streaming source needs a fixed schema up front (no per-batch
     // inference) — take it from a batch peek of the same path.
     val schema = spark.read.parquet(src.toString).schema
-    val raw = Streaming.readParquetStream(spark, dir.toString, schema)
-      .withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
+    val raw = graft.SparkEntry.normalizeTs(
+      Streaming.readParquetStream(spark, dir.toString, schema))
 
     val counts = Streaming.windowedEventCounts(
       raw, windowLength = "6 hours", watermarkDelay = "1 hour")

@@ -775,6 +775,91 @@ class DedupSpec extends SparkSpec {
         !bIds.filter(_ < i).exists(o => jac(sets(o), sets(i)) >= 0.4)
     }.toSet
     assert(legacyLow === expected04)
+
+    // adversarial fixture for the accumulated overlap bound: forty
+    // families of base sets with lengths spread over 4..24, each
+    // member its base minus 0-3 random tokens, plus 1-6 of six
+    // corpus-wide tokens and 0-2 noise tokens, so frequent tokens
+    // crowd the prefixes and the length filter, the per-token
+    // positional filter and the per-pair bound all prune
+    val rnd = new scala.util.Random(11)
+    val adv = (1 to 160).map { i =>
+      val fam = i % 40
+      val base = (0 until 4 + (fam * 5) % 21).map(j => s"f${fam}_$j")
+      val kept = (0 until rnd.nextInt(4)).foldLeft(base) { (t, _) =>
+        if (t.size > 1) t.patch(rnd.nextInt(t.size), Nil, 1) else t }
+      val noise = Seq.fill(rnd.nextInt(3))(s"r${rnd.nextInt(30)}")
+      (i.toLong, kept ++ (0 until 1 + i % 6).map(c => s"c$c") ++ noise)
+    }
+    val advSets = adv.map { case (i, t) => i -> t.toSet }.toMap
+    val advHist = adv.filter(_._1 <= 70).toDF("id", "toks")
+    val advBatch = adv.filter(_._1 > 70).toDF("id", "toks")
+    val advIds = adv.map(_._1).filter(_ > 70)
+    val advIdx = graft.ext.Dedup.ssjIndexRows("id", "toks")(advHist)
+    def advTruth(tau: Double): Set[Long] = advIds.filter { i =>
+      !(1L to 70L).exists(h => jac(advSets(h), advSets(i)) >= tau) &&
+        !advIds.filter(_ < i).exists(o => jac(advSets(o), advSets(i)) >= tau)
+    }.toSet
+    def survivors(index: org.apache.spark.sql.DataFrame, tau: Double,
+        maxBucket: Int = 0): Set[Long] =
+      graft.ext.Dedup.incrementalSetSimilarity("id", "toks", index,
+        threshold = tau, maxBucket = maxBucket)(advBatch)
+        .select("id").as[Long].collect().toSet
+    for (tau <- Seq(0.5, 0.7, 0.9)) {
+      val truth = advTruth(tau)
+      assert(truth.nonEmpty && truth.size < advIds.size,
+        s"tau=$tau: the fixture should drop some docs and keep some")
+      assert(survivors(advIdx, tau) === truth, s"tau=$tau (tauMin index)")
+      assert(survivors(advIdx.select("id", "toks", "n"), tau) === truth,
+        s"tau=$tau (legacy index)")
+    }
+    // a positive cap keeps the per-shared-token rule: a pair is a
+    // candidate when some shared tau-prefix token held by at most
+    // maxBucket docs on EACH side passes the length and positional
+    // filters; recomputed here by brute force over the same
+    // hash-ordered arrays the index stores
+    val advBatchRows = graft.ext.Dedup.ssjIndexRows("id", "toks")(advBatch)
+    def ordered(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      d.select("id", "toks").as[(Long, Seq[String])].collect().toMap
+    val (hOrd, bOrd) = (ordered(advIdx), ordered(advBatchRows))
+    def cappedTruth(tau: Double, cap: Int): Set[Long] = {
+      def pre(t: Seq[String]) = {
+        val n = t.size
+        t.take(math.max(n - math.ceil(tau * n - 1e-9).toInt + 1, 1))
+      }
+      def bucketSize(side: Map[Long, Seq[String]]) =
+        side.values.flatMap(pre).groupBy(identity).map { case (t, v) =>
+          t -> v.size }
+      val (hSize, bSize) = (bucketSize(hOrd), bucketSize(bOrd))
+      val alphaTau = tau / (1.0 + tau)
+      def candidate(a: Seq[String], aSize: Map[String, Int],
+          b: Seq[String]): Boolean = {
+        val (na, nb) = (a.size, b.size)
+        val bPos = pre(b).zipWithIndex.toMap
+        pre(a).zipWithIndex.exists { case (t, ia) =>
+          bPos.get(t).exists { ib =>
+            val (i, j) = (ia + 1, ib + 1)
+            aSize(t) <= cap && bSize(t) <= cap &&
+              math.min(na, nb).toDouble >= tau * math.max(na, nb) - 1e-9 &&
+              math.min(i, j) + math.min(na - i, nb - j) >=
+                math.ceil(alphaTau * (na + nb) - 1e-9)
+          }
+        }
+      }
+      def hit(a: Seq[String], b: Seq[String]) = jac(a.toSet, b.toSet) >= tau
+      advIds.filter { i =>
+        !hOrd.exists { case (h, a) =>
+          h != i && candidate(a, hSize, bOrd(i)) && hit(a, bOrd(i)) } &&
+          !advIds.filter(_ < i).exists(o =>
+            candidate(bOrd(o), bSize, bOrd(i)) && hit(bOrd(o), bOrd(i)))
+      }.toSet
+    }
+    for (cap <- Seq(1, 3); tau <- Seq(0.5, 0.7)) {
+      val want = cappedTruth(tau, cap)
+      assert(advTruth(tau).subsetOf(want))
+      assert(survivors(advIdx, tau, maxBucket = cap) === want,
+        s"cap=$cap tau=$tau")
+    }
   }
 
   test("incrementalSetSimilarity: candidate stage scans ONLY (id, n, toks_prefix) from parquet") {
