@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
@@ -18,6 +21,13 @@ import scala.util.control.NonFatal
   * SPARK_GRAFT_PLAN_SUFFIX, SPARK_GRAFT_PROFILE_REPS (default 2; rep 2
   * — the first steady-state rep — is reported per stage, every rep's
   * wall time prints).
+  *
+  * A stage is named by its call site. A call site in a `.java` file is
+  * JDK thread-pool plumbing (a broadcast built on a `CompletableFuture`
+  * reports `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`);
+  * graft has only Scala sources, so such a stage is named instead by the
+  * description of the SQL execution that ran it: the call site of the
+  * graft pin or action that started it.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -61,12 +71,23 @@ object Profile {
         shufReadMB: Double, shufWriteMB: Double, inRec: Long,
         outRows: Long, spillMB: Double)
       val stages = ArrayBuffer.empty[St]
+      val stageExec = mutable.Map.empty[Int, Long] // stage -> SQL execution
+      val execDesc = mutable.Map.empty[Long, String]
       val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .foreach(id => js.stageIds.foreach(stageExec(_) = id.toLong))
+        override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+          case s: SparkListenerSQLExecutionStart =>
+            execDesc(s.executionId) = s.description
+          case _ => ()
+        }
         override def onStageCompleted(
             sc: SparkListenerStageCompleted): Unit = {
           val si = sc.stageInfo
           val m = si.taskMetrics
-          stages += St(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+          stages += St(si.stageId, si.name.takeWhile(_ != '\n'),
             si.completionTime.getOrElse(0L) -
               si.submissionTime.getOrElse(0L),
             si.numTasks,
@@ -97,8 +118,12 @@ object Profile {
       } finally detach()
       println(
         "  stageId     ms tasks  shufRdMB  shufWrMB     inRec    wrRec  spillMB  name")
+      def label(s: St): String =
+        (if (!s.nm.contains(".java:")) s.nm
+         else stageExec.get(s.id).flatMap(execDesc.get).getOrElse(s.nm))
+          .takeWhile(_ != '\n').take(60)
       stages.sortBy(-_.ms).take(25).foreach { s =>
-        println(f"  ${s.id}%7d ${s.ms}%6d ${s.tasks}%5d ${s.shufReadMB}%9.2f ${s.shufWriteMB}%9.2f ${s.inRec}%9d ${s.outRows}%8d ${s.spillMB}%8.1f  ${s.nm}")
+        println(f"  ${s.id}%7d ${s.ms}%6d ${s.tasks}%5d ${s.shufReadMB}%9.2f ${s.shufWriteMB}%9.2f ${s.inRec}%9d ${s.outRows}%8d ${s.spillMB}%8.1f  ${label(s)}")
       }
       stages.clear()
     }
