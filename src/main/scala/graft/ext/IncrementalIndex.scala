@@ -49,10 +49,12 @@ final case class IncrementalIndex private (
     store.appendInto(name, rowsOf(survivors))
 
   /** One call per crawl batch: dedup `batch` against the stored index
-    * (cross-leg candidates from capped bucket joins, greedy in-batch
-    * election — each leg's documented semantics), append the
-    * survivors' index rows, return the survivors with all batch
-    * columns.
+    * (each leg's documented candidate join against the index — capped
+    * LSH bucket joins for [[minhash]] and [[embedding]], the exact
+    * prefix-token equi-join for [[setSimilarity]], capped band-bucket
+    * joins for [[perceptual]] — plus its greedy in-batch election),
+    * append the survivors' index rows, return the survivors with all
+    * batch columns.
     *
     * The survivors are pinned (localCheckpoint) BEFORE the append:
     * the dedup plan reads the index, so a lazy plan evaluated after

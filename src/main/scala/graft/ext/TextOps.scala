@@ -117,6 +117,16 @@ object TextOps {
   def jaccard(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.arrayJaccard(a, b)
 
+  /** `jaccard(a, b) >= threshold` with the identical decision, for two
+    * distinct token arrays that share [[Dedup.hashOrdered]]'s
+    * `(xxhash64(t), t)` order: one merge that stops once the overlap
+    * can no longer reach the threshold
+    * ([[graft.functions.HashOrderedJaccardAtLeast]]). Arrays in any
+    * other order keep [[jaccard]]. */
+  def hashOrderedJaccardAtLeast(a: Column, b: Column,
+      threshold: Double): Column =
+    graft.functions.GraftFunctions.hashOrderedJaccardAtLeast(a, b, threshold)
+
   /** Higher-order-function form of [[jaccard]] — the executable
     * specification the native kernel is tested against. */
   def jaccardHof(a: Column, b: Column): Column = {

@@ -431,6 +431,13 @@ object GraftFunctions {
   def arrayJaccard(a: Column, b: Column): Column =
     Bridge.column(ArrayJaccard(Bridge.expression(a), Bridge.expression(b)))
 
+  /** Native early-terminating `jaccard(a, b) >= threshold` over two
+    * distinct hash-ordered arrays (see [[HashOrderedJaccardAtLeast]]). */
+  def hashOrderedJaccardAtLeast(a: Column, b: Column,
+      threshold: Double): Column =
+    Bridge.column(HashOrderedJaccardAtLeast(Bridge.expression(a),
+      Bridge.expression(b), threshold))
+
   /** Native Jaro–Winkler similarity between two strings (see
     * [[JaroWinkler]]). */
   def jaroWinkler(a: Column, b: Column): Column =

@@ -463,6 +463,81 @@ case class ArrayJaccard(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `jaccard(a, b) >= threshold` for two DISTINCT string arrays sorted
+  * in [[graft.ext.Dedup.hashOrdered]]'s universal `(xxhash64(t), t)`
+  * order — PPJoin's verify (Xiao et al., WWW 2008): one merge of the
+  * two sorted arrays that returns false as soon as the overlap can no
+  * longer reach `α = ⌈τ/(1+τ)·(n_a+n_b) − 1e-9⌉`, the overlap bound
+  * the candidate filters use, with the same down-guarded ceil. Each
+  * element is hashed once, when the merge reaches it (Spark's
+  * xxhash64, seed 42; a null element hashes to the seed and sorts
+  * before a string of equal hash, as in `sort_array`). A merge that runs to the end applies the same double
+  * test as `ArrayJaccard >= threshold`, and the guard keeps α at or
+  * below every overlap that test accepts, so the decisions are
+  * identical. Arrays outside that order or with repeats get
+  * undefined answers: use [[ArrayJaccard]]. */
+case class HashOrderedJaccardAtLeast(
+    left: Expression, right: Expression, threshold: Double)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def prettyName: String = "graft_hash_ordered_jaccard_at_least"
+
+  private val ratio = threshold / (1.0 + threshold)
+
+  private def hash(t: UTF8String): Long =
+    if (t == null) 42L
+    else org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      t.getBaseObject, t.getBaseOffset, t.numBytes, 42L)
+
+  def compute(a: ArrayData, b: ArrayData): Boolean = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val alpha = math.ceil(ratio * (na + nb) - 1e-9)
+    var i = 0
+    var j = 0
+    var inter = 0
+    var ta: UTF8String = if (na > 0) a.getUTF8String(0) else null
+    var tb: UTF8String = if (nb > 0) b.getUTF8String(0) else null
+    var ha = if (na > 0) hash(ta) else 0L
+    var hb = if (nb > 0) hash(tb) else 0L
+    while (i < na && j < nb) {
+      if (inter + math.min(na - i, nb - j) < alpha) return false
+      val c =
+        if (ha != hb) java.lang.Long.compare(ha, hb)
+        else if (ta == null) (if (tb == null) 0 else -1)
+        else if (tb == null) 1
+        else ta.compareTo(tb)
+      if (c <= 0) {
+        i += 1
+        if (i < na) { ta = a.getUTF8String(i); ha = hash(ta) }
+      }
+      if (c >= 0) {
+        j += 1
+        if (j < nb) { tb = b.getUTF8String(j); hb = hash(tb) }
+      }
+      if (c == 0) inter += 1
+    }
+    val union = na + nb - inter
+    (if (union == 0) 0.0 else inter.toDouble / union) >= threshold
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("jaccardAtLeastKernel", this,
+      classOf[HashOrderedJaccardAtLeast].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $self.compute($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): HashOrderedJaccardAtLeast =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Content-defined chunking (FastCDC-style gear hash) over a blob:
   * slices the byte stream at positions where a rolling gear hash hits a
   * boundary pattern, so chunk boundaries are a function of CONTENT, not

@@ -2136,8 +2136,10 @@ object Streaming {
     * hash order (a NULL keeper row carries zero-token docs through —
     * they match nothing and survive); ONE stateless stream-static LEFT
     * join on the prefix token carries the batch op's length +
-    * positional filters AND the exact one-pass
-    * [[graft.ext.TextOps.jaccard]] verify as RESIDUAL conditions; one watermark-bounded aggregation per
+    * positional filters AND the exact early-terminating merge verify
+    * ([[graft.ext.TextOps.hashOrderedJaccardAtLeast]]; both token
+    * arrays are in the universal hash order) as RESIDUAL conditions;
+    * one watermark-bounded aggregation per
     * document counts verified hits, and hit-free documents pass with
     * all their columns. In-stream repeats: exact-SET duplicates drop
     * via `dropDuplicatesWithinWatermark` on the canonical token-array
@@ -2219,8 +2221,8 @@ object Streaming {
         (least(col("__spos"), col("__ipos")) +
           least(col("__sn") - col("__spos"), col("__in") - col("__ipos"))) >=
           ceil(lit(tau) * (col("__sn") + col("__in")) - lit(1e-9)) &&
-        graft.ext.TextOps.jaccard(col("__stoks"), col("__itoks")) >=
-          threshold,
+        graft.ext.TextOps.hashOrderedJaccardAtLeast(col("__stoks"),
+          col("__itoks"), threshold),
       "left")
     joined
       .groupBy(cols.map(col): _*)

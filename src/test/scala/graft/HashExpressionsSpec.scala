@@ -393,6 +393,57 @@ class HashExpressionsSpec extends SparkSpec {
     assert(rows(2).getDouble(0) === 0.0)
   }
 
+  test("hash-ordered jaccard-at-least decides exactly like jaccard >= tau") {
+    // τ as p/q: pairs sharing p·k of q·k distinct tokens sit at Jaccard
+    // exactly τ (τ = 0.9 at k = 7 is where an unguarded ceil of the
+    // overlap floor overshoots), and one fewer shared token sits just
+    // below it; the rest split between the two sides in three ways
+    val taus = Seq((0.3, 3, 10), (0.5, 1, 2), (2.0 / 3, 2, 3), (0.7, 7, 10),
+      (0.9, 9, 10), (1.0, 1, 1))
+    def pair(shared: Int, aOnly: Int, bOnly: Int) = {
+      val s = (0 until shared).map(i => s"s$i")
+      (s ++ (0 until aOnly).map(i => s"a$i"),
+        s ++ (0 until bOnly).map(i => s"b$i"))
+    }
+    val boundary = for {
+      (_, p, q) <- taus; k <- 1 to 8; rest = (q - p) * k
+      x <- Seq(0, rest / 2, rest); d <- Seq(0, 1)
+    } yield pair(p * k - d, x, rest - x + d)
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 30).map(i => s"w$i")
+    val random = (1 to 200).map(_ => (
+      (0 until rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.size))),
+      (0 until rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.size)))))
+    val edges = Seq(
+      (Seq.empty[String], Seq.empty[String]), (Seq("x"), Seq.empty[String]),
+      (Seq.empty[String], Seq("x")), (Seq("x"), Seq("x")), (Seq("x"), Seq("y")),
+      (Seq("a", "b", "c"), Seq("d", "e")), (vocab, vocab.reverse))
+    val df = (boundary ++ random ++ edges).zipWithIndex
+      .map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
+      .select($"i",
+        Dedup.hashOrdered(array_distinct($"a")).as("a"),
+        Dedup.hashOrdered(array_distinct($"b")).as("b"))
+      .cache()
+    for ((tau, _, _) <- taus) {
+      val rows = df.select($"i",
+        TextOps.hashOrderedJaccardAtLeast($"a", $"b", tau).as("k"),
+        (TextOps.jaccard($"a", $"b") >= tau).as("j")).collect()
+      val diffs = rows.filter(r => r.getBoolean(1) != r.getBoolean(2))
+      assert(diffs.isEmpty,
+        s"tau=$tau: rows ${diffs.map(_.getInt(0)).mkString(",")} differ")
+      assert(rows.count(_.getBoolean(1)) > 0, s"tau=$tau: no positives")
+    }
+    val at = df.filter($"i" >= boundary.size + random.size)
+      .orderBy("i").select(
+        TextOps.hashOrderedJaccardAtLeast($"a", $"b", 1.0),
+        TextOps.hashOrderedJaccardAtLeast($"a", $"b", 0.3))
+      .as[(Boolean, Boolean)].collect().toSeq
+    // empty pairs never qualify; identical sets do at every τ
+    assert(at === Seq((false, false), (false, false), (false, false),
+      (true, true), (false, false), (false, false), (true, true)))
+    df.unpersist()
+  }
+
   test("kernels skip null array elements instead of failing") {
     // the public function surface accepts arbitrary array<string>; null
     // elements must contribute nothing, exactly like the HOF forms
@@ -409,6 +460,20 @@ class HashExpressionsSpec extends SparkSpec {
     assert(r.getSeq[Long](0) === r.getSeq[Long](1))
     assert(r.getLong(2) === r.getLong(3))
     assert(!r.isNullAt(4))
+    // the hash-ordered verify sorts a null element where `sort_array`
+    // does and decides as the jaccard kernel does, null against null
+    // included (the null-bearing pair sits at Jaccard exactly 2/3)
+    val ordered = df.select(
+      Dedup.hashOrdered($"withNull").as("wn"),
+      Dedup.hashOrdered($"clean").as("c"))
+    for (tau <- Seq(0.5, 2.0 / 3, 0.7, 1.0); (a, b) <- Seq(
+        ($"wn", $"c"), ($"c", $"wn"), ($"wn", $"wn"))) {
+      val d = ordered.select(
+        GraftFunctions.hashOrderedJaccardAtLeast(a, b, tau),
+        GraftFunctions.arrayJaccard(a, b) >= tau).head()
+      assert(!d.isNullAt(0) && d.getBoolean(0) === d.getBoolean(1),
+        s"tau=$tau: $a vs $b")
+    }
   }
 
   test("shingle-free doc yields the sentinel signature") {
